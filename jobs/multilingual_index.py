@@ -21,6 +21,7 @@ Run:  spark-submit --py-files terrier_spark.zip jobs/multilingual_index.py \\
 
 from __future__ import annotations
 
+import shutil
 import sys
 import tempfile
 
@@ -108,6 +109,9 @@ def main() -> None:
         subset = from_documents_table(
             by_lang.filter(F.col("lang_guess") == lang).drop("lang_guess")
         )
+        # a re-run rewrites its indexes (build_index would resume one
+        # and refuse it if the routed subset changed)
+        shutil.rmtree(f"{out_dir}/idx_{lang}", ignore_errors=True)
         stores[lang] = build_index(
             spark, subset, f"{out_dir}/idx_{lang}", cfg, bucket_span=256
         )

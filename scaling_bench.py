@@ -142,21 +142,8 @@ def worker(cpus: int) -> None:
             .drop("rep")
         )
 
-    builder_kind = os.environ.get("SCALING_BUILDER", "resumable")
-    if builder_kind == "resumable":
-        # The segmented builder is the scale architecture (per-partition
-        # map-side block building + atomic segment commits, no global
-        # posting shuffle — SURVEY.md §3.2); the monolithic builder's
-        # per-(doc,term) shuffle is shuffle-bandwidth-bound on one box.
-        from terrier_spark.index.resumable import build_index_resumable
-
-        def run_build(c, path):
-            return build_index_resumable(spark, c, path, IndexConfig(),
-                                         bucket_span=4096)
-    else:
-        def run_build(c, path):
-            return build_index(spark, c, path, IndexConfig(),
-                               bucket_span=4096)
+    def run_build(c, path):
+        return build_index(spark, c, path, IndexConfig(), bucket_span=4096)
 
     out = tempfile.mkdtemp(prefix=f"scaling_{cpus}_")
     try:
@@ -192,7 +179,6 @@ def worker(cpus: int) -> None:
             + json.dumps(
                 {
                     "cpus": cpus,
-                    "builder": builder_kind,
                     "n_docs": n_docs,
                     "build_sec": round(build_sec, 3),
                     "build_docs_per_sec": round(n_docs / build_sec, 2),
@@ -506,7 +492,6 @@ def main() -> None:
         "levels": LEVELS,
         "meas_reps": meas_reps,
         "mode": os.environ.get("SCALING_MODE", "executors"),
-        "builder": os.environ.get("SCALING_BUILDER", "resumable"),
         "cpu_pinned": PIN_CPUS,
         "pin_factor": float(os.environ.get("SCALING_PIN_FACTOR", "1.5")),
     }
@@ -520,7 +505,6 @@ def main() -> None:
         and sorted(LEVELS) == [4, 16]
         and meas_reps >= 3
         and protocol["mode"] == "executors"
-        and protocol["builder"] == "resumable"
         and PIN_CPUS
     )
     report = {

@@ -44,7 +44,6 @@ def cmd_index(args) -> None:
         from_warc_files,
         from_xml_files,
     )
-    from terrier_spark.index.resumable import build_index_resumable
 
     spark = _spark()
     fmt = args.format
@@ -78,8 +77,7 @@ def cmd_index(args) -> None:
         positions=args.positions,
         field_cols=field_cols,
     )
-    builder = build_index_resumable if args.resumable else build_index
-    store = builder(spark, corpus, args.out, cfg)
+    store = build_index(spark, corpus, args.out, cfg)
     print(json.dumps(store.manifest["metrics"]))
 
 
@@ -235,11 +233,11 @@ def main(argv=None) -> None:
 
     p = sub.add_parser("index")
     p.add_argument("--input", required=True)
-    p.add_argument("--out", required=True)
+    p.add_argument("--out", required=True,
+                   help="index directory; a build already there is resumed")
     p.add_argument("--format", default="parquet",
                    choices=["parquet", "trec", "trecweb", "warc",
                             "twitter", "xml"])
-    p.add_argument("--resumable", action="store_true")
     p.add_argument("--positions", action="store_true")
     p.add_argument("--no-stem", action="store_true")
     p.add_argument("--stemmer", default=None,

@@ -104,9 +104,6 @@ class IndexConfig:
     # Posting-block chunk size, as the reference's chunked integer codec
     # (org/terrier/structures/integer/IntegerCodecCompressionConfiguration.java:63,145).
     block_size: int = 1024
-    # Number of salt buckets for the two-phase (term, salt) pre-aggregation
-    # that absorbs hot-term skew before the final merge by term.
-    shuffle_partitions: int = 32
     # Assign docids in (sort_docids_by) order instead of ingest order --
     # the Spark-native analog of the fork's docid-reordering experiments
     # (org/terrier/applications/InvertedIndexReordering.java:114-140).

@@ -221,15 +221,8 @@ def gate_index(spark: SparkSession, sf_dir: str) -> IndexStore:
     # format-versioned cache path: a stale index from an older block
     # layout must never be reused across rounds; the corpus fingerprint
     # in the path does the same for regenerated testdata
-    out = _cache_dir("terrier_spark_gate_v4", sf_dir)
-    marker = os.path.join(out, "manifest.json")
-    rebuild = True
-    if os.path.exists(marker):
-        import json as _json
-
-        with open(marker) as fh:
-            rebuild = not _json.load(fh).get("positions", False)
-    if rebuild:
+    out = _cache_dir("terrier_spark_gate_v5", sf_dir)
+    if not os.path.exists(os.path.join(out, "manifest.json")):
         corpus = load_documents_corpus(spark, sf_dir)
         cfg = IndexConfig(pipeline=SQL_SAFE_PIPELINE, positions=True)
         build_index(spark, corpus, out, cfg, bucket_span=1024)
@@ -429,8 +422,8 @@ def gate_field_index(spark: SparkSession, sf_dir: str) -> IndexStore:
     store = _FIELD_INDEX_CACHE.get(key)
     if store is not None:
         return store
-    # v2: per-field lexicon/block stats
-    out = _cache_dir("terrier_spark_gate_field_v2", sf_dir)
+    # v3: segmented layout with per-field lexicon/block stats
+    out = _cache_dir("terrier_spark_gate_field_v3", sf_dir)
     if not os.path.exists(os.path.join(out, "manifest.json")):
         corpus = load_documents_corpus(spark, sf_dir)
         cfg = IndexConfig(pipeline=SQL_SAFE_PIPELINE,
@@ -790,7 +783,7 @@ def q_merged_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _cache_key(sf_dir)
     store = _MERGED_CACHE.get(key)
     if store is None:
-        root = _cache_dir("terrier_spark_gate_merged_v1", sf_dir)
+        root = _cache_dir("terrier_spark_gate_merged_v2", sf_dir)
         out = os.path.join(root, "merged")
         if not os.path.exists(os.path.join(out, "manifest.json")):
             corpus = load_documents_corpus(spark, sf_dir)

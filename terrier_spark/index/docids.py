@@ -48,8 +48,12 @@ def assign_docids(df: DataFrame, order_by: Optional[Sequence[str]] = None,
     if order_by:
         # range partitioning + local sort gives a deterministic global order
         df = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-    tagged = _tag_partitions(df)
-    tagged.persist()
+    # pin ONE tagging for the counts job and the join (the input's row
+    # order need not survive recomputation).  A local checkpoint, not a
+    # persist: a cached plan would be served to any later read of the same
+    # files, stale once a rebuilt segment replaces one at the same path;
+    # checkpoint blocks are freed with the DataFrame.
+    tagged = _tag_partitions(df).localCheckpoint(eager=False)
     counts = (
         tagged.groupBy("__pid").agg(F.count("*").alias("n"))
         .orderBy("__pid").collect()

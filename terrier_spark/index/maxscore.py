@@ -83,7 +83,7 @@ def with_max_scores(blocks: DataFrame, lexicon: DataFrame,
     filled for `models`.  One decode pass (mapInPandas, Arrow-batched);
     the lexicon join rides the same term key the blocks are already
     organised by."""
-    from terrier_spark.index.builder import BLOCK_SCHEMA
+    from terrier_spark.index.builder import BLOCK_COLUMNS, BLOCK_SCHEMA
 
     models = list(models)
     if not models:
@@ -98,7 +98,7 @@ def with_max_scores(blocks: DataFrame, lexicon: DataFrame,
         raise ValueError("field models registered on a field-less index")
     ones = [1.0] * nf
 
-    out_cols = [c.split()[0].strip() for c in BLOCK_SCHEMA.split(",")]
+    out_cols = BLOCK_COLUMNS
 
     # Shape note (measured): this is deliberately a per-BLOCK loop with
     # numpy kernels over the ~1024 postings inside, NOT one concatenated

@@ -3,10 +3,11 @@
 The reference's StructureMerger/LexiconMerger (org/terrier/structures/
 merging/StructureMerger.java:84-176,533-637): docids of the second index
 are offset by the first's document count; lexicons merge by term.  Here
-the posting blocks of the second index are re-based by a vectorized
-decode/offset/encode pass (blocks are independent, so this is
-embarrassingly parallel), bucket ids shift by the same offset, and the
-lexicon/stats re-aggregate from block metadata.
+the first index's segments are copied verbatim and each segment of the
+second is rewritten with its docids shifted (one Spark task per segment:
+segments are independent, so this is embarrassingly parallel).  The
+merged lexicon, statistics and manifest come from the same finalize pass
+as a build.
 
 Used for distributed-retrieval sharding: build shard indexes
 independently, merge pairwise (or query them as one via the segmented
@@ -14,206 +15,105 @@ store, which is the MultiIndex path — SURVEY.md §2.8)."""
 
 from __future__ import annotations
 
-import json
 import os
-from typing import Iterator
+import shutil
+import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from terrier_spark.compression.vbyte import (
-    decode_scoring_block,
-    encode_scoring_block,
+from terrier_spark.compression.vbyte import decode_scoring_block, vbyte_decode
+from terrier_spark.config import IndexConfig
+from terrier_spark.index.builder import (
+    BLOCK_COLUMNS,
+    _finalize,
+    _write_segment,
+    encode_blocks,
 )
-from terrier_spark.index.docids import assign_docids
 from terrier_spark.index.store import IndexStore
 
 
-def _rebase_blocks(offset: int, span: int):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from terrier_spark.compression.vbyte import (
-            encode_positions,
-            vbyte_decode,
-            vbyte_encode,
-        )
+def _rebase_blocks(blocks: pd.DataFrame, offset: int, span: int,
+                   block_size: int, with_pos: bool, nf: int) -> pd.DataFrame:
+    """Shift every block's docids by `offset`.  offset is rarely a
+    multiple of span, so a rebased block can STRADDLE a bucket boundary.
+    Buckets must partition docids identically across terms (block-max
+    pruning sums per-term bounds per bucket and drops whole buckets —
+    query/search.py::_prune_buckets), so each block goes back through the
+    block encoder, which cuts it at every new boundary."""
+    rows = []
+    for row in blocks.itertuples():
+        ids, tfs, dls = decode_scoring_block(row.block)
+        pos = vbyte_decode(row.pos, int(tfs.sum())) if with_pos else None
+        ftf = fln = None
+        if nf:
+            ftf = vbyte_decode(row.ftf, ids.size * nf).reshape(-1, nf)
+            fln = vbyte_decode(row.fln, ids.size * nf).reshape(-1, nf)
+        # max_score comes back null: the merged collection's stats differ,
+        # so source-index unit maxima are invalid bounds here
+        rows += encode_blocks(row.term, ids + offset, tfs, dls, block_size,
+                              span, pos=pos, ftf=ftf, fln=fln)
+    return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
 
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples():
-                ids, tfs, dls = decode_scoring_block(row.block)
-                ids = ids + offset
-                # offset is rarely a multiple of span, so a rebased block
-                # can STRADDLE a bucket boundary.  Buckets must partition
-                # docids identically across terms (block-max pruning sums
-                # per-term bounds per bucket and drops whole buckets —
-                # query/search.py::_prune_buckets), so straddling blocks
-                # are split at every new boundary of (ids + offset).
-                buckets = ids // span
-                cuts = np.concatenate(
-                    ([0], np.flatnonzero(np.diff(buckets)) + 1, [ids.size])
-                )
-                pos_b = getattr(row, "pos", None)
-                ftf_b = getattr(row, "ftf", None)
-                fln_b = getattr(row, "fln", None)
-                split = cuts.size > 2
-                if split:
-                    if pos_b is not None:
-                        pos_flat = vbyte_decode(pos_b, int(tfs.sum()))
-                        pos_off = np.concatenate(
-                            ([0], np.cumsum(tfs))
-                        ).astype(np.int64)
-                    if ftf_b is not None:
-                        ftf_flat = vbyte_decode(ftf_b)
-                        fln_flat = vbyte_decode(fln_b)
-                        nf = ftf_flat.size // ids.size
-                for s, e in zip(cuts[:-1], cuts[1:]):
-                    if split:
-                        blk = encode_scoring_block(ids[s:e], tfs[s:e],
-                                                   dls[s:e])
-                        n = int(e - s)
-                        max_tf = int(tfs[s:e].max())
-                        min_dl = int(dls[s:e].min())
-                        tf_sum = int(tfs[s:e].sum())
-                        p = (
-                            encode_positions(pos_flat[pos_off[s]:pos_off[e]])
-                            if pos_b is not None else None
-                        )
-                        ft = fl = fsum = fmax = fmin = None
-                        if ftf_b is not None:
-                            ft = vbyte_encode(ftf_flat[s * nf:e * nf])
-                            fl = vbyte_encode(fln_flat[s * nf:e * nf])
-                            fm = ftf_flat[s * nf:e * nf].reshape(-1, nf)
-                            lm = fln_flat[s * nf:e * nf].reshape(-1, nf)
-                            fsum = fm.sum(axis=0).astype(np.int64).tolist()
-                            fmax = fm.max(axis=0).astype(np.int64).tolist()
-                            fmin = lm.min(axis=0).astype(np.int64).tolist()
-                    else:
-                        # positions/field vectors (and the per-field block
-                        # metadata) are docid-independent: pass through
-                        blk = encode_scoring_block(ids, tfs, dls)
-                        n, max_tf = row.n, row.max_tf
-                        min_dl, tf_sum = row.min_dl, row.tf_sum
-                        p, ft, fl = pos_b, ftf_b, fln_b
-                        fsum = getattr(row, "ftf_sum", None)
-                        fmax = getattr(row, "max_ftf_f", None)
-                        fmin = getattr(row, "min_fln_f", None)
-                    rows.append(
-                        (
-                            row.term, int(buckets[s]), row.block_id, n,
-                            int(ids[s]), int(ids[e - 1]), max_tf, min_dl,
-                            tf_sum, blk, p, ft, fl, fsum, fmax, fmin,
-                            # max_score: nulled — the merged collection's
-                            # stats differ, so source-index unit maxima
-                            # are invalid bounds here
-                            None,
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["term", "bucket", "block_id", "n",
-                             "first_docid", "last_docid", "max_tf",
-                             "min_dl", "tf_sum", "block", "pos", "ftf",
-                             "fln", "ftf_sum", "max_ftf_f", "min_fln_f",
-                             "max_score"],
-                )
 
-    return run
+def _rebase_segment(src: str, dst: str, offset: int, span: int,
+                    block_size: int, with_pos: bool, nf: int) -> None:
+    import pyarrow.parquet as pq
+
+    docs, meta, blocks = (
+        pq.read_table(os.path.join(src, f"{t}.parquet")).to_pandas()
+        for t in ("docs", "meta", "postings")
+    )
+    docs["docid"] += np.int64(offset)
+    meta["docid"] += np.int64(offset)
+    _write_segment(dst, docs, meta, _rebase_blocks(
+        blocks, offset, span, block_size, with_pos, nf))
 
 
 def merge_indexes(spark: SparkSession, a: IndexStore, b: IndexStore,
                   out_dir: str) -> IndexStore:
-    """Merge index b after index a (docids of b += a.num_docs)."""
-    os.makedirs(out_dir, exist_ok=True)
-    offset = a.stats["num_docs"]
-    span_a, span_b = a.bucket_span, b.bucket_span
-    if span_a != span_b:
-        raise ValueError("bucket_span mismatch between indexes")
+    """Merge index b after index a (docids of b += a.num_docs) into a new
+    segmented index under out_dir."""
+    t0 = time.time()
+    if os.path.realpath(out_dir) in {os.path.realpath(a.path),
+                                     os.path.realpath(b.path)}:
+        raise ValueError(f"{out_dir}: merge output must be a new directory")
+    for key in ("bucket_span", "positions", "fields"):
+        if a.manifest.get(key) != b.manifest.get(key):
+            raise ValueError(f"{key} mismatch between indexes")
+    fields = a.manifest.get("fields")
+    cfg = IndexConfig(
+        pipeline=a.pipeline_config(),
+        block_size=a.block_size,
+        positions=bool(a.manifest.get("positions")),
+        field_cols=tuple(map(tuple, fields)) if fields else None,
+    )
+    span, offset = a.bucket_span, a.stats["num_docs"]
 
-    # meta (docs is its projection in the merged layout)
-    meta_cols = ["docid", "docno", "repo", "path", "commit", "lang",
-                 "sha256", "doclen"]
-    meta_a = a.meta(spark)
-    if "doclen" not in meta_a.columns:
-        meta_a = meta_a.join(a.docs(spark).select("docid", "doclen"), "docid")
-    meta_b = b.meta(spark)
-    if "doclen" not in meta_b.columns:
-        meta_b = meta_b.join(b.docs(spark).select("docid", "doclen"), "docid")
-    meta = meta_a.select(meta_cols).unionByName(
-        meta_b.select(meta_cols).withColumn(
-            "docid", F.col("docid") + F.lit(offset)
+    # a previous index under out_dir must not leak into the merge
+    for stale in ("segments", "postings_compact", "manifest.json"):
+        path = os.path.join(out_dir, stale)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.exists(path):
+            os.remove(path)
+    seg_root = os.path.join(out_dir, "segments")
+    os.makedirs(seg_root)
+    segs_a, segs_b = a.segment_names(), b.segment_names()
+    for i, seg in enumerate(segs_a):
+        shutil.copytree(os.path.join(a.path, "segments", seg),
+                        os.path.join(seg_root, f"seg_{i:05d}"))
+    tasks = [
+        (os.path.join(b.path, "segments", seg),
+         os.path.join(seg_root, f"seg_{len(segs_a) + i:05d}"))
+        for i, seg in enumerate(segs_b)
+    ]
+    if tasks:
+        nf = len(fields) if fields else 0
+        spark.sparkContext.parallelize(tasks, len(tasks)).foreach(
+            lambda t: _rebase_segment(t[0], t[1], offset, span,
+                                      cfg.block_size, cfg.positions, nf)
         )
-    )
-    meta.write.mode("overwrite").parquet(f"{out_dir}/meta")
-
-    # postings: a verbatim, b re-based
-    from terrier_spark.index.builder import BLOCK_SCHEMA
-
-    def _with_field_meta(df: DataFrame) -> DataFrame:
-        # indexes written before the per-field block metadata existed
-        # union cleanly with new ones (columns null); max_score is ALWAYS
-        # nulled — the merged collection's stats invalidate stored unit
-        # maxima (recompute via compact_postings on the merged index)
-        for c in ("ftf_sum", "max_ftf_f", "min_fln_f"):
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("array<long>"))
-        if "max_score" in df.columns:
-            df = df.drop("max_score")
-        return df.withColumn("max_score", F.lit(None).cast("array<double>"))
-
-    blocks_a = _with_field_meta(a.postings(spark))
-    blocks_b = _with_field_meta(b.postings(spark)).mapInPandas(
-        _rebase_blocks(offset, span_b), schema=BLOCK_SCHEMA
-    )
-    (
-        blocks_a.unionByName(blocks_b)
-        .repartitionByRange(16, "term", "bucket")
-        .sortWithinPartitions("term", "bucket", "block_id")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/postings")
-    )
-
-    # lexicon + stats from merged block metadata
-    blocks = spark.read.parquet(f"{out_dir}/postings")
-    lexicon = blocks.groupBy("term").agg(
-        F.sum("n").cast("long").alias("nt"),
-        F.sum("tf_sum").cast("long").alias("tf"),
-        F.max("max_tf").alias("max_tf"),
-        F.min("min_dl").alias("min_dl"),
-    )
-    lexicon = assign_docids(lexicon, order_by=["term"], id_col="__rank")
-    lexicon = lexicon.withColumn(
-        "termid", F.col("__rank").cast("long")
-    ).drop("__rank")
-    lexicon.repartitionByRange(4, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/lexicon")
-
-    sa, sb = a.stats, b.stats
-    num_docs = sa["num_docs"] + sb["num_docs"]
-    num_tokens = sa["num_tokens"] + sb["num_tokens"]
-    lrow = spark.read.parquet(f"{out_dir}/lexicon").agg(
-        F.count("*").alias("nt"), F.sum("nt").alias("np")
-    ).collect()[0]
-    manifest = {
-        "version": 2,
-        "layout": "monolithic",
-        "bucket_span": span_a,
-        "block_size": a.manifest["block_size"],
-        "positions": bool(a.manifest.get("positions"))
-        and bool(b.manifest.get("positions")),
-        "pipeline": a.manifest["pipeline"],
-        "stats": {
-            "num_docs": num_docs,
-            "num_terms": int(lrow["nt"] or 0),
-            "num_tokens": num_tokens,
-            "num_pointers": int(lrow["np"] or 0),
-            "avg_doclen": num_tokens / num_docs if num_docs else 0.0,
-        },
-        "metrics": {"merged_from": [a.path, b.path]},
-    }
-    with open(f"{out_dir}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=2)
+    _finalize(spark, out_dir, cfg, span, t0, [])
     return IndexStore(out_dir)

@@ -1,543 +1,89 @@
-"""Resumable, checkpointed index build with per-partition lineage.
+"""Segment compaction, and the historical name of the builder.
 
-The Spark analog of the reference's MapReduce indexing protocol
-(org/terrier/structures/indexing/singlepass/hadoop/
-Hadoop_BasicSinglePassIndexer.java):
+`build_index_resumable` is `builder.build_index` — the one segmented,
+resumable build (plan pass, one checkpointed segment per input
+partition, finalize).
 
-  plan pass    per-partition doc counts -> cumulative docid offsets,
-               persisted to checkpoints/plan.json (the "side files",
-               :430-448,560-592) — docids are fully determined BEFORE any
-               segment builds, so segments can build/resume in any order;
-  build pass   one mapInPandas job; each task builds its partition's
-               segment (docs/meta/postings parquet written via pyarrow,
-               committed by atomic rename + _SUCCESS marker) and yields a
-               checkpoint row (partition_id, n_docs, docid_offset,
-               sha256_agg, status).  A task whose segment is already
-               committed yields status='cached' WITHOUT reprocessing —
-               that is the resume path;
-  finalize     global lexicon/stats aggregation over all segments (the
-               RunsMerger/LexiconBuilder merge, :188-268) + manifest.
-
-Per-partition posting blocks are smaller than a monolithic build's (each
-segment chunks its own (term, bucket) groups); `compact_postings`
-re-groups and re-encodes them — the analog of the reference's geometric
-merge policy (realtime/incremental/IncrementalMergeGeometric.java) and
+Per-partition posting blocks are smaller than full ones (each segment
+chunks its own (term, bucket) groups); `compact_postings` re-groups and
+re-encodes them — the analog of the reference's geometric merge policy
+(realtime/incremental/IncrementalMergeGeometric.java) and
 InvertedIndexRecompresser (applications/InvertedIndexRecompresser.java:101-237).
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
-import time
 import uuid
-from dataclasses import asdict
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from terrier_spark.compression.vbyte import encode_scoring_block
 from terrier_spark.config import IndexConfig
-from terrier_spark.index.builder import DEFAULT_BUCKET_SPAN
-from terrier_spark.index.store import IndexStore
-from terrier_spark.text.pipeline import make_pipeline
-
-CHECKPOINT_SCHEMA = (
-    "partition_id int, n_docs long, docid_offset long, sha256_agg string, "
-    "status string"
+from terrier_spark.index.builder import (
+    BLOCK_COLUMNS,
+    BLOCK_SCHEMA,
+    build_index,
+    encode_blocks,
 )
+from terrier_spark.index.store import IndexStore
+
+build_index_resumable = build_index
 
 
-def _plan(spark: SparkSession, corpus: DataFrame, out_dir: str) -> dict[int, tuple[int, int]]:
-    """{pid: (n_docs, docid_offset)}; cached in checkpoints/plan.json."""
-    ckpt_dir = os.path.join(out_dir, "checkpoints")
-    os.makedirs(ckpt_dir, exist_ok=True)
-    plan_path = os.path.join(ckpt_dir, "plan.json")
-    if os.path.exists(plan_path):
-        with open(plan_path) as fh:
-            return {int(k): tuple(v) for k, v in json.load(fh).items()}
-    counts = (
-        corpus.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .count()
-        .orderBy("__pid")
-        .collect()
+def _compact_group(block_size: int, bucket_span: int, with_pos: bool,
+                   nf: int):
+    """applyInPandas body over one (term, bucket) group of block rows:
+    decode every block, concatenate in docid order and re-cut with the
+    one block encoder."""
+    from terrier_spark.compression.vbyte import (
+        decode_scoring_block,
+        vbyte_decode,
     )
-    plan, acc = {}, 0
-    for row in counts:
-        plan[int(row["__pid"])] = (int(row["count"]), acc)
-        acc += int(row["count"])
-    tmp = plan_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({str(k): list(v) for k, v in plan.items()}, fh)
-    os.replace(tmp, plan_path)
-    return plan
 
-
-def _write_segment(seg_dir: str, docs: pd.DataFrame, meta: pd.DataFrame,
-                   blocks: pd.DataFrame) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = f"{seg_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(docs, preserve_index=False),
-                   os.path.join(tmp, "docs.parquet"))
-    pq.write_table(pa.Table.from_pandas(meta, preserve_index=False),
-                   os.path.join(tmp, "meta.parquet"))
-    schema = pa.schema([
-        ("term", pa.string()), ("bucket", pa.int64()),
-        ("block_id", pa.int32()), ("n", pa.int32()),
-        ("first_docid", pa.int64()), ("last_docid", pa.int64()),
-        ("max_tf", pa.int32()), ("min_dl", pa.int32()),
-        ("tf_sum", pa.int64()), ("block", pa.binary()),
-        ("pos", pa.binary()), ("ftf", pa.binary()), ("fln", pa.binary()),
-        ("ftf_sum", pa.list_(pa.int64())),
-        ("max_ftf_f", pa.list_(pa.int64())),
-        ("min_fln_f", pa.list_(pa.int64())),
-        ("max_score", pa.list_(pa.float64())),
-    ])
-    pq.write_table(
-        pa.Table.from_pandas(blocks, schema=schema, preserve_index=False),
-        os.path.join(tmp, "postings.parquet"),
-    )
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    if os.path.exists(seg_dir):
-        shutil.rmtree(seg_dir)
-    os.replace(tmp, seg_dir)
-
-
-def _build_partition(pdfs, offset: int, cfg: IndexConfig,
-                     bucket_span: int) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame, str]:
-    """Tokenize + index one partition's rows.
-
-    Streams the batch iterator (never materializes the partition) and
-    accumulates postings in compact typed arrays per term — the memory
-    footprint is ~16 bytes/posting + 4 bytes/position, NOT Python tuple
-    objects, so 32 concurrent quarter-million-doc tasks fit comfortably
-    (the reference's MemoryPostings plays the same role with int[] runs,
-    structures/indexing/singlepass/MemoryPostings.java:44-155)."""
-    from array import array
-
-    pipe = make_pipeline(cfg.pipeline)
-    fields = cfg.field_cols  # ordered (field_name, column) pairs or None
-    nf = len(fields) if fields else 0
-    doc_rows, meta_rows = [], []
-    # lineage hash covers (docno, content) so a membership drift that
-    # swaps equal-content rows with different docnos is still caught by
-    # the resume verification (_hash_partition must mirror this exactly)
-    # term -> [docids('q'), tfs('i'), dls('i'), flat positions('i'),
-    #          flat per-posting field tfs('i', n*nf)]
-    acc: dict[str, list] = {}
-    # per-LOCAL-doc field lengths (fln vectors are emitted per posting at
-    # encode time, indexed by docid - offset)
-    flens_rows: list = []
-    docid = offset
-    sha_acc = hashlib.sha256()
-    want_pos = cfg.positions
-    for pdf in pdfs:
-        for row in pdf.itertuples():
-            content = row.content or ""
-            sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-            sha_acc.update(str(row.docno).encode("utf-8"))
-            sha_acc.update(sha.encode())
-            if fields:
-                # per-field token streams, concatenated in field order for
-                # positions/doclen (FieldScore.java:54-86 semantics, same
-                # as the monolithic builder's fused pass)
-                streams = [
-                    pipe.terms(getattr(row, col) or "") for _, col in fields
-                ]
-                terms = [t for s in streams for t in s]
-                ftfmap: dict[str, list[int]] = {}
-                for fi, s in enumerate(streams):
-                    for t in s:
-                        v = ftfmap.get(t)
-                        if v is None:
-                            v = ftfmap[t] = [0] * nf
-                        v[fi] += 1
-                flens_rows.append([len(s) for s in streams])
-            else:
-                terms = pipe.terms(content)
-                ftfmap = None
-            dl = len(terms)
-            doc_rows.append((docid, row.docno, dl))
-            meta_rows.append(
-                (docid, row.docno, row.repo, row.path, row.commit,
-                 row.lang, sha, dl)
-                + ((flens_rows[-1],) if fields else ())
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("first_docid")
+        dec = [decode_scoring_block(b) for b in pdf["block"]]
+        ids, tfs, dls = (np.concatenate(col) for col in zip(*dec))
+        if ids.size > 1 and not (np.diff(ids) > 0).all():
+            raise ValueError(
+                f"term {pdf['term'].iloc[0]!r} bucket "
+                f"{pdf['bucket'].iloc[0]}: blocks overlap in docid range"
             )
-            posmap: dict[str, list[int]] = {}
-            for pos, t in enumerate(terms):
-                posmap.setdefault(t, []).append(pos)
-            for term, plist in posmap.items():
-                a = acc.get(term)
-                if a is None:
-                    a = acc[term] = [array("q"), array("i"), array("i"),
-                                     array("i"), array("i")]
-                a[0].append(docid)
-                a[1].append(len(plist))
-                a[2].append(dl)
-                if want_pos:
-                    a[3].extend(plist)
-                if fields:
-                    a[4].extend(ftfmap[term])
-            docid += 1
-    docs = pd.DataFrame(doc_rows, columns=["docid", "docno", "doclen"])
-    meta_cols = ["docid", "docno", "repo", "path", "commit", "lang",
-                 "sha256", "doclen"] + (["field_lens"] if fields else [])
-    meta = pd.DataFrame(meta_rows, columns=meta_cols)
-    flens_arr = (
-        np.asarray(flens_rows, dtype=np.int64).reshape(-1, nf)
-        if fields else None
-    )
-    from terrier_spark.compression.vbyte import encode_positions, vbyte_encode
-
-    block_rows = []
-    for term in sorted(acc):
-        a = acc[term]
-        ids = np.frombuffer(a[0], dtype=np.int64)
-        tfs = np.frombuffer(a[1], dtype=np.int32).astype(np.int64)
-        dls = np.frombuffer(a[2], dtype=np.int32).astype(np.int64)
-        pos_flat = (
-            np.frombuffer(a[3], dtype=np.int32).astype(np.int64)
-            if want_pos else None
-        )
-        pos_offsets = np.concatenate(([0], np.cumsum(tfs))) if want_pos else None
-        ftf_flat = (
-            np.frombuffer(a[4], dtype=np.int32).astype(np.uint64)
-            if fields else None
-        )
-        buckets = ids // bucket_span
-        # split at bucket boundaries (ids ascending within a partition),
-        # then into block_size chunks within each bucket
-        b_starts = np.concatenate(
-            ([0], np.flatnonzero(np.diff(buckets)) + 1, [ids.size])
-        )
-        for s, e in zip(b_starts[:-1], b_starts[1:]):
-            bucket = int(buckets[s])
-            for b0 in range(s, e, cfg.block_size):
-                b1 = min(b0 + cfg.block_size, e)
-                pos_bytes = ftf_bytes = fln_bytes = None
-                ftf_sum = max_ftf_f = min_fln_f = None
-                if want_pos:
-                    pos_bytes = encode_positions(
-                        pos_flat[pos_offsets[b0]: pos_offsets[b1]]
-                    )
-                if fields:
-                    ftf_mat = ftf_flat[b0 * nf: b1 * nf].reshape(-1, nf)
-                    fln_mat = flens_arr[ids[b0:b1] - offset].reshape(-1, nf)
-                    ftf_bytes = vbyte_encode(ftf_mat.reshape(-1))
-                    fln_bytes = vbyte_encode(
-                        fln_mat.reshape(-1).astype(np.uint64)
-                    )
-                    ftf_sum = ftf_mat.sum(axis=0).astype(np.int64).tolist()
-                    max_ftf_f = ftf_mat.max(axis=0).astype(np.int64).tolist()
-                    min_fln_f = fln_mat.min(axis=0).astype(np.int64).tolist()
-                block_rows.append(
-                    (
-                        term, bucket, (b0 - s) // cfg.block_size, b1 - b0,
-                        int(ids[b0]), int(ids[b1 - 1]),
-                        int(tfs[b0:b1].max()), int(dls[b0:b1].min()),
-                        int(tfs[b0:b1].sum()),
-                        encode_scoring_block(ids[b0:b1], tfs[b0:b1],
-                                             dls[b0:b1]),
-                        pos_bytes, ftf_bytes, fln_bytes,
-                        ftf_sum, max_ftf_f, min_fln_f, None,
-                    )
-                )
-    blocks = pd.DataFrame(
-        block_rows,
-        columns=["term", "bucket", "block_id", "n", "first_docid",
-                 "last_docid", "max_tf", "min_dl", "tf_sum", "block", "pos",
-                 "ftf", "fln", "ftf_sum", "max_ftf_f", "min_fln_f",
-                 "max_score"],
-    )
-    return docs, meta, blocks, sha_acc.hexdigest()
-
-
-def _hash_partition(pdfs) -> tuple[int, str]:
-    """Stream a partition's (docno, content) rows through the SAME
-    lineage hash _build_partition computes — no tokenization, so
-    verifying a cached segment costs hashing only."""
-    n = 0
-    sha_acc = hashlib.sha256()
-    for pdf in pdfs:
-        for row in pdf.itertuples():
-            content = row.content or ""
-            sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-            sha_acc.update(str(row.docno).encode("utf-8"))
-            sha_acc.update(sha.encode())
-            n += 1
-    return n, sha_acc.hexdigest()
-
-
-def build_index_resumable(
-    spark: SparkSession,
-    corpus: DataFrame,
-    out_dir: str,
-    cfg: Optional[IndexConfig] = None,
-    bucket_span: int = DEFAULT_BUCKET_SPAN,
-    fail_partitions: Optional[set[int]] = None,
-    skip_partitions: Optional[set[int]] = None,
-    verify_cached: Optional[bool] = None,
-) -> IndexStore:
-    """Segmented, resumable build.
-
-    `verify_cached` re-hashes the input of partitions whose segments are
-    already committed and compares against the recorded lineage
-    (sha256_agg over (docno, content)): a mismatch means the partition's
-    MEMBERSHIP drifted since the original run — the stale segment is
-    deleted and rebuilt in a second pass over the same (persisted, hence
-    pinned) partitioning, so cached and rebuilt segments can never mix
-    inconsistent docid assignments.  Default None = auto: ON when
-    cfg.sort_docids_by is set, because repartitionByRange samples its
-    boundaries per application and is NOT stable across restarts; OFF
-    for plain file-scan inputs, whose partitioning is deterministic.
-
-    Test hooks: `fail_partitions` raises inside those partitions before
-    their segment commit (exercises the crash path); `skip_partitions`
-    deterministically leaves those segments unbuilt (a reproducible
-    "killed after partial completion" state for resume tests)."""
-    cfg = cfg or IndexConfig()
-    if verify_cached is None:
-        verify_cached = bool(cfg.sort_docids_by)
-    t0 = time.time()
-    os.makedirs(out_dir, exist_ok=True)
-    if cfg.sort_docids_by:
-        # docid-reordering-for-compression (InvertedIndexReordering.java:
-        # 114-140), now on the segmented path too; the persist below pins
-        # the range partitioning across the plan and build jobs, and the
-        # plan-count guard in run() turns any cross-run partitioning
-        # drift into a loud error instead of corrupt docids
-        corpus = corpus.repartitionByRange(
-            *cfg.sort_docids_by
-        ).sortWithinPartitions(*cfg.sort_docids_by)
-    # pin partitioning across the plan job and the build job (see
-    # builder.build_index for rationale)
-    corpus = corpus.persist()
-    plan = _plan(spark, corpus, out_dir)
-    seg_root = os.path.join(out_dir, "segments")
-    os.makedirs(seg_root, exist_ok=True)
-    fail = fail_partitions or set()
-    skip = skip_partitions or set()
-    block_cfg = cfg
-    # prior lineage for cached-segment verification (driver-side read,
-    # broadcast via the closure — one small dict)
-    prior_lineage: dict[int, str] = {}
-    ckpt_path_pre = os.path.join(out_dir, "checkpoints", "partitions.json")
-    if verify_cached and os.path.exists(ckpt_path_pre):
-        with open(ckpt_path_pre) as fh:
-            prior_lineage = {
-                int(r["partition_id"]): r.get("sha256_agg") or ""
-                for r in json.load(fh)
-            }
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n, offset = plan.get(pid, (0, 0))
-        seg_dir = os.path.join(seg_root, f"seg_{pid:05d}")
-        if os.path.exists(os.path.join(seg_dir, "_SUCCESS")):
-            if verify_cached and prior_lineage.get(pid):
-                n_seen, sha_seen = _hash_partition(batches)
-                if sha_seen != prior_lineage[pid] or n_seen != n:
-                    # membership drifted since the committed run: drop
-                    # the stale segment; the driver reruns the build
-                    # pass (same pinned partitioning) to rebuild it
-                    shutil.rmtree(seg_dir, ignore_errors=True)
-                    yield pd.DataFrame(
-                        [(pid, n, offset, sha_seen, "stale")],
-                        columns=["partition_id", "n_docs", "docid_offset",
-                                 "sha256_agg", "status"],
-                    )
-                    return
-            yield pd.DataFrame(
-                [(pid, n, offset, "", "cached")],
-                columns=["partition_id", "n_docs", "docid_offset",
-                         "sha256_agg", "status"],
+        pos = ftf = fln = None
+        if with_pos:
+            pos = np.concatenate([
+                vbyte_decode(p, int(t.sum()))
+                for p, (_, t, _) in zip(pdf["pos"], dec)
+            ])
+        if nf:
+            ftf, fln = (
+                np.concatenate([
+                    vbyte_decode(v, i.size * nf).reshape(-1, nf)
+                    for v, (i, _, _) in zip(pdf[col], dec)
+                ])
+                for col in ("ftf", "fln")
             )
-            return
-        if pid in skip:
-            yield pd.DataFrame(
-                [(pid, n, offset, "", "skipped")],
-                columns=["partition_id", "n_docs", "docid_offset",
-                         "sha256_agg", "status"],
-            )
-            return
-        if pid in fail:
-            raise RuntimeError(f"injected failure in partition {pid}")
-        docs, meta, blocks, sha_agg = _build_partition(
-            batches, offset, block_cfg, bucket_span
-        )
-        if len(docs) != n:
-            raise RuntimeError(
-                f"partition {pid}: saw {len(docs)} docs, plan says {n} — "
-                "input changed since plan; delete checkpoints to rebuild"
-            )
-        _write_segment(seg_dir, docs, meta, blocks)
-        yield pd.DataFrame(
-            [(pid, n, offset, sha_agg, "built")],
-            columns=["partition_id", "n_docs", "docid_offset",
-                     "sha256_agg", "status"],
-        )
+        rows = encode_blocks(pdf["term"].iloc[0], ids, tfs, dls, block_size,
+                             bucket_span, pos=pos, ftf=ftf, fln=fln)
+        return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
 
-    ckpt = corpus.mapInPandas(run, schema=CHECKPOINT_SCHEMA).toPandas()
-    stale = ckpt[ckpt["status"] == "stale"]
-    if len(stale):
-        # the verification pass evicted drifted segments; rebuild them
-        # with a second pass over the SAME persisted partitioning (the
-        # evicted pids no longer have _SUCCESS, so they take the build
-        # path; everything else is served cached)
-        import logging
-
-        logging.getLogger("terrier_spark.resumable").warning(
-            "resume verification: %d cached segment(s) did not match the "
-            "resumed input (partition membership drifted) — rebuilding %s",
-            len(stale), sorted(stale["partition_id"].tolist()),
-        )
-        ckpt = corpus.mapInPandas(run, schema=CHECKPOINT_SCHEMA).toPandas()
-    ckpt = ckpt.sort_values("partition_id")
-    ckpt_path = os.path.join(out_dir, "checkpoints", "partitions.json")
-    prior = {}
-    if os.path.exists(ckpt_path):
-        with open(ckpt_path) as fh:
-            prior = {int(r["partition_id"]): r for r in json.load(fh)}
-    rows = []
-    for r in ckpt.to_dict("records"):
-        if r["status"] == "cached" and int(r["partition_id"]) in prior:
-            # keep the original lineage (sha256_agg) but record that this
-            # run served the partition from its committed segment
-            kept = dict(prior[int(r["partition_id"])])
-            kept["status"] = "cached"
-            rows.append(kept)
-        else:
-            rows.append(r)
-    with open(ckpt_path + ".tmp", "w") as fh:
-        json.dump(rows, fh, indent=1, default=str)
-    os.replace(ckpt_path + ".tmp", ckpt_path)
-
-    _finalize(spark, out_dir, cfg, bucket_span, t0, rows)
-    return IndexStore(out_dir)
-
-
-def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
-              bucket_span: int, t0: float, ckpt_rows: list) -> None:
-    seg_glob = os.path.join(out_dir, "segments", "seg_*")
-    postings = spark.read.parquet(f"{seg_glob}/postings.parquet")
-    # lexicon: merge per-segment partials (the RunsMerger pass) straight
-    # from block METADATA — nt from posting counts, collection tf from
-    # per-block tf sums; no block decode needed
-    from terrier_spark.index.builder import lexicon_from_blocks
-
-    lex = lexicon_from_blocks(
-        postings, len(cfg.field_cols) if cfg.field_cols else 0
-    )
-    from terrier_spark.index.docids import assign_docids
-
-    lex = assign_docids(lex, order_by=["term"], id_col="__rank")
-    lex = lex.withColumn("termid", F.col("__rank").cast("long")).drop("__rank")
-    lex.repartitionByRange(4, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/lexicon")
-
-    docs = spark.read.parquet(f"{seg_glob}/docs.parquet")
-    drow = docs.agg(
-        F.count("*").alias("nd"), F.sum("doclen").alias("ntok")
-    ).collect()[0]
-    lrow = spark.read.parquet(f"{out_dir}/lexicon").agg(
-        F.count("*").alias("nt"), F.sum("nt").alias("np")
-    ).collect()[0]
-    num_docs, num_tokens = int(drow["nd"] or 0), int(drow["ntok"] or 0)
-    stats = {
-        "num_docs": num_docs,
-        "num_terms": int(lrow["nt"] or 0),
-        "num_tokens": num_tokens,
-        "num_pointers": int(lrow["np"] or 0),
-        "avg_doclen": (num_tokens / num_docs) if num_docs else 0.0,
-    }
-    if cfg.field_cols:
-        nf = len(cfg.field_cols)
-        meta_read = spark.read.parquet(f"{seg_glob}/meta.parquet")
-        frow = meta_read.select(
-            *[
-                F.sum(F.element_at("field_lens", i + 1)).alias(f"f{i}")
-                for i in range(nf)
-            ]
-        ).collect()[0]
-        stats["fields"] = [name for name, _ in cfg.field_cols]
-        stats["field_tokens"] = [int(frow[f"f{i}"] or 0) for i in range(nf)]
-        stats["avg_field_lens"] = [
-            (stats["field_tokens"][i] / num_docs) if num_docs else 0.0
-            for i in range(nf)
-        ]
-    elapsed = time.time() - t0
-    built = sum(1 for r in ckpt_rows if r["status"] == "built")
-    # a prior compaction stays valid: its coverage list tells postings()
-    # which segments the compact file already folds in, so refreshing the
-    # lexicon/stats must not silently revert the layout to "segmented"
-    prior_manifest = {}
-    manifest_path = os.path.join(out_dir, "manifest.json")
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as fh:
-            prior_manifest = json.load(fh)
-    layout = (
-        "segmented_compacted"
-        if prior_manifest.get("layout") == "segmented_compacted"
-        else "segmented"
-    )
-    manifest = {
-        "version": 1,
-        "layout": layout,
-        "bucket_span": bucket_span,
-        "block_size": cfg.block_size,
-        "positions": cfg.positions,
-        "fields": (
-            [list(fc) for fc in cfg.field_cols] if cfg.field_cols else None
-        ),
-        "pipeline": asdict(cfg.pipeline) | {
-            "stopwords": sorted(cfg.pipeline.stopwords or ())
-        },
-        "stats": stats,
-        "metrics": {
-            "build_seconds": round(elapsed, 3),
-            "docs_per_sec": round(num_docs / elapsed, 2) if elapsed else None,
-            "num_docs": num_docs,
-            "partitions_built": built,
-            "partitions_cached": len(ckpt_rows) - built,
-        },
-    }
-    if layout == "segmented_compacted":
-        manifest["compacted_segments"] = (
-            prior_manifest.get("compacted_segments") or []
-        )
-        # keep the maxscore registration; the stats snapshot it carries
-        # is the compaction-time one, so if this finalize changed the
-        # collection stats (an appended batch), IndexStore.maxscore_index
-        # sees the drift and stops consuming the stale bounds until the
-        # next compaction refreshes them
-        for k in ("maxscore_models", "maxscore_stats"):
-            if k in prior_manifest:
-                manifest[k] = prior_manifest[k]
-    with open(f"{out_dir}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=2)
+    return encode
 
 
 def compact_postings(spark: SparkSession, store: IndexStore,
                      cfg: Optional[IndexConfig] = None,
                      maxscore_models: Optional[tuple] = None) -> IndexStore:
-    """Re-group and re-encode posting blocks across segments into the
-    monolithic layout (geometric-merge / recompress analog).  Produces
-    optimal 1024-posting blocks; positional (pos) and per-field (ftf/fln)
-    payloads are decoded, re-sliced to the new block boundaries and
-    re-encoded alongside the scoring blocks.
+    """Re-group and re-encode posting blocks across segments into one
+    compact posting table, `postings_compact` (geometric-merge /
+    recompress analog).  Produces full `block_size`-posting blocks;
+    positional (pos) and per-field (ftf/fln) payloads are decoded,
+    re-sliced to the new block boundaries and re-encoded alongside the
+    scoring blocks.
 
     Also fills the exact per-block max-score metadata (index/maxscore.py
     — the fork's Maxscore pre-scan paid here instead of per query) for
@@ -547,12 +93,10 @@ def compact_postings(spark: SparkSession, store: IndexStore,
     (`compacted_segments`), so a later compaction reads the previous
     compact file PLUS only the segments appended since, and
     IndexStore.postings() keeps newer segments visible in between."""
-    from terrier_spark.compression.vbyte import (
-        decode_positions,
-        decode_scoring_block,
-        vbyte_decode,
+    from terrier_spark.index.maxscore import (
+        resolve_maxscore_models,
+        with_max_scores,
     )
-    from terrier_spark.index.builder import BLOCK_SCHEMA, _encode_group
 
     cfg = cfg or IndexConfig()
     out_dir = store.path
@@ -563,80 +107,27 @@ def compact_postings(spark: SparkSession, store: IndexStore,
 
     seg_root = os.path.join(out_dir, "segments")
     compact_path = os.path.join(out_dir, "postings_compact")
-    all_segs = (
-        sorted(
-            d for d in os.listdir(seg_root)
-            if os.path.exists(os.path.join(seg_root, d, "_SUCCESS"))
-        )
-        if os.path.isdir(seg_root) else []
-    )
+    all_segs = store.segment_names()
     covered = set(manifest.get("compacted_segments") or [])
     new_segs = [s for s in all_segs if s not in covered]
-
-    if all_segs:
-        srcs = []
-        if covered and os.path.isdir(compact_path):
-            # nothing appended since the last compaction AND the maxscore
-            # metadata is already registered -> nothing to do (a legacy
-            # compacted index without it falls through and gets upgraded)
-            if not new_segs and manifest.get("maxscore_models") is not None:
-                return store
-            srcs.append(spark.read.parquet(compact_path))
-        if new_segs:
-            srcs.append(spark.read.parquet(
-                *[f"{seg_root}/{s}/postings.parquet" for s in new_segs]
-            ))
-        src = srcs[0]
-        for extra in srcs[1:]:
-            # a compact file written before the per-field block metadata
-            # existed unions cleanly with new segments (columns null)
-            src = src.unionByName(extra, allowMissingColumns=True)
-    else:
-        src = store.postings(spark)  # monolithic recompress path
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, dls = decode_scoring_block(row.block)
-                out = {
-                    "term": row.term, "bucket": row.bucket,
-                    "docid": ids, "tf": tfs, "doclen": dls,
-                }
-                if with_pos:
-                    out["positions"] = decode_positions(row.pos, tfs)
-                if nf:
-                    out["ftf"] = list(
-                        vbyte_decode(row.ftf, ids.size * nf)
-                        .reshape(ids.size, nf).astype(np.int64)
-                    )
-                    out["field_lens"] = list(
-                        vbyte_decode(row.fln, ids.size * nf)
-                        .reshape(ids.size, nf).astype(np.int64)
-                    )
-                outs.append(pd.DataFrame(out))
-            if outs:
-                yield pd.concat(outs)
-
-    schema = "term string, bucket long, docid long, tf int, doclen long"
-    if with_pos:
-        schema += ", positions array<long>"
-    if nf:
-        schema += ", ftf array<long>, field_lens array<long>"
-    rows = src.mapInPandas(explode, schema=schema)
-    blocks = rows.groupBy("term", "bucket").applyInPandas(
-        _encode_group(cfg.block_size, with_positions=with_pos,
-                      with_fields=bool(nf)),
+    paths = [f"{seg_root}/{s}/postings.parquet" for s in new_segs]
+    if covered and os.path.isdir(compact_path):
+        # nothing appended since the last compaction AND the maxscore
+        # metadata is already registered -> nothing to do (a compacted
+        # index without it falls through and gets upgraded)
+        if not new_segs and manifest.get("maxscore_models") is not None:
+            return store
+        paths.append(compact_path)
+    src = spark.read.parquet(*paths).select(
+        "term", "bucket", "first_docid", "block", "pos", "ftf", "fln"
+    )
+    blocks = src.groupBy("term", "bucket").applyInPandas(
+        _compact_group(cfg.block_size, store.bucket_span, with_pos, nf),
         schema=BLOCK_SCHEMA,
     )
     # exact per-block max-score metadata (generic Maxscore, paid here):
     # one extra decode pass over the freshly-encoded blocks, joined with
     # the lexicon for per-term (nt, F) statistics
-    from terrier_spark.index.maxscore import (
-        resolve_maxscore_models,
-        with_max_scores,
-    )
-
     ms_models = resolve_maxscore_models(maxscore_models, nf)
     if ms_models:
         blocks = with_max_scores(
@@ -645,8 +136,9 @@ def compact_postings(spark: SparkSession, store: IndexStore,
         )
     # write beside the live compact file, swap in atomically after the job
     tmp = f"{compact_path}.tmp-{uuid.uuid4().hex[:8]}"
+    n_out = int(spark.conf.get("spark.sql.shuffle.partitions"))
     (
-        blocks.repartitionByRange(cfg.shuffle_partitions, "term", "bucket")
+        blocks.repartitionByRange(n_out, "term", "bucket")
         .sortWithinPartitions("term", "bucket", "block_id")
         .write.mode("overwrite").parquet(tmp)
     )

@@ -6,12 +6,23 @@ reference's .properties file plays, org/terrier/structures/
 CollectionStatistics.java:40-43):
 
     out_dir/
-      docs/        docid, docno, doclen
-      meta/        docid, docno, repo, path, commit, lang, sha256
-      lexicon/     term, termid, nt, tf, max_tf, min_dl
-      postings/    term, bucket, block_id, n, first_docid, last_docid,
-                   max_tf, min_dl, block(binary)
-      manifest.json
+      segments/seg_*/     one committed segment per build partition,
+                          merge input or stream micro-batch partition:
+        docs.parquet      docid, docno, doclen
+        meta.parquet      docid, docno, repo, path, commit, lang, sha256,
+                          doclen[, field_lens]
+        postings.parquet  term, bucket, block_id, n, first_docid,
+                          last_docid, max_tf, min_dl, tf_sum, block,
+                          pos, ftf, fln, per-field block metadata,
+                          max_score (builder.BLOCK_SCHEMA)
+        _SUCCESS
+      postings_compact/   optional: the postings of the segments listed in
+                          manifest["compacted_segments"], re-blocked by
+                          resumable.compact_postings
+      lexicon/            term, termid, nt, tf, max_tf, min_dl
+                          [, field_tf, max_ftf_f, min_fln_f]
+      checkpoints/        build plan and per-partition lineage
+      manifest.json       layout "segmented" or "segmented_compacted"
 """
 
 from __future__ import annotations
@@ -22,11 +33,25 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+LAYOUTS = ("segmented", "segmented_compacted")
+
+
 class IndexStore:
     def __init__(self, path: str):
         self.path = path
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
+        if self.layout not in LAYOUTS:
+            raise ValueError(
+                f"{path}: index layout {self.layout!r} is not supported "
+                f"(expected one of {LAYOUTS}); rebuild it with build_index"
+            )
+        if (self.layout == "segmented_compacted"
+                and "compacted_segments" not in self.manifest):
+            raise ValueError(
+                f"{path}: a segmented_compacted manifest must list its "
+                "compacted_segments; rebuild it with build_index"
+            )
         # driver-side lexicon cache: repeated searches against the same
         # store skip the lexicon-scan job (the reference keeps its lexicon
         # memory-mapped for the same reason); only populated when small
@@ -76,25 +101,26 @@ class IndexStore:
 
     @property
     def layout(self) -> str:
-        # "monolithic" (builder.build_index) or "segmented"/
-        # "segmented_compacted" (resumable.build_index_resumable): segment
-        # tables are read as one multi-path parquet dataset — no copy step
-        return self.manifest.get("layout", "monolithic")
+        return self.manifest.get("layout")
 
-    def docs(self, spark: SparkSession) -> DataFrame:
-        if self.layout.startswith("segmented"):
-            return spark.read.parquet(f"{self.path}/segments/seg_*/docs.parquet")
-        if os.path.isdir(f"{self.path}/docs"):  # layout version 1
-            return spark.read.parquet(f"{self.path}/docs")
-        # v2 monolithic layout: docs is a projection of meta (one write)
-        return spark.read.parquet(f"{self.path}/meta").select(
-            "docid", "docno", "doclen"
+    def _segment_glob(self, table: str) -> str:
+        return f"{self.path}/segments/seg_*/{table}.parquet"
+
+    def segment_names(self) -> list[str]:
+        """Committed segments (those with a _SUCCESS marker), sorted."""
+        seg_root = os.path.join(self.path, "segments")
+        if not os.path.isdir(seg_root):
+            return []
+        return sorted(
+            d for d in os.listdir(seg_root)
+            if os.path.exists(os.path.join(seg_root, d, "_SUCCESS"))
         )
 
+    def docs(self, spark: SparkSession) -> DataFrame:
+        return spark.read.parquet(self._segment_glob("docs"))
+
     def meta(self, spark: SparkSession) -> DataFrame:
-        if self.layout.startswith("segmented"):
-            return spark.read.parquet(f"{self.path}/segments/seg_*/meta.parquet")
-        return spark.read.parquet(f"{self.path}/meta")
+        return spark.read.parquet(self._segment_glob("meta"))
 
     def lexicon(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(f"{self.path}/lexicon")
@@ -161,35 +187,20 @@ class IndexStore:
         return (mtime, *sorted(os.listdir(seg_root)))
 
     def _postings_uncached(self, spark: SparkSession) -> DataFrame:
-        if self.layout == "segmented_compacted":
-            df = spark.read.parquet(f"{self.path}/postings_compact")
-            # segments appended AFTER the recorded compaction are not in
-            # the compact file yet — union them so queries between
-            # compactions see a consistent index
-            recorded = self.manifest.get("compacted_segments")
-            if recorded is None:
-                # legacy manifest without coverage info: the compact file
-                # was written over all segments existing at the time
-                return df
-            covered = set(recorded)
-            seg_root = os.path.join(self.path, "segments")
-            extra = (
-                [
-                    os.path.join(seg_root, d, "postings.parquet")
-                    for d in sorted(os.listdir(seg_root))
-                    if d not in covered
-                    and os.path.exists(os.path.join(seg_root, d, "_SUCCESS"))
-                ]
-                if os.path.isdir(seg_root) else []
-            )
-            if extra:
-                df = df.unionByName(spark.read.parquet(*extra))
-            return df
         if self.layout == "segmented":
-            return spark.read.parquet(
-                f"{self.path}/segments/seg_*/postings.parquet"
-            )
-        return spark.read.parquet(f"{self.path}/postings")
+            return spark.read.parquet(self._segment_glob("postings"))
+        df = spark.read.parquet(f"{self.path}/postings_compact")
+        # segments appended AFTER the recorded compaction are not in the
+        # compact file yet — union them so queries between compactions
+        # see a consistent index
+        covered = set(self.manifest["compacted_segments"])
+        extra = [
+            os.path.join(self.path, "segments", d, "postings.parquet")
+            for d in self.segment_names() if d not in covered
+        ]
+        if extra:
+            df = df.unionByName(spark.read.parquet(*extra))
+        return df
 
     def pipeline_config(self):
         from terrier_spark.config import PipelineConfig

@@ -5,7 +5,7 @@ micro-batches (SURVEY.md §2.8):
 
   MemoryIndex.indexDocument (realtime/memory/MemoryIndex.java:75-289)
       -> each micro-batch is indexed as new SEGMENTS appended to the
-         segmented store (same layout as the resumable builder);
+         segmented store (same layout as build_index);
   IncrementalIndex flush policies (realtime/incremental/
   IncrementalIndex.java:56-232: flushdocs/flushmem/flushtime)
       -> the micro-batch boundary IS the flush; trigger intervals and
@@ -34,10 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrier_spark.config import IndexConfig
-from terrier_spark.index.builder import DEFAULT_BUCKET_SPAN
-from terrier_spark.index.resumable import (
+from terrier_spark.index.builder import (
     CHECKPOINT_SCHEMA,
+    DEFAULT_BUCKET_SPAN,
     _build_partition,
+    _checkpoint_row,
     _finalize,
     _write_segment,
 )
@@ -125,11 +126,7 @@ class IncrementalIndexer:
                 seg_root, f"seg_b{batch_id:06d}_{pid:05d}"
             )
             if os.path.exists(os.path.join(seg_dir, "_SUCCESS")):
-                yield pd.DataFrame(
-                    [(pid, n, offset, "", "cached")],
-                    columns=["partition_id", "n_docs", "docid_offset",
-                             "sha256_agg", "status"],
-                )
+                yield _checkpoint_row(pid, n, offset, "", "cached")
                 return
             docs, meta, blocks, sha = _build_partition(
                 batches, offset, cfg, span
@@ -140,11 +137,7 @@ class IncrementalIndexer:
                 )
             if n > 0:
                 _write_segment(seg_dir, docs, meta, blocks)
-            yield pd.DataFrame(
-                [(pid, n, offset, sha, "built")],
-                columns=["partition_id", "n_docs", "docid_offset",
-                         "sha256_agg", "status"],
-            )
+            yield _checkpoint_row(pid, n, offset, sha, "built")
 
         ckpt = batch_df.mapInPandas(run, schema=CHECKPOINT_SCHEMA).toPandas()
         segs = [

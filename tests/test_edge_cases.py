@@ -60,6 +60,69 @@ def test_huge_token_and_long_doc(spark, tmp_path):
     assert len(res) == 1
 
 
+def test_empty_input_partitions_build_and_search(spark, tmp_path):
+    """3 docs over 8 input partitions: the empty partitions commit empty
+    segments with the same column types, so the seg_* reads work."""
+    rows = [("r", f"{n}.py", "c", "py", f"alpha {n} beta")
+            for n in ("one", "two", "three")]
+    corpus = _corpus(spark, rows).repartition(8)
+    store = build_index(spark, corpus, str(tmp_path / "e8"), bucket_span=16)
+    assert store.stats["num_docs"] == 3
+    assert len(store.segment_names()) == 8
+    assert sorted(r["doclen"] for r in store.docs(spark).collect()) == [3, 3, 3]
+    res = search(spark, store, [("q", "alpha")],
+                 QueryConfig(k=5, ignore_low_idf=False)).collect()
+    assert sorted(r["docid"] for r in res) == [0, 1, 2]
+
+
+def test_segment_schemas_identical(spark, tmp_path):
+    """Every segment's docs, meta and postings files carry one schema,
+    empty segments included, for plain and field indexes."""
+    import pyarrow.parquet as pq
+
+    rows = [("r", "a.py", "c", "py", "alpha beta"),
+            ("r", "b.py", "c", "py", "gamma")]
+    for name, cfg in (("plain", IndexConfig()),
+                      ("fields", IndexConfig(
+                          field_cols=(("path", "path"),
+                                      ("content", "content")),
+                          positions=True))):
+        out = tmp_path / name
+        store = build_index(spark, _corpus(spark, rows).repartition(4),
+                            str(out), cfg, bucket_span=16)
+        segs = store.segment_names()
+        assert len(segs) == 4
+        for table in ("docs", "meta", "postings"):
+            schemas = {
+                pq.read_schema(out / "segments" / s / f"{table}.parquet")
+                .remove_metadata().to_string()
+                for s in segs
+            }
+            assert len(schemas) == 1, (name, table, schemas)
+
+
+def test_monolithic_layout_rejected(tmp_path):
+    import json
+
+    from terrier_spark.index.store import IndexStore
+
+    path = tmp_path / "old"
+    path.mkdir()
+    (path / "manifest.json").write_text(
+        json.dumps({"layout": "monolithic", "stats": {}})
+    )
+    with pytest.raises(ValueError, match=str(path)):
+        IndexStore(str(path))
+    (path / "manifest.json").write_text(json.dumps({"stats": {}}))
+    with pytest.raises(ValueError, match="layout None"):
+        IndexStore(str(path))
+    (path / "manifest.json").write_text(
+        json.dumps({"layout": "segmented_compacted", "stats": {}})
+    )
+    with pytest.raises(ValueError, match="compacted_segments"):
+        IndexStore(str(path))
+
+
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(

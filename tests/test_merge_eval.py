@@ -111,6 +111,48 @@ def test_merge_bucket_invariant_and_pruning(spark, tmp_path):
     assert [r["docid"] for r in pruned] == [d for d, _ in exp]
 
 
+def test_merge_field_index_bm25f(spark, tmp_path):
+    """A merged field index keeps its field metadata (meta.field_lens,
+    per-field lexicon stats, stats.fields): BM25F over it ranks like the
+    whole-corpus field index and the field oracle."""
+    from terrier_spark.oracle import OracleFieldIndex
+
+    corpus = synth_source_corpus(spark, n_docs=200)
+    pdf = corpus.toPandas()
+    cfg = IndexConfig(field_cols=(("path", "path"), ("content", "content")))
+    a = build_index(spark, spark.createDataFrame(pdf.iloc[:120]),
+                    str(tmp_path / "fa"), cfg, bucket_span=64)
+    b = build_index(spark, spark.createDataFrame(pdf.iloc[120:]),
+                    str(tmp_path / "fb"), cfg, bucket_span=64)
+    with pytest.raises(ValueError, match="mismatch"):
+        merge_indexes(spark, a, build_index(
+            spark, spark.createDataFrame(pdf.iloc[120:]),
+            str(tmp_path / "plain_b"), IndexConfig(), bucket_span=64,
+        ), str(tmp_path / "bad"))
+    with pytest.raises(ValueError, match="new directory"):
+        merge_indexes(spark, a, b, a.path)
+    merged = merge_indexes(spark, a, b, str(tmp_path / "fm"))
+    whole = build_index(spark, corpus, str(tmp_path / "fw"), cfg,
+                        bucket_span=64)
+    assert merged.stats == whole.stats
+    assert merged.stats["fields"] == ["path", "content"]
+
+    oracle = OracleFieldIndex(list(zip(pdf["path"], pdf["content"])),
+                              cfg.pipeline)
+    qcfg = QueryConfig(k=20, model="BM25F", ignore_low_idf=False)
+    q = [("q", "py sym1 src")]
+    got = {
+        name: search(spark, st, q, qcfg).orderBy("rank").toPandas()
+        for name, st in (("merged", merged), ("whole", whole))
+    }
+    exp = oracle.search_bm25f(q[0][1], k=20)
+    assert exp
+    for res in got.values():
+        assert list(res["docid"]) == [d for d, _ in exp]
+        for g, (_, sc) in zip(res["score"], exp):
+            assert g == pytest.approx(sc, abs=1e-6)
+
+
 def test_trec_run_format(spark, tmp_path):
     corpus = synth_source_corpus(spark, n_docs=100)
     store = build_index(spark, corpus, str(tmp_path / "t"), bucket_span=64)

@@ -1,6 +1,6 @@
 """Resumable build: checkpoint/lineage correctness, resume-after-failure
-equivalence (FIXTURES.md §7), segment compaction, equality with the
-monolithic builder."""
+equivalence (FIXTURES.md §7), segment compaction, index content equal to
+the pure-Python oracle."""
 
 import json
 import os
@@ -12,6 +12,7 @@ from terrier_spark.config import IndexConfig, QueryConfig
 from terrier_spark.index.builder import build_index
 from terrier_spark.index.corpus import synth_source_corpus
 from terrier_spark.index.resumable import build_index_resumable, compact_postings
+from terrier_spark.oracle import OracleIndex
 from terrier_spark.query.search import search
 
 
@@ -47,17 +48,34 @@ def corpus(spark):
     return synth_source_corpus(spark, n_docs=300).repartition(6).cache()
 
 
-def test_resumable_matches_monolithic(spark, corpus, tmp_path):
-    """Same corpus partitioning -> same docids -> identical index content
-    from both builders."""
+def test_resumable_matches_oracle(spark, tmp_path):
+    """build_index_resumable is build_index, and the index it writes
+    holds exactly the oracle's docs, lexicon and postings (docids in
+    ingest order); compaction keeps that content."""
+    assert build_index_resumable is build_index
     c = synth_source_corpus(spark, n_docs=300)
-    mono = build_index(spark, c, str(tmp_path / "mono"), bucket_span=128)
+    pdf = c.toPandas()
     seg = build_index_resumable(
         spark, c, str(tmp_path / "seg"), bucket_span=128
     )
-    assert seg.stats == mono.stats
-    sm, ss = table_snapshot(spark, mono), table_snapshot(spark, seg)
-    assert sm == ss
+    oracle = OracleIndex(pdf["content"].tolist(), IndexConfig().pipeline)
+    docs, meta, lex, post = table_snapshot(spark, seg)
+    assert docs == [
+        (i, d, oracle.doclen[i]) for i, d in enumerate(pdf["docno"])
+    ]
+    assert [m[:2] for m in meta] == [d[:2] for d in docs]
+    terms = sorted(oracle.postings)
+    assert lex == [
+        (t, i, oracle.nt(t), oracle.tf_collection(t))
+        for i, t in enumerate(terms)
+    ]
+    assert post == {
+        (t, d): (tf, oracle.doclen[d])
+        for t in terms for d, tf in oracle.postings[t].items()
+    }
+    assert seg.stats["num_tokens"] == oracle.num_tokens
+    compacted = compact_postings(spark, seg)
+    assert table_snapshot(spark, compacted) == (docs, meta, lex, post)
 
 
 def test_checkpoints_lineage(spark, corpus, tmp_path):
@@ -119,6 +137,43 @@ def test_crash_path_resumes(spark, corpus, tmp_path):
         )
     resumed = build_index_resumable(spark, corpus, crashed, bucket_span=128)
     assert table_snapshot(spark, resumed) == table_snapshot(spark, full)
+
+
+def test_rebuild_into_same_dir(spark, corpus, tmp_path):
+    """A build into a directory that holds another build must not serve
+    that build's segments: other settings or doc counts raise, changed
+    rows are rebuilt, and an index build_index did not plan is refused.
+    The build leaves an uncached corpus uncached."""
+    out = str(tmp_path / "twice")
+    build_index_resumable(spark, corpus, out, bucket_span=128)
+    for cfg, span in ((IndexConfig(positions=True), 128),
+                      (IndexConfig(), 64)):
+        with pytest.raises(ValueError, match="other settings"):
+            build_index_resumable(spark, corpus, out, cfg, bucket_span=span)
+    first = corpus.first()["docno"]
+    with pytest.raises(ValueError, match="other input"):
+        build_index_resumable(spark, corpus.filter(F.col("docno") != first),
+                              out, bucket_span=128)
+
+    edited = corpus.withColumn(
+        "content",
+        F.when(F.col("docno") == first, F.concat("content", F.lit(" zzedit")))
+        .otherwise(F.col("content")),
+    )
+    assert not edited.is_cached
+    resumed = build_index_resumable(spark, edited, out, bucket_span=128)
+    assert not edited.is_cached
+    with open(os.path.join(out, "checkpoints", "partitions.json")) as fh:
+        statuses = sorted(r["status"] for r in json.load(fh))
+    assert statuses == ["built"] + ["cached"] * 5
+    fresh = build_index_resumable(spark, edited, str(tmp_path / "fresh"),
+                                  bucket_span=128)
+    assert table_snapshot(spark, resumed) == table_snapshot(spark, fresh)
+
+    foreign = tmp_path / "foreign"
+    (foreign / "segments").mkdir(parents=True)
+    with pytest.raises(ValueError, match=str(foreign)):
+        build_index_resumable(spark, corpus, str(foreign), bucket_span=128)
 
 
 def test_compaction_preserves_content_and_search(spark, corpus, tmp_path):
