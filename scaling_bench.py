@@ -60,7 +60,8 @@ def _host_load_block():
 
 def _host_load_finish(block: dict) -> bool:
     """Complete the snapshot and return the quiet_box verdict (same
-    thresholds as bench.py: loadavg < 1 at start, probe drift < 5%)."""
+    thresholds as bench.py: loadavg < 1 at start, probe drift between
+    -25% and +5%)."""
     from bench import cpu_probe, quiet_box
 
     block["loadavg_after"] = [round(x, 2) for x in os.getloadavg()]
@@ -352,8 +353,10 @@ def main_queries() -> None:
         # uniform corpus (default) can't prune, so its run isolates the
         # exhaustive decode+agg path.
         corpus_kind = os.environ.get("SCALING_CORPUS", "zipf")
+        topics = int(os.environ.get("SCALING_TOPICS", "50"))
         if corpus_kind == "topical":
-            corpus = synth_topical_corpus(spark, n_docs, vocab_size=vocab)
+            corpus = synth_topical_corpus(spark, n_docs, vocab_size=vocab,
+                                          n_topics=topics)
             build_cfg = IndexConfig(sort_docids_by=("repo", "path"))
             span = int(os.environ.get("SCALING_BUCKET_SPAN", "8192"))
         else:
@@ -404,6 +407,7 @@ def main_queries() -> None:
         protocol = {
             "phase": "queries",
             "corpus": corpus_kind,
+            "topics": topics,
             "zipf_docs": n_docs,
             "zipf_vocab": vocab,
             "levels": LEVELS,

@@ -163,23 +163,6 @@ class QueryConfig:
     # single-query latency while being a win amortized over a 900-query
     # batch (where the persisted bucket-bound frame is reused).
     prune_eager_min_queries: int = 64
-    # Up to this many queries per batch, the decode kernel aggregates
-    # scores itself (partition-local sums are final under the
-    # (qid, bucket) co-partitioning) and applies the theta bound plus a
-    # per-partition top-k cut — one exchange fewer, which wins on
-    # interactive latency.  Above it, the kernel emits per-posting
-    # scores and Spark's whole-stage-codegen hash aggregation owns the
-    # accumulation (spillable, so safest for mega-batches).  The
-    # threshold was 32 when the in-kernel combine was a pandas groupby
-    # over string-keyed rows (the JVM agg beat that ~3x at 900
-    # queries); with dense int32 qid codes and the packed-key numpy
-    # combine it is the other way around — A/B on the 500k-doc topical
-    # corpus, 900 warm queries, best-of-3: k=1000 9.5 s in-kernel vs
-    # 18.2 s JVM agg (every in-kernel rep beat the JVM best), k=10
-    # parity (pruning already removed the agg volume), exact-row
-    # identical results.  The per-posting exchange + two-phase hash agg
-    # only pays for itself beyond the chunking cap anyway.
-    agg_in_decode_max_queries: int = 1024
     # Bounded-memory batch execution: when the estimated score-cell
     # count of a batch (sum over queries of their terms' document
     # frequencies = rows entering the aggregation) exceeds this cap,

@@ -1,7 +1,10 @@
 """Training-data pipeline operators over document/embedding tables:
 deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard), similarity
-search (brute-force + LSH-bucketed cosine), and text analysis (language
-ID, quality scores, token counts, fingerprints).
+search (brute-force, LSH-bucketed and IVF cosine over embeddings), and
+text analysis (language ID, quality scores, token counts, fingerprints).
+The operators are text and embeddings only.  Two standalone byte codecs
+that no operator uses live beside them: `imagecodec` (PNG/BMP/GIF
+pixels) and `audiocodec` (WAV samples).
 
 These are the large-scale data-curation companions to the IR engine: the
 same tokenize/shingle primitives, expressed as declarative DataFrame

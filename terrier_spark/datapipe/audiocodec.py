@@ -1,10 +1,9 @@
 """Pure-stdlib WAV PCM sample decoding: struct + numpy, no audio libs.
-Extends the metadata-only RIFF walk (avmeta.py) with the actual sample
-payload — 8-bit unsigned / 16 / 24 / 32-bit signed little-endian PCM
-and 32-bit IEEE-float frames — so the audio `binary` column's decode
-step is real for the one container whose encoding is stdlib-feasible.
-Compressed codecs (MP3, FLAC's rice-coded subframes, AAC) stay behind
-the documented NotImplementedError in multimodal.py.
+Walks the RIFF chunks to the sample payload — 8-bit unsigned / 16 / 24 /
+32-bit signed little-endian PCM and 32-bit IEEE-float frames — the one
+audio container whose encoding is stdlib-feasible.  Compressed codecs
+(MP3, FLAC's rice-coded subframes, AAC) are not decoded.  No index,
+query or `jobs/` code uses this module.
 
 Decoded samples are numpy arrays of shape (n_frames, channels): int32
 for PCM (sign-corrected; 8-bit has its +128 offset removed) or float32
@@ -113,8 +112,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int, bits: int = 16) -> bytes:
 
 def decode_audio(data: Optional[bytes]):
     """Sniff + decode: -> (samples, sample_rate) for PCM/float WAV,
-    None for anything else (compressed audio: metadata via avmeta.py,
-    samples not stdlib-decodable)."""
+    None for anything else (compressed audio is not stdlib-decodable)."""
     if not data:
         return None
     b = bytes(data)
@@ -127,8 +125,8 @@ def decode_audio(data: Optional[bytes]):
 
 
 def audio_stats(samples: np.ndarray) -> dict:
-    """Exact integer statistics over decoded PCM samples (the gate's
-    currency — no float hashing): per-array sum/min/max plus channel-0
+    """Exact integer statistics over decoded PCM samples (no float
+    hashing): per-array sum/min/max plus channel-0
     zero crossings (sign-bit flips between consecutive frames)."""
     ch0 = samples[:, 0]
     neg = ch0 < 0
@@ -144,9 +142,9 @@ def audio_stats(samples: np.ndarray) -> dict:
 
 
 def synth_pcm_array(i: int) -> Tuple[np.ndarray, int, int]:
-    """Deterministic PCM field behind synth_audio_media — a pure
-    function of the row id, defined directly in the integer sample
-    domain (no quantization ambiguity between engine and oracle):
+    """Deterministic PCM test field, a pure function of the row id,
+    defined directly in the integer sample domain (no quantization
+    ambiguity):
 
         bits = (8, 16, 24, 32)[i % 4],  amp = 2^(bits-1) - 1
         rate = (8000, 16000, 44100)[i % 3],  ch = 1 + i % 2
@@ -162,18 +160,3 @@ def synth_pcm_array(i: int) -> Tuple[np.ndarray, int, int]:
     t = np.arange(n_frames, dtype=np.int64)[:, None]
     c = np.arange(channels, dtype=np.int64)[None, :]
     return ((t * (13 + i) + 7 * c) % (2 * amp + 1)) - amp, rate, bits
-
-
-def synth_audio_media(spark, n: int = 24):
-    """Media table whose payloads are FULLY-VALID PCM WAVs of the
-    synth_pcm_array field across all four bit depths."""
-    from terrier_spark.datapipe.multimodal import MEDIA_SCHEMA
-
-    rows = []
-    for i in range(n):
-        samples, rate, bits = synth_pcm_array(i)
-        payload = encode_wav(samples, rate, bits=bits)
-        dur = samples.shape[0] * 1000 // rate
-        rows.append((i, "audio", "audio/wav", None, None, int(dur),
-                     bytearray(payload)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -1,9 +1,7 @@
 """Pure-stdlib image PIXEL codecs: PNG, BMP and GIF decode/encode with
-zlib + struct + numpy — no PIL.  This turns the multimodal `binary`
-column's decode step from a documented stub into a real kernel: PNG's
-IDAT is zlib deflate, BMP is raw rows, GIF is LZW (implemented here,
-including animation), and baseline JPEG (Huffman + dequant + IDCT)
-lives in the sibling jpegcodec.py, reached through decode_image.
+zlib + struct + numpy — no PIL.  PNG's IDAT is zlib deflate, BMP is raw
+rows, GIF is LZW (implemented here, including animation).  JPEG is not
+decoded.
 
 Format references are the public specifications only: PNG (RFC 2083 /
 ISO 15948) chunk layout + filter algorithms, BMP BITMAPINFOHEADER,
@@ -11,14 +9,9 @@ GIF89a + its LZW variant (CompuServe spec, appendix F).
 
 Decoded images are numpy uint8 arrays of shape (H, W) for grayscale or
 (H, W, C) for multi-channel; encoders accept the same shapes.  All
-functions are driver/executor-agnostic pure byte transforms — the Spark
-side batches them through mapInPandas (multimodal.py), so per-image
-Python cost is paid inside Arrow-batched kernels, never per-row in the
-driver.
-
-Parity target: the reference indexes text, not pixels; this module
-backs the training-data-pipeline multimodal operators (decode /
-feature-extract / resize) the build brief adds on top of SURVEY.md §2.
+functions are driver/executor-agnostic pure byte transforms, so a
+caller can batch them inside mapInPandas.  No index, query or `jobs/`
+code uses them: the reference indexes text, not pixels.
 """
 
 from __future__ import annotations
@@ -566,11 +559,10 @@ def _lzw_encode(indices: list, min_code_size: int) -> bytes:
 
 def decode_image(data: Optional[bytes]) -> Optional[Tuple[np.ndarray, str]]:
     """Sniff the container and decode pixels.  -> (array, format) or
-    None when the bytes are not a supported pixel container (baseline
-    JPEG decodes via jpegcodec.py; progressive JPEG and unknown formats
-    yield None — metadata still available via imagemeta.py).  Corrupt
-    or truncated streams also yield None: curation keeps the row and
-    filters on the null, it never crashes the batch."""
+    None when the bytes are not a supported pixel container (JPEG and
+    unknown formats yield None).  Corrupt or truncated streams also
+    yield None: curation keeps the row and filters on the null, it
+    never crashes the batch."""
     if not data:
         return None
     b = bytes(data)
@@ -581,10 +573,6 @@ def decode_image(data: Optional[bytes]) -> Optional[Tuple[np.ndarray, str]]:
             return decode_bmp(b), "bmp"
         if b[:3] == b"GIF":
             return decode_gif(b), "gif"
-        if b[:2] == b"\xff\xd8":
-            from terrier_spark.datapipe.jpegcodec import decode_jpeg
-
-            return decode_jpeg(b), "jpeg"
     except (ValueError, IndexError, KeyError, struct.error):
         return None
     return None

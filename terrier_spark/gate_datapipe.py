@@ -385,18 +385,6 @@ def q_fingerprint(spark, sf_dir):
     )
 
 
-def q_multimodal_features(spark, sf_dir):
-    # synthetic media table (no media columns in the testdata); rows-only
-    from terrier_spark.datapipe.multimodal import decode_features, synth_media
-
-    media = synth_media(spark, n=30)
-    feats = decode_features(media)
-    return feats.select(
-        "media_id", "n_bytes",
-        F.round(F.element_at("feature", 1).cast("double"), 5).alias("f0"),
-    )
-
-
 # ----------------------------------------------------------------------- SQL
 
 def _shingle_cte(src: str = "documents") -> str:
@@ -629,285 +617,6 @@ SELECT query_id, vec_id,
           ORDER BY round(cosine, 5) DESC, vec_id) - 1)::BIGINT AS rank
 FROM scored
 QUALIFY rank < {COSINE_K}
-"""
-
-
-def q_image_metadata(spark, sf_dir):
-    # payloads carry REAL container headers (PNG IHDR / JPEG SOFn /
-    # GIF LSD / BMP info header) built by synth_image_media; the engine
-    # must recover (format, dims, depth, mode) from the BYTES — the
-    # oracle enumerates the generator's parameters independently
-    from terrier_spark.datapipe.imagemeta import (
-        image_metadata,
-        synth_image_media,
-    )
-
-    media = synth_image_media(spark, n=40)
-    return image_metadata(media)
-
-
-def _image_meta_sql() -> str:
-    """Oracle for q_image_metadata: the VALUES are the deterministic
-    generator PARAMETERS of synth_image_media (inputs regenerated, not
-    parser logic duplicated) — the engine side has to parse the actual
-    binary headers to match them."""
-    rows = []
-    for i in range(40):
-        w, h = 16 + 7 * (i % 23), 16 + 5 * (i % 31)
-        kind = i % 4
-        if kind == 0:
-            fmt, depth, mode = "png", 8, "RGBA"
-        elif kind == 1:
-            fmt, depth = "jpeg", 8
-            mode = "L" if i % 8 == 1 else "RGB"
-        elif kind == 2:
-            fmt, depth, mode = "gif", 8, "P"
-        else:
-            fmt, depth, mode = "bmp", 24, "RGB"
-        rows.append(f"({i}, '{fmt}', {w}, {h}, {depth}, '{mode}')")
-    return (
-        "SELECT media_id::BIGINT AS media_id, format, width::INT AS width,"
-        " height::INT AS height, bit_depth::INT AS bit_depth, mode\n"
-        "FROM (VALUES " + ", ".join(rows)
-        + ") AS t(media_id, format, width, height, bit_depth, mode)"
-    )
-
-
-def q_image_decode_pixels(spark, sf_dir):
-    # payloads are FULLY-VALID encoded images (PNG x all five filters,
-    # BMP, GIF-LZW) of a deterministic pixel formula; the engine must
-    # run the real pure-stdlib pixel decoders (imagecodec.py) over the
-    # bytes — the oracle recomputes the stats from the FORMULA, never
-    # touching the codecs
-    from terrier_spark.datapipe.imagemeta import synth_pixel_media
-    from terrier_spark.datapipe.multimodal import image_pixel_stats
-
-    media = synth_pixel_media(spark, n=30)
-    return image_pixel_stats(media)
-
-
-def _image_pixels_sql() -> str:
-    """Oracle for q_image_decode_pixels: per-image stats recomputed with
-    numpy from synth_pixel_array's closed-form pixel field (GIF decodes
-    through a grayscale palette -> 3 replicated channels)."""
-    from terrier_spark.datapipe.imagemeta import synth_pixel_array
-
-    rows = []
-    for i in range(30):
-        arr = synth_pixel_array(i)
-        kind = i % 5
-        fmt = {0: "png", 1: "png", 2: "png", 3: "bmp", 4: "gif"}[kind]
-        h, w = arr.shape[:2]
-        if kind == 4:   # GIF: gray index -> RGB via (g,g,g) palette
-            channels, s = 3, 3 * int(arr.sum(dtype="int64"))
-        else:
-            channels = 1 if arr.ndim == 2 else arr.shape[2]
-            s = int(arr.sum(dtype="int64"))
-        rows.append(f"({i}, '{fmt}', {w}, {h}, {channels}, {s}, "
-                    f"{int(arr.min())}, {int(arr.max())})")
-    return (
-        "SELECT media_id::BIGINT AS media_id, format, width::INT AS width,"
-        " height::INT AS height, channels::INT AS channels,"
-        " pix_sum::BIGINT AS pix_sum, pix_min::INT AS pix_min,"
-        " pix_max::INT AS pix_max\n"
-        "FROM (VALUES " + ", ".join(rows)
-        + ") AS t(media_id, format, width, height, channels, pix_sum,"
-        " pix_min, pix_max)"
-    )
-
-
-def q_audio_decode_pcm(spark, sf_dir):
-    # payloads are FULLY-VALID PCM WAVs (8/16/24/32-bit, 1-2 channels)
-    # of a deterministic integer sample formula; the engine must decode
-    # the actual RIFF frames (audiocodec.py) — the oracle recomputes
-    # the stats from the FORMULA with plain numpy
-    from terrier_spark.datapipe.audiocodec import synth_audio_media
-    from terrier_spark.datapipe.multimodal import audio_pcm_stats
-
-    media = synth_audio_media(spark, n=24)
-    return audio_pcm_stats(media)
-
-
-def _audio_pcm_sql() -> str:
-    """Oracle for q_audio_decode_pcm: exact integer stats recomputed
-    from synth_pcm_array's closed-form sample field."""
-    import numpy as _np
-
-    from terrier_spark.datapipe.audiocodec import synth_pcm_array
-
-    rows = []
-    for i in range(24):
-        s, rate, _bits = synth_pcm_array(i)
-        ch0 = s[:, 0]
-        neg = ch0 < 0
-        zc = int(_np.count_nonzero(neg[:-1] != neg[1:]))
-        rows.append(
-            f"({i}, {rate}, {s.shape[1]}, {s.shape[0]}, "
-            f"{int(s.sum(dtype='int64'))}, {int(s.min())}, "
-            f"{int(s.max())}, {zc})")
-    return (
-        "SELECT media_id::BIGINT AS media_id,"
-        " sample_rate::INT AS sample_rate, channels::INT AS channels,"
-        " n_frames::BIGINT AS n_frames, samp_sum::BIGINT AS samp_sum,"
-        " samp_min::BIGINT AS samp_min, samp_max::BIGINT AS samp_max,"
-        " zero_cross::INT AS zero_cross\n"
-        "FROM (VALUES " + ", ".join(rows)
-        + ") AS t(media_id, sample_rate, channels, n_frames, samp_sum,"
-        " samp_min, samp_max, zero_cross)"
-    )
-
-
-_FRAME_SAMPLE_MS = 70
-
-
-def q_video_frame_sample(spark, sf_dir):
-    # payloads are FULLY-VALID animated GIFs (multi-frame LZW streams
-    # with Graphics Control delays); the engine must decode + composite
-    # the frame visible at each sampled timestamp, re-encode it as PNG,
-    # then decode THAT to report pixel stats — two real codec passes.
-    # The oracle recomputes everything from the closed-form animation.
-    from terrier_spark.datapipe.imagemeta import synth_animation_media
-    from terrier_spark.datapipe.multimodal import (
-        frame_pixel_stats,
-        sample_frames,
-    )
-
-    media = synth_animation_media(spark, n=18)
-    frames = sample_frames(media, every_ms=_FRAME_SAMPLE_MS, decoder="real")
-    return frame_pixel_stats(frames)
-
-
-def _video_frames_sql() -> str:
-    """Oracle for q_video_frame_sample: the sampled timestamps, visible
-    frame index and its pixel sum recomputed from the generator's
-    closed-form frames/delays (gray -> 3 replicated RGB channels)."""
-    import numpy as _np
-
-    from terrier_spark.datapipe.imagemeta import synth_animation_frames
-
-    rows = []
-    for i in range(18):
-        frames, delays = synth_animation_frames(i)
-        starts = _np.cumsum([0] + delays[:-1])
-        total = int(starts[-1] + delays[-1])
-        h, w = frames[0].shape
-        for t in range(0, max(total, 1), _FRAME_SAMPLE_MS):
-            k = int(_np.searchsorted(starts, t, side="right") - 1)
-            s = 3 * int(frames[k].sum(dtype="int64"))
-            rows.append(f"({i}, {t}, {w}, {h}, {s})")
-    return (
-        "SELECT media_id::BIGINT AS media_id, ts_ms::BIGINT AS ts_ms,"
-        " width::INT AS width, height::INT AS height,"
-        " pix_sum::BIGINT AS pix_sum\n"
-        "FROM (VALUES " + ", ".join(rows)
-        + ") AS t(media_id, ts_ms, width, height, pix_sum)"
-    )
-
-
-def q_av_metadata(spark, sf_dir):
-    # payloads carry REAL audio/video container headers (RIFF/WAVE fmt
-    # + data chunks, FLAC STREAMINFO, MPEG1-LayerIII frame sync behind
-    # an ID3v2 envelope, ISO-BMFF mvhd/tkhd) built by synth_av_media;
-    # the engine must recover (format, codec, layout, duration, dims)
-    # from the BYTES — the oracle enumerates the generator's parameters
-    from terrier_spark.datapipe.avmeta import av_metadata, synth_av_media
-
-    media = synth_av_media(spark, n=40)
-    out = av_metadata(media)
-    # absent fields (audio has no dims, mp4 no sample layout) -> -1
-    # sentinels in the GATE ONLY: the driver's value-hash comparison has
-    # no tested NULL convention; the API keeps real NULLs (test_avmeta)
-    return out.select(
-        "media_id", "format", "codec",
-        *[F.coalesce(F.col(c), F.lit(-1)).alias(c)
-          for c in ("channels", "sample_rate", "bit_depth",
-                    "duration_ms", "width", "height")],
-    )
-
-
-def _av_meta_sql() -> str:
-    """Oracle for q_av_metadata: the VALUES are the deterministic
-    generator PARAMETERS of synth_av_media (inputs regenerated, not
-    parser logic duplicated) — the engine side has to parse the actual
-    binary headers to match them."""
-    from terrier_spark.datapipe.avmeta import _MP3_BITRATE
-
-    rows = []
-    for i in range(40):
-        kind = i % 4
-        w = h = ch = rate = bits = -1   # the gate's NULL sentinel
-        if kind == 0:
-            fmt, codec = "'wav'", "'pcm'"
-            rate = (8000, 16000, 44100, 48000)[(i // 4) % 4]
-            ch, bits = 1 + (i % 2), (8, 16, 24, 32)[(i // 8) % 4]
-            n_samples = 100 + 37 * (i % 11)
-            dur = n_samples * 1000 // rate
-        elif kind == 1:
-            fmt, codec = "'flac'", "'flac'"
-            rate = (22050, 44100, 48000, 96000)[(i // 4) % 4]
-            ch, bits = 1 + (i % 3), (16, 24)[(i // 8) % 2]
-            total = 1000 + 503 * (i % 13)
-            dur = total * 1000 // rate
-        elif kind == 2:
-            fmt, codec = "'mp3'", "'mpeg1_layer3'"
-            kbps = _MP3_BITRATE[(0, 3)][1 + (i % 14)]
-            rate = (44100, 48000, 32000)[(i // 4) % 3]
-            ch = 1 if i % 8 == 2 else 2
-            audio_bytes = 2000 + 997 * (i % 7)
-            dur = audio_bytes * 8 * 1000 // (kbps * 1000)
-        else:
-            fmt, codec = "'mp4'", "'isom'"
-            dur = (1 + (i % 29)) * 1000
-            w, h = 160 + 16 * (i % 9), 90 + 18 * (i % 7)
-        rows.append(f"({i}, {fmt}, {codec}, {ch}, {rate}, {bits}, "
-                    f"{dur}, {w}, {h})")
-    return (
-        "SELECT media_id::BIGINT AS media_id, format, codec,"
-        " channels::INT AS channels, sample_rate::INT AS sample_rate,"
-        " bit_depth::INT AS bit_depth, duration_ms::BIGINT AS duration_ms,"
-        " width::INT AS width, height::INT AS height\n"
-        "FROM (VALUES " + ", ".join(rows)
-        + ") AS t(media_id, format, codec, channels, sample_rate,"
-        " bit_depth, duration_ms, width, height)"
-    )
-
-
-def _multimodal_sql() -> str:
-    """Mirror of decode_features over the synth_media table: the payload
-    hex strings ARE the input data (inlined as VALUES); the feature is
-    recomputed in SQL from sha256(hex) -> little-endian uint32 words ->
-    centered/unit-normalised, float32-cast like the engine."""
-    # replicate the generator's deterministic payloads (input, not logic)
-    import hashlib as _hl
-    import random as _rnd
-
-    rng = _rnd.Random(42)
-    vals = []
-    for i in range(30):
-        payload = _hl.sha256(f"media{i}".encode()).digest() * (
-            1 + rng.randrange(4)
-        )
-        vals.append(f"({i}, '{payload.hex()}')")
-    # v_j = u32_le(sha256(hex)[4j:4j+4]) / 2^32 - 0.5, j = 0..7; the
-    # 16-dim vector repeats them, so norm = sqrt(2 * sum v_j^2)
-    u32 = [
-        "('0x' || substr(hx, {b3}, 2) || substr(hx, {b2}, 2) || "
-        "substr(hx, {b1}, 2) || substr(hx, {b0}, 2))::BIGINT".format(
-            b0=8 * j + 1, b1=8 * j + 3, b2=8 * j + 5, b3=8 * j + 7
-        )
-        for j in range(8)
-    ]
-    v = [f"(({u}) / 4294967296.0 - 0.5)" for u in u32]
-    norm = "sqrt(2.0 * (" + " + ".join(f"{x} * {x}" for x in v) + "))"
-    return f"""
-WITH media(media_id, hex) AS (VALUES {', '.join(vals)}),
-h AS (
-  SELECT media_id, (len(hex) / 2)::BIGINT AS n_bytes, sha256(hex) AS hx
-  FROM media
-)
-SELECT media_id, n_bytes,
-       CAST(round(CAST({v[0]} / {norm} AS REAL)::DOUBLE, 5) AS DOUBLE) AS f0
-FROM h
 """
 
 
@@ -1152,12 +861,6 @@ DATAPIPE_QUERIES = {
     "pii_scrub": q_pii_scrub,
     "language_id": q_lang_id,
     "char_fingerprint": q_fingerprint,
-    "multimodal_features": q_multimodal_features,
-    "image_metadata": q_image_metadata,
-    "image_decode_pixels": q_image_decode_pixels,
-    "audio_decode_pcm": q_audio_decode_pcm,
-    "video_frame_sample": q_video_frame_sample,
-    "av_metadata": q_av_metadata,
     "language_id_trigram": q_lang_id_trigram,
 }
 
@@ -1178,11 +881,5 @@ DATAPIPE_ORACLE_SQL = {
     "minhash_lsh_pairs": _minhash_lsh_sql(),
     "lsh_cosine_topk": _lsh_cosine_sql(),
     "ivf_cosine_topk": _ivf_sql(),
-    "multimodal_features": _multimodal_sql(),
-    "image_metadata": _image_meta_sql(),
-    "image_decode_pixels": _image_pixels_sql(),
-    "audio_decode_pcm": _audio_pcm_sql(),
-    "video_frame_sample": _video_frames_sql(),
-    "av_metadata": _av_meta_sql(),
     "language_id_trigram": _lang_trigram_sql(),
 }

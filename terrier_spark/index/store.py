@@ -56,18 +56,8 @@ class IndexStore:
         # store skip the lexicon-scan job (the reference keeps its lexicon
         # memory-mapped for the same reason); only populated when small
         self._lexicon_pdf = None
-        self._postings_partitions = None
         self._postings_df = None
         self._postings_key = None
-
-    def postings_scan_partitions(self, spark: SparkSession) -> int:
-        """Number of scan partitions the postings dataset yields (cached;
-        a plain file-scan plan, so this is metadata-cheap)."""
-        if self._postings_partitions is None:
-            self._postings_partitions = self.postings(
-                spark
-            ).rdd.getNumPartitions()
-        return self._postings_partitions
 
     @property
     def stats(self) -> dict:

@@ -9,13 +9,18 @@ becomes a declarative plan Catalyst owns:
          PostingListManager.java:213; low-idf drop :217-219]
       -> [prune] drop (qid,bucket) whose WAND upper bound < theta
          [WAND.java:190-289, made bound-safe at block granularity]
+      -> repartition(qid, bucket)                      [co-locate a doc's
+         postings of every query term]
       -> mapInPandas VByte decode + numpy model kernel [vectorized scoring]
-      -> groupBy(qid, docid).sum(score)                [accumulators]
+         + in-kernel per-(qid, docid) score combine    [accumulators]
+         + theta filter and per-partition top-k cut
       -> per-qid top-k, ties: score desc, docid asc    [pinned — reference
          ties are unstable, daat/CandidateResult.java:52-62]
 
 All queries of a batch run as ONE Spark job (the fork's 900-query
-benchmark loop becomes a single plan over a qid dimension).
+benchmark loop becomes a single plan over a qid dimension), through the
+same in-kernel aggregation whatever the batch size, as the reference
+sums scores inside matching for every query.
 """
 
 from __future__ import annotations
@@ -48,6 +53,13 @@ _THETA_EPS = 1e-9
 # raw (pre-combine) rows the in-kernel aggregator holds before compacting
 # its accumulator with a packed-key unique+bincount pass
 _AGG_COMPACT_ROWS = 1 << 23
+# The in-kernel combine packs (qid code, docid) into one int64 key,
+# qid << _DOCID_BITS | docid.  Docids must stay below 2^43 (8.8e12, above
+# the 10^12-doc design point; search_terms raises otherwise) and a job's
+# dense qid codes below 2^20, so search_terms splits larger batches into
+# sequential chunks of at most _MAX_JOB_QUERIES queries.
+_DOCID_BITS = 43
+_MAX_JOB_QUERIES = 1 << (63 - _DOCID_BITS)
 
 # session settings the query path assumes (session.get_spark sets them);
 # a bare SparkSession.builder session measures ~2-3x slower per query
@@ -192,20 +204,18 @@ def _decode_score_udf(model: str, N: int, avgdl: float, T: int,
                     scores = kernel(tfs, dls, row.qtf, row.nt, row.tfc,
                                     N, avgdl, T)
                 # Undefined (NaN) contributions are DROPPED here, at the
-                # per-posting source, so every aggregation path agrees.
-                # BB2-family formulas are NaN outside their domain
-                # (stirlingPower(F, F - TF) with normalised TF > F on
-                # short docs — reference BB2.java:90 behaves the same);
-                # the reference then ranks NaN docs FIRST
-                # (Double.compare treats NaN as greatest).  We diverge
-                # deliberately: propagating NaN would rank numerically
-                # degenerate docs at the top, and the two agg paths
-                # (JVM hash-agg, whose Arrow input turns pandas NaN
-                # into NULLs that F.sum skips, vs the in-kernel numpy
-                # combine, where NaN poisons the doc sum) could never
-                # agree on it.  Block-max bounds stay valid: dropping a
-                # contribution only lowers a doc's score, and a
-                # NaN-poisoned block max keeps its bucket unpruned.
+                # per-posting source.  BB2-family formulas are NaN
+                # outside their domain (stirlingPower(F, F - TF) with
+                # normalised TF > F on short docs — reference BB2.java:90
+                # behaves the same); the reference then ranks NaN docs
+                # FIRST (Double.compare treats NaN as greatest).  We
+                # diverge deliberately: propagating NaN would rank
+                # numerically degenerate docs at the top, and the
+                # OracleIndex applies the same drop, so engine and
+                # oracle agree on every model.  Block-max bounds stay
+                # valid: dropping a contribution only lowers a doc's
+                # score, and a NaN-poisoned block max keeps its bucket
+                # unpruned.
                 bad = np.isnan(scores)
                 if bad.any():
                     keep = ~bad
@@ -213,8 +223,8 @@ def _decode_score_udf(model: str, N: int, avgdl: float, T: int,
                     if ids.size == 0:
                         continue
                 # int32 qid codes, not strings: object-dtype qid columns
-                # dominated the Arrow exchange bytes and the JVM hash-agg
-                # key cost in the DRAM-bound batch phase (VERDICT r4 #2a)
+                # dominated the Arrow exchange bytes in the DRAM-bound
+                # batch phase (VERDICT r4 #2a)
                 out_qid.append(np.full(ids.size, row.qid, dtype=np.int32))
                 out_docid.append(ids)
                 out_score.append(scores)
@@ -271,15 +281,12 @@ def _decode_agg_udf(model: str, N: int, avgdl: float, T: int,
                 yield pdf
 
         # Accumulate (qid, docid, score) as numpy and combine on a packed
-        # int64 key (qid << 43 | docid): measured ~2x faster than the
-        # pandas groupby this replaced (int keys, one sort, no index
-        # machinery).  Valid while docid < 2^43 (8.8e12 — above the
-        # 10^12-doc design point) and qid codes < 2^20 per batch; the
-        # codes are dense per-batch ints, so only a degenerate
-        # million-query single batch could overflow, and search_terms
-        # chunks far below that.  Chunks are compacted whenever the
-        # pending raw volume passes _AGG_COMPACT_ROWS so peak memory is
-        # O(unique keys + compact window), not O(decode volume).
+        # int64 key (qid << _DOCID_BITS | docid): measured ~2x faster
+        # than the pandas groupby this replaced (int keys, one sort, no
+        # index machinery).  search_terms keeps docids and qid codes
+        # inside the key's bit widths.  Chunks are compacted whenever
+        # the pending raw volume passes _AGG_COMPACT_ROWS so peak memory
+        # is O(unique keys + compact window), not O(decode volume).
         key_parts: list = []
         score_parts: list = []
         pending = 0
@@ -298,7 +305,7 @@ def _decode_agg_udf(model: str, N: int, avgdl: float, T: int,
             qids = pdf["qid"].to_numpy()
             docids = pdf["docid"].to_numpy()
             key_parts.append(
-                (qids.astype(np.int64) << np.int64(43)) | docids
+                (qids.astype(np.int64) << np.int64(_DOCID_BITS)) | docids
             )
             score_parts.append(pdf["score"].to_numpy())
             pending += qids.size
@@ -308,8 +315,8 @@ def _decode_agg_udf(model: str, N: int, avgdl: float, T: int,
             return
         compact()
         keys, scores = key_parts[0], score_parts[0]
-        qids = (keys >> np.int64(43)).astype(np.int32)
-        docids = keys & np.int64((1 << 43) - 1)
+        qids = (keys >> np.int64(_DOCID_BITS)).astype(np.int32)
+        docids = keys & np.int64((1 << _DOCID_BITS) - 1)
         if theta_map:
             # vectorized per-row theta via searchsorted over the unique
             # qids present in this partition; no theta -> -inf -> kept
@@ -397,13 +404,20 @@ def search_terms(
     point query expansion re-enters with Bo1 weights
     (Manager.runMatching keyFrequency semantics).
 
-    `_survivors_pdf` is internal: a chunked over-cap batch passes each
+    `_survivors_pdf` is internal: a chunked split batch passes each
     chunk its slice of the batch-wide pruning survivors (qid, bucket,
     theta) so chunks skip re-pruning."""
     qcfg = qcfg or QueryConfig()
     _check_session_tuning(spark)
     stats = store.stats
     N, avgdl, T = stats["num_docs"], stats["avg_doclen"], stats["num_tokens"]
+    if N >= 1 << _DOCID_BITS:
+        # docids are dense 0..N-1; past 2^43 they overflow the in-kernel
+        # combine's packed key and would corrupt scores silently
+        raise ValueError(
+            f"index {store.path}: {N} documents exceed the "
+            f"2^{_DOCID_BITS} docids search can score"
+        )
 
     qstats = _qterm_stats(spark, store, qterms, qcfg)
     if qstats.empty:
@@ -420,8 +434,8 @@ def search_terms(
     # Integer qid codes through the whole decode/agg exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
     # profile, BASELINE.md), and a string qid there costs object-dtype
-    # columns in every Arrow batch plus string hashing in the JVM
-    # hash-agg and top-k window.  Map each label to a dense int32 at
+    # columns in every Arrow batch plus string hashing in the exchange
+    # and top-k window.  Map each label to a dense int32 at
     # plan-build time, run everything on the code, and join the labels
     # back AFTER the top-k cut (<= k rows per query, broadcast join).
     qid_labels = sorted(set(qstats["qid"]))
@@ -495,11 +509,13 @@ def search_terms(
     # hot terms) can push the per-job (qid, docid) aggregation state
     # past executor memory — measured: 225 queries x 8M docs of a
     # saturated vocabulary OOMed a 14-GiB executor.  When the estimated
-    # score-cell volume exceeds `batch_max_score_cells`, split the batch
-    # into query chunks run as SEQUENTIAL jobs; each chunk's (tiny,
-    # <= k-per-qid) result is materialized eagerly so chunk memory is
-    # released before the next chunk starts.  Results are identical:
-    # queries never interact in scoring.
+    # score-cell volume exceeds `batch_max_score_cells`, or the batch
+    # has more queries than the packed key has qid codes
+    # (_MAX_JOB_QUERIES), split the batch into query chunks run as
+    # SEQUENTIAL jobs; each chunk's (tiny, <= k-per-qid) result is
+    # materialized eagerly so chunk memory is released before the next
+    # chunk starts.  Results are identical: queries never interact in
+    # scoring.
     #
     # For prunable batches the split is sized by the POST-prune
     # surviving cell volume: the two-pass prune runs ONCE batch-wide
@@ -519,24 +535,32 @@ def search_terms(
     per_qid = qstats.groupby("qid")["nt"].sum().rename(
         index=lambda c: qid_labels[c]
     )
-    over_cap = (
-        cap is not None and per_qid.sum() > cap and len(per_qid) > 1
-        and _survivors_pdf is None
-    )
+    too_many = len(per_qid) > _MAX_JOB_QUERIES
+
+    def _over_cap(cost_by_qid: "pd.Series") -> bool:
+        return (cap is not None and cost_by_qid.sum() > cap
+                and len(cost_by_qid) > 1)
+
+    split = _survivors_pdf is None and (too_many or _over_cap(per_qid))
 
     def _chunked(cost_by_qid: "pd.Series", surv: Optional[pd.DataFrame]):
         chunks: List[List[str]] = [[]]
         acc = 0.0
         for qid, cost in cost_by_qid.sort_index().items():
-            if chunks[-1] and acc + float(cost) > cap:
+            if chunks[-1] and (
+                len(chunks[-1]) >= _MAX_JOB_QUERIES
+                or (cap is not None and acc + float(cost) > cap)
+            ):
                 chunks.append([])
                 acc = 0.0
             chunks[-1].append(qid)
             acc += float(cost)
         log.info(
             "search_terms: %d queries / %.0f score cells exceed "
-            "batch_max_score_cells=%.0f -> %d sequential chunks (%s)",
-            len(cost_by_qid), cost_by_qid.sum(), cap, len(chunks),
+            "batch_max_score_cells=%s or %d queries per job -> %d "
+            "sequential chunks (%s)",
+            len(cost_by_qid), cost_by_qid.sum(), cap, _MAX_JOB_QUERIES,
+            len(chunks),
             "post-prune survivor volume" if surv is not None
             else "raw df estimate",
         )
@@ -554,19 +578,11 @@ def search_terms(
             out = out_c if out is None else out.unionByName(out_c)
         return out
 
-    # per-qid pass-1 theta (a valid lower bound on the kth-best score),
-    # harvested driver-side from the survivor frame whenever the prune
-    # materialized one — the batch path applies it AFTER the hash agg to
-    # cut the rows entering the top-k window exchange (the latency path
-    # applies the same bound in-kernel via the theta column)
-    theta_pdf: Optional[pd.DataFrame] = None
-
-    def _thetas_of(surv: pd.DataFrame) -> Optional[pd.DataFrame]:
-        t = surv[["qid", "theta"]].dropna().drop_duplicates("qid")
-        return t if len(t) else None
-
+    # every prune below leaves the per-qid pass-1 theta (a valid lower
+    # bound on the kth-best score) on a `theta` column of `joined`,
+    # which the decode kernel applies in-kernel
     if _survivors_pdf is not None:
-        # chunk of an over-cap batch: apply the precomputed survivors
+        # chunk of a split batch: apply the precomputed survivors
         # (label-keyed across the recursion boundary -> this chunk's codes)
         surv_coded = _survivors_pdf.assign(
             qid=_survivors_pdf["qid"].map(qid_code_of).astype("int32")
@@ -576,13 +592,12 @@ def search_terms(
             schema="qid int, bucket long, theta double",
         )
         joined = joined.join(F.broadcast(surv_df), ["qid", "bucket"])
-        theta_pdf = _thetas_of(surv_coded)
-    elif over_cap and prune_ok and (
+    elif split and prune_ok and (
         # pass 1 of a batch-wide prune decodes ONE bucket per query in a
         # single job; when even that upper bound (queries x bucket_span)
         # cannot fit the cap — think 10^5-query mega-batches — fall back
         # to raw-df chunking below, where each chunk prunes itself
-        len(per_qid) * store.bucket_span <= cap
+        cap is None or len(per_qid) * store.bucket_span <= cap
     ):
         joined_pruned, surv_pdf = _prune_buckets(
             spark, joined, qcfg, N, avgdl, T_eff, eager=True,
@@ -592,7 +607,7 @@ def search_terms(
         per_qid_cells = surv_pdf.groupby("qid")["cells"].sum().rename(
             index=lambda c: qid_labels[c]
         )
-        if per_qid_cells.sum() > cap and len(per_qid_cells) > 1:
+        if too_many or _over_cap(per_qid_cells):
             return _chunked(
                 per_qid_cells,
                 surv_pdf.assign(
@@ -600,98 +615,51 @@ def search_terms(
                 ),
             )
         joined = joined_pruned
-        theta_pdf = _thetas_of(surv_pdf)
-    elif over_cap:
+    elif split:
         # unprunable model (or a mega-batch whose pass 1 would itself
         # break the cap): raw-df-estimate split, chunks prune themselves
         return _chunked(per_qid, None)
     elif prune_ok:
-        n_queries = qstats["qid"].nunique()
-        eager = n_queries >= qcfg.prune_eager_min_queries
-        if eager:
-            joined, surv_pdf = _prune_buckets(
-                spark, joined, qcfg, N, avgdl, T_eff, eager=True,
-                spec=spec, field_params=field_params, ms_idx=ms_idx,
-                return_survivors=True, stats_out=stats_out,
-            )
-            theta_pdf = _thetas_of(surv_pdf)
-        else:
-            # lazy mode (small batches): the survivor set stays a plan, so
-            # no driver-side theta; the latency path's kernel still applies
-            # the bound from the theta column it carries
-            joined = _prune_buckets(
-                spark, joined, qcfg, N, avgdl, T_eff, eager=False,
-                spec=spec, field_params=field_params, ms_idx=ms_idx,
-                stats_out=stats_out,
-            )
-    default_par = spark.sparkContext.defaultParallelism
-    n_queries = int(qstats["qid"].nunique())
-    if n_queries <= qcfg.agg_in_decode_max_queries:
-        # LATENCY PATH (small batches): co-locate every term's blocks
-        # for the same (qid, bucket) — the bucket invariant then makes
-        # the decode kernel's partition-local sums FINAL document
-        # scores, so the (qid, docid, score) posting exchange
-        # disappears; the kernel also applies the pass-1 theta bound
-        # and a per-partition top-k cut, leaving <= k rows per
-        # (partition, qid) for the global top-k window.  The
-        # repartition exchanges compressed BLOCK rows (orders of
-        # magnitude smaller) and fixes the few-scan-partitions
-        # serialization a small postings dataset would impose.
-        lat_cols = sel_cols + ["bucket"] + (
-            ["theta"] if "theta" in joined.columns else []
+        # eager (large batches) materializes the survivor set in one
+        # extra action; lazy (small batches) keeps it a plan
+        joined = _prune_buckets(
+            spark, joined, qcfg, N, avgdl, T_eff,
+            eager=qstats["qid"].nunique() >= qcfg.prune_eager_min_queries,
+            spec=spec, field_params=field_params, ms_idx=ms_idx,
+            stats_out=stats_out,
         )
-        # width the exchange to the work, not the box: a single
-        # interactive query over a few dozen compressed blocks gains
-        # nothing from 32 near-empty decode tasks but pays their launch
-        # + Python-worker round-trips.  sum(nt)/block_size lower-bounds
-        # the block count; ~8 blocks per decode task keeps the kernel's
-        # numpy batches fat while capping task-count overhead.
-        est_blocks = total_postings / max(store.block_size, 1) + len(terms)
-        lat_width = int(min(default_par, max(4, est_blocks // 8 + 1)))
-        selected = joined.select(*lat_cols).repartition(
-            lat_width, "qid", "bucket"
-        )
-        decoded = selected.mapInPandas(
-            _decode_agg_udf(qcfg.model, N, avgdl, T_eff, field_params,
-                            k=qcfg.k),
-            schema="qid int, docid long, score double",
-        )
-        scored = decoded
-    else:
-        # BATCH PATH (many queries): emit per-posting scores from the
-        # decode kernel and let Spark's whole-stage-codegen hash
-        # aggregation do the accumulation — at batch scale the JVM agg
-        # beats a pandas groupby over millions of string-keyed rows,
-        # and the map-side partial aggregation halves the exchange.
-        selected = joined.select(*sel_cols)
-        if store.postings_scan_partitions(spark) < max(default_par // 2, 2):
-            selected = selected.repartition(default_par)
-        decoded = selected.mapInPandas(
-            _decode_score_udf(qcfg.model, N, avgdl, T_eff, field_params),
-            schema="qid int, docid long, score double",
-        )
-        scored = decoded.groupBy("qid", "docid").agg(
-            F.sum("score").alias("score")
-        )
-        if theta_pdf is not None:
-            # drop documents that provably cannot reach the top-k BEFORE
-            # the per-qid window: theta <= kth-best score, so score <
-            # theta - eps rows only inflate the window's exchange + sort.
-            # The frame is per-query scalars (tiny), broadcast joined.
-            th_df = spark.createDataFrame(
-                theta_pdf, schema="qid int, theta double"
-            )
-            scored = (
-                scored.join(F.broadcast(th_df), "qid", "left")
-                .filter(
-                    F.col("theta").isNull()
-                    | (F.col("score") >= F.col("theta") - F.lit(_THETA_EPS))
-                )
-                .drop("theta")
-            )
+    # Co-locate every term's blocks for the same (qid, bucket): the
+    # bucket invariant then makes the decode kernel's partition-local
+    # sums FINAL document scores, so no (qid, docid, score) posting rows
+    # are exchanged; the kernel also applies the pass-1 theta bound and
+    # a per-partition top-k cut, leaving <= k rows per (partition, qid)
+    # for the global top-k window.  The repartition exchanges compressed
+    # BLOCK rows (orders of magnitude smaller than posting rows) and
+    # fixes the few-scan-partitions serialization a small postings
+    # dataset would impose.  It also beats a per-posting JVM hash agg
+    # at every measured batch size (SCALE.md), so it is the only plan.
+    agg_cols = sel_cols + ["bucket"] + (
+        ["theta"] if "theta" in joined.columns else []
+    )
+    # width the exchange to the work, not the box: a single interactive
+    # query over a few dozen compressed blocks gains nothing from 32
+    # near-empty decode tasks but pays their launch + Python-worker
+    # round-trips.  sum(nt)/block_size lower-bounds the block count; ~8
+    # blocks per decode task keeps the kernel's numpy batches fat while
+    # capping task-count overhead.
+    est_blocks = total_postings / max(store.block_size, 1) + len(terms)
+    width = int(min(spark.sparkContext.defaultParallelism,
+                    max(4, est_blocks // 8 + 1)))
+    scored = joined.select(*agg_cols).repartition(
+        width, "qid", "bucket"
+    ).mapInPandas(
+        _decode_agg_udf(qcfg.model, N, avgdl, T_eff, field_params,
+                        k=qcfg.k),
+        schema="qid int, docid long, score double",
+    )
     # label join AFTER the top-k cut: <= k rows per query reach it, so the
-    # string qids never touch the decode exchange, the hash-agg, or the
-    # top-k sort — only this broadcast join against the tiny label map
+    # string qids never touch the decode exchange or the top-k sort —
+    # only this broadcast join against the tiny label map
     label_df = spark.createDataFrame(
         pd.DataFrame({
             "qid": np.arange(len(qid_labels), dtype=np.int32),
@@ -738,6 +706,8 @@ def _prune_buckets(spark, joined: DataFrame, qcfg: QueryConfig,
     action is the ONLY job: the bucket-bound aggregation is recomputed in
     both passes, but it is a metadata-only agg (no posting decode) and
     costs far less than a second job's fixed overhead.
+    return_survivors=True (eager only) also returns the materialized
+    survivor frame (qid, bucket, theta, cells).
 
     Bound sources, tightest available first:
       * ms_idx set — the stored EXACT per-block unit-score maximum
@@ -850,8 +820,8 @@ def _prune_buckets(spark, joined: DataFrame, qcfg: QueryConfig,
                 | (F.col("bucket_ub") >= F.col("theta"))
             )
             # theta rides the survivor rows into the pruning join (a
-            # column, NOT a driver-side dict), so the latency path's
-            # decode kernel gets it in BOTH eager and lazy modes with
+            # column, NOT a driver-side dict), so the decode kernel
+            # gets it in BOTH eager and lazy modes with
             # no extra Spark action; -inf (fewer than k pass-1 docs)
             # means no usable bound -> null
             .select(
@@ -863,7 +833,7 @@ def _prune_buckets(spark, joined: DataFrame, qcfg: QueryConfig,
             )
         )
         surv_pdf = None
-        if eager or return_survivors:
+        if eager:
             # materialize the surviving (qid, bucket) pairs NOW: they
             # would be broadcast (= collected to the driver) anyway, and
             # doing it eagerly lets the cached bucket_ub be released

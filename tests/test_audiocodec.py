@@ -1,6 +1,6 @@
 """WAV PCM sample codec tests: round-trips at every bit depth, sign
 handling (24-bit assembly), IEEE-float frames, chunk-walk robustness,
-and the Spark-side stats/feature kernels."""
+the integer sample statistics and the synthetic PCM field."""
 
 import struct
 
@@ -14,7 +14,6 @@ from terrier_spark.datapipe.audiocodec import (
     decode_audio,
     decode_wav,
     encode_wav,
-    synth_audio_media,
     synth_pcm_array,
 )
 
@@ -100,34 +99,3 @@ def test_synth_pcm_in_range():
         amp = (1 << (bits - 1)) - 1
         assert s.min() >= -amp and s.max() <= amp
         assert rate in (8000, 16000, 44100)
-
-
-def test_audio_kernels_spark(spark):
-    from terrier_spark.datapipe.multimodal import (
-        audio_features,
-        audio_pcm_stats,
-    )
-
-    media = synth_audio_media(spark, n=12)
-    stats = {r["media_id"]: r for r in audio_pcm_stats(media).collect()}
-    assert len(stats) == 12
-    for i, r in stats.items():
-        s, rate, _bits = synth_pcm_array(i)
-        assert r["sample_rate"] == rate
-        assert r["n_frames"] == s.shape[0]
-        assert r["samp_sum"] == int(s.sum(dtype="int64"))
-
-    feats = {r["media_id"]: r for r in audio_features(media).collect()}
-    for i, r in feats.items():
-        s, rate, _bits = synth_pcm_array(i)
-        assert r["duration_ms"] == pytest.approx(s.shape[0] * 1000 / rate)
-        assert 0.0 < r["rms"] <= 1.0
-        assert 0.0 <= r["spectral_centroid_hz"] <= rate / 2
-
-    # non-WAV payloads -> null rows, kept
-    from terrier_spark.datapipe.multimodal import synth_media
-
-    other = synth_media(spark, n=6)
-    rows = audio_pcm_stats(other).collect()
-    assert len(rows) == 6
-    assert all(r["samp_sum"] is None for r in rows)

@@ -3,8 +3,8 @@
 quiet_box is the graded-comparison filter: it must flag runs where
 external load could have slowed the measurement, and must NOT flag
 idle-box runs whose start-of-run probe was merely cold (governor ramp)
-— the probe speeding up over the run is evidence of idleness, not
-contention.
+— a modest probe speed-up over the run is evidence of idleness, a large
+one of a competitor that left mid-run.
 """
 
 from bench import quiet_box
@@ -27,6 +27,12 @@ def test_quiet_when_probe_speeds_up():
     # cold start-of-run probe (frequency ramp): faster closing probe
     # must not disqualify — only slowdown indicates contention
     assert quiet_box(IDLE, 0.2637, 0.2227) is True
+
+
+def test_not_quiet_when_probe_speeds_up_too_much():
+    # a competitor that slowed the opening probe and exited mid-run
+    # (too fresh to move loadavg) shows as an implausibly large speed-up
+    assert quiet_box(IDLE, 0.40, 0.25) is False  # -37.5%
 
 
 def test_not_quiet_when_loaded_at_start():

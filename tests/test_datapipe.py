@@ -1,5 +1,5 @@
 """Datapipe operator tests: dedup family vs pure-Python references,
-LSH recall vs brute force, textstats goldens, multimodal plumbing."""
+LSH recall vs brute force, textstats goldens."""
 
 import hashlib
 import math
@@ -298,32 +298,6 @@ def test_char_fingerprints_deterministic(spark):
     assert fps[0] == fps[1]
     assert fps[0] != fps[2]
     assert fps[3] is not None  # short doc falls back to whole text
-
-
-def test_multimodal_plumbing(spark):
-    from terrier_spark.datapipe.multimodal import (
-        decode_features, sample_frames, synth_media,
-    )
-
-    media = synth_media(spark, n=12)
-    feats = decode_features(media).collect()
-    assert len(feats) == 12
-    assert all(len(r["feature"]) == 16 for r in feats)
-    # deterministic across runs
-    feats2 = decode_features(media).collect()
-    assert {r["media_id"]: r["feature"] for r in feats} == {
-        r["media_id"]: r["feature"] for r in feats2
-    }
-    frames = sample_frames(media.filter("kind = 'video'"), every_ms=1000)
-    fr = frames.collect()
-    assert len(fr) > 0 and all(len(r["frame"]) == 32 for r in fr)
-
-    # real decoder: sha-digest payloads are not images -> NULL features,
-    # rows kept (the curation convention), byte counts still real
-    real = decode_features(media, decoder="real").collect()
-    assert len(real) == 12
-    assert all(r["feature"] is None for r in real)
-    assert all(r["n_bytes"] > 0 for r in real)
 
 
 def test_ivf_cosine_recall(spark, emb_df):

@@ -68,6 +68,10 @@ def test_gate_query_matches_oracle(spark, sf_dir, duck, name):
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
+def test_every_gate_has_an_oracle():
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0

@@ -1,7 +1,7 @@
 """Pure-stdlib pixel codec tests: PNG/BMP/GIF round-trips covering every
 PNG filter type, palette paths, GIF LZW table growth + clears +
-interlace, BMP padding/orientation, the dispatch sniffing, and the real
-multimodal decode/resize kernels built on top."""
+interlace, BMP padding/orientation, the dispatch sniffing, GIF
+animation compositing and nearest-neighbour resize."""
 
 import struct
 import zlib
@@ -228,55 +228,6 @@ def test_resize_nearest_exact():
     np.testing.assert_array_equal(down, img[::2, ::2])
 
 
-# ------------------------------------------------- Spark-side real kernels
-
-def test_real_decode_features_spark(spark):
-    from terrier_spark.datapipe.imagemeta import synth_image_media
-    from terrier_spark.datapipe.multimodal import decode_features
-
-    media = synth_image_media(spark, n=16)
-    rows = {r["media_id"]: r for r in
-            decode_features(media, decoder="real").collect()}
-    assert len(rows) == 16
-    # every synth_image_media payload is header-only (junk stands in for
-    # the pixel chunks/scan) -> real decode yields NULL features for all
-    # four formats; this synth table tests header parsing, not pixels
-    for r in rows.values():
-        assert r["feature"] is None
-
-
-def test_real_pixel_media_features_spark(spark):
-    from terrier_spark.datapipe.imagemeta import synth_pixel_media
-    from terrier_spark.datapipe.multimodal import decode_features
-
-    media = synth_pixel_media(spark, n=12)
-    rows = {r["media_id"]: r for r in
-            decode_features(media, decoder="real").collect()}
-    assert len(rows) == 12
-    assert all(r["feature"] is not None for r in rows.values())
-    assert all(len(r["feature"]) == 16 for r in rows.values())
-    # deterministic across runs
-    rows2 = {r["media_id"]: r["feature"] for r in
-             decode_features(media, decoder="real").collect()}
-    assert {k: v["feature"] for k, v in rows.items()} == rows2
-
-
-def test_real_resize_spark(spark):
-    from terrier_spark.datapipe.imagemeta import synth_pixel_media
-    from terrier_spark.datapipe.multimodal import resize_images
-
-    media = synth_pixel_media(spark, n=9)
-    out = resize_images(media, 10, 8, decoder="real").collect()
-    assert all(r["width"] == 10 and r["height"] == 8 for r in out)
-    assert all(r["mime"] == "image/png" for r in out)
-    # resized payloads decode to the target shape with the expected
-    # nearest-neighbor values
-    for r in out:
-        arr, fmt = decode_image(bytes(r["payload"]))
-        assert fmt == "png"
-        assert arr.shape[:2] == (8, 10)
-
-
 # ------------------------------------------------------------ animated GIF
 
 def test_gif_animation_roundtrip():
@@ -328,33 +279,3 @@ def test_gif_animation_transparency_and_disposal():
     # after frame 1's disposal-2 the full region is cleared to 0; the
     # transparent 1x1 frame then shows the CLEARED canvas -> all zeros
     assert int(seq[1][1].sum()) == 0
-
-
-def test_sample_frames_real_spark(spark):
-    from terrier_spark.datapipe.imagemeta import (
-        synth_animation_frames,
-        synth_animation_media,
-    )
-    from terrier_spark.datapipe.multimodal import sample_frames
-
-    media = synth_animation_media(spark, n=6)
-    out = sample_frames(media, every_ms=70, decoder="real").collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    assert set(by_id) == set(range(6))
-    for i, rows in by_id.items():
-        frames, delays = synth_animation_frames(i)
-        total = sum(delays)
-        assert len(rows) == len(range(0, max(total, 1), 70))
-        # every emitted frame decodes to a canvas matching a source frame
-        for r in rows:
-            arr, fmt = decode_image(bytes(r["frame"]))
-            assert fmt == "png"
-            assert any(np.array_equal(arr[:, :, 0], f) for f in frames)
-
-    # non-GIF payloads explode to zero rows
-    from terrier_spark.datapipe.multimodal import synth_media
-
-    other = synth_media(spark, n=6).filter("kind = 'video'")
-    assert sample_frames(other, every_ms=500, decoder="real").count() == 0

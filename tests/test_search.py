@@ -2,6 +2,7 @@
 pure-Python oracle; pruned == unpruned; low-idf drop; tie-break pinning
 (FIXTURES.md §4-5)."""
 
+import importlib
 import random
 from dataclasses import replace
 
@@ -12,6 +13,9 @@ from terrier_spark.index.builder import build_index
 from terrier_spark.index.corpus import load_documents_corpus
 from terrier_spark.oracle import OracleIndex
 from terrier_spark.query.search import search
+
+# the module, not the package attribute `search` (the function) shadowing it
+search_mod = importlib.import_module("terrier_spark.query.search")
 
 
 def make_queries(oracle, n_per_bucket=3, seed=42):
@@ -104,22 +108,15 @@ def test_rank_identity_synth_corpus(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "eager_min,agg_max",
-    [(0, 32), (1_000_000, 32), (0, 0), (1_000_000, 0)],
-    ids=["eager_latency", "lazy_latency", "eager_batch", "lazy_batch"],
+    "eager_min", [0, 1_000_000], ids=["eager", "lazy"],
 )
-def test_pruned_equals_unpruned(spark, engine, eager_min, agg_max):
-    # agg_max=0 forces the BATCH path (per-posting decode -> JVM hash agg
-    # -> theta filter -> top-k window) even for this small query set, so
-    # the driver-side theta bound applied after the aggregation is
-    # exercised against the exhaustive plan too
+def test_pruned_equals_unpruned(spark, engine, eager_min):
     store, oracle = engine
     queries = make_queries(oracle, n_per_bucket=2, seed=7)
     a = (
         search(spark, store, queries,
                QueryConfig(k=20, prune=True, prune_min_postings=0, prune_min_buckets=0,
-                           prune_eager_min_queries=eager_min,
-                           agg_in_decode_max_queries=agg_max))
+                           prune_eager_min_queries=eager_min))
         .orderBy("qid", "rank").toPandas()
     )
     b = (
@@ -161,25 +158,59 @@ def test_k_limits_results(spark, engine):
     assert list(out.sort_values("rank")["rank"]) == list(range(len(out)))
 
 
-def test_chunked_batch_equals_unchunked(spark, engine):
+def test_chunked_batch_equals_unchunked(spark, engine, monkeypatch):
     """Bounded-memory chunking (batch_max_score_cells) must be
     result-invariant: queries never interact in scoring, so splitting a
-    batch into sequential jobs returns exactly the same rows."""
+    batch into sequential jobs returns exactly the same rows.  So must
+    the query-count split: a batch with more queries than the packed
+    aggregation key has qid codes runs as chunks of at most that many
+    queries, with no cell cap set, on both the raw-df and the
+    pruned-survivor branch (the limit is lowered to 2 here)."""
     store, oracle = engine
     queries = make_queries(oracle, n_per_bucket=2, seed=7)
+
+    def rows(qcfg):
+        return {
+            (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
+            for r in search(spark, store, queries, qcfg).collect()
+        }
+
     base = QueryConfig(k=20, ignore_low_idf=False)
-    whole = {
-        (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-        for r in search(spark, store, queries, base).collect()
-    }
+    whole = rows(base)
     # force several chunks: cap of 1 cell puts every query in its own
     # chunk (single-query chunks may exceed the cap, recursion stops)
-    chunked_cfg = replace(base, batch_max_score_cells=1.0)
-    chunked = {
-        (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-        for r in search(spark, store, queries, chunked_cfg).collect()
-    }
+    chunked = rows(replace(base, batch_max_score_cells=1.0))
     assert whole == chunked and whole
+
+    uncapped = replace(base, batch_max_score_cells=None,
+                       prune_min_postings=0, prune_min_buckets=0)
+    unsplit = {prune: rows(replace(uncapped, prune=prune))
+               for prune in (False, True)}
+    monkeypatch.setattr(search_mod, "_MAX_JOB_QUERIES", 2)
+    calls = []
+    real = search_mod.search_terms
+
+    def counting(spark_, store_, qterms, *args, **kwargs):
+        calls.append(qterms["qid"].nunique())
+        return real(spark_, store_, qterms, *args, **kwargs)
+
+    monkeypatch.setattr(search_mod, "search_terms", counting)
+    for prune in (False, True):
+        calls.clear()
+        split = rows(replace(uncapped, prune=prune))
+        assert split == unsplit[prune] and split, prune
+        # the outer call, then one recursion per chunk of <= 2 queries
+        assert len(calls) > 2 and max(calls[1:]) <= 2, (prune, calls)
+
+
+def test_too_many_docs_raises(spark, engine, monkeypatch):
+    """Docids at or past 2^43 would overflow the packed aggregation key:
+    search refuses the index instead of corrupting scores."""
+    store, oracle = engine
+    monkeypatch.setitem(store.manifest["stats"], "num_docs", 1 << 43)
+    with pytest.raises(ValueError, match=store.path):
+        search(spark, store, [("q", sorted(oracle.postings)[0])],
+               QueryConfig(k=5, ignore_low_idf=False))
 
 
 def test_survivor_chunked_batch_equals_unchunked(spark, engine):
