@@ -21,7 +21,8 @@ What it measures (all best-of-N warm batches, 900 topical queries):
                     much less -> evidence the win comes from bounds,
                     not overhead differences
 
-plus the pruned-bucket fraction (search stats_out counters), a
+plus the pruned-bucket fraction (the share of (query, bucket) groups
+the search kernel skipped, from its stats_out counters), a
 pruned == unpruned exact-row check on a query sample, and the docid-
 reordering compression experiment: postings_compact bytes under ingest
 order vs (repo, path) order on the same corpus.
@@ -266,8 +267,8 @@ def main() -> None:
             off = runs[f"{index_name}_k{k}_prune0"]["warm_sec_best"]
             report[f"{index_name}_k{k}_prune_speedup"] = round(off / on, 3)
 
-        # pruned-bucket fraction (untimed diagnostic pass, counters from
-        # the engine's own two-pass prune)
+        # pruned-bucket fraction (untimed diagnostic pass, the search
+        # kernel's own skip counters)
         from terrier_spark.query.search import search
 
         if do_fractions:

@@ -83,22 +83,6 @@ SQL_SAFE_PIPELINE = PipelineConfig(stem=False)
 
 
 @dataclass(frozen=True)
-class BM25Config:
-    """Terrier's BM25 variant (org/terrier/matching/models/BM25.java:43-74).
-
-    K     = k1*((1-b) + b*doclen/avgdl) + tf
-    score = tf*(k3+1)*qtf / ((k3+qtf)*K) * log2((N - Nt + 0.5)/(Nt + 0.5))
-
-    No (k1+1) numerator factor; log base 2
-    (WeightingModelLibrary.java:40-60).
-    """
-
-    k1: float = 1.2
-    k3: float = 8.0
-    b: float = 0.75
-
-
-@dataclass(frozen=True)
 class IndexConfig:
     pipeline: PipelineConfig = field(default_factory=PipelineConfig)
     # Posting-block chunk size, as the reference's chunked integer codec
@@ -123,7 +107,6 @@ class IndexConfig:
 
 @dataclass(frozen=True)
 class QueryConfig:
-    bm25: BM25Config = field(default_factory=BM25Config)
     # weighting model name from terrier_spark.query.models.MODELS (the
     # reference's trec.model property / WeightingModelFactory surface)
     model: str = "BM25"
@@ -133,8 +116,9 @@ class QueryConfig:
     # (org/terrier/matching/PostingListManager.java:217-219, default on in
     # this fork's version).
     ignore_low_idf: bool = True
-    # Block-max WAND-style pruning on/off; results must be identical either
-    # way (bound-safe pruning).
+    # Block-max pruning on/off: the decode kernel skips a (query, docid
+    # bucket) group whose score upper bound is below the query's running
+    # k-th best score.  Results are identical either way (bound-safe).
     prune: bool = True
     # Consume the exact per-block max-score metadata stored at compaction
     # time (index/maxscore.py) when present/valid — extends bound-safe
@@ -142,27 +126,6 @@ class QueryConfig:
     # for monotone ones.  Off -> only the analytic (max_tf, min_dl) /
     # field bounds are used.  Results are identical either way.
     use_exact_maxscore: bool = True
-    # Pruning pays only when there are enough candidate postings to skip:
-    # below this total (sum of query-term document frequencies) the
-    # two-pass bound computation costs more than the decode it avoids, so
-    # search falls back to the exhaustive plan.
-    prune_min_postings: int = 100_000
-    # ... and only when the corpus spans enough docid buckets for block
-    # granularity to matter: with ceil(num_docs / bucket_span) below
-    # this floor, pass 1 already decodes a large fraction of the corpus
-    # to bound theta and pass 2 has almost nothing left to skip, so the
-    # two-pass overhead is pure loss (measured 1.7-2.2x slower than the
-    # exhaustive plan on a 5-bucket corpus).  At production scale
-    # (10^6+ docs) any sane bucket_span clears this by orders of
-    # magnitude; tests that exercise the prune on tiny fixtures set 0.
-    prune_min_buckets: int = 16
-    # Below this many queries in a batch, the two-pass block-max prune
-    # keeps its survivor set lazy (folded into the main job) instead of
-    # eagerly materializing it: the eager path costs one extra Spark
-    # action (~0.3-0.7 s fixed overhead on this box), which doubles
-    # single-query latency while being a win amortized over a 900-query
-    # batch (where the persisted bucket-bound frame is reused).
-    prune_eager_min_queries: int = 64
     # Bounded-memory batch execution: when the estimated score-cell
     # count of a batch (sum over queries of their terms' document
     # frequencies = rows entering the aggregation) exceeds this cap,

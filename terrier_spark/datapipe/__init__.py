@@ -2,9 +2,7 @@
 deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard), similarity
 search (brute-force, LSH-bucketed and IVF cosine over embeddings), and
 text analysis (language ID, quality scores, token counts, fingerprints).
-The operators are text and embeddings only.  Two standalone byte codecs
-that no operator uses live beside them: `imagecodec` (PNG/BMP/GIF
-pixels) and `audiocodec` (WAV samples).
+The operators are text and embeddings only.
 
 These are the large-scale data-curation companions to the IR engine: the
 same tokenize/shingle primitives, expressed as declarative DataFrame

@@ -11,14 +11,14 @@ model's kernel at qtf=1 with the term's collection statistics, and
 stores `max over postings of clamp(unit_score, 0)` as a `max_score`
 array column aligned with the manifest's `maxscore_models` list.
 
-Query-time use (query/search.py::_prune_buckets): since qtf enters every
-reference model as a multiplicative factor with factor(1) == 1
-(ModelSpec.qtf_scale), the per-(query-term, block) upper bound is the
-pure Column expression
+Query-time use (query/search.py::_block_bounds, read by the search
+kernel's block skip): since qtf enters every reference model as a
+multiplicative factor with factor(1) == 1 (ModelSpec.qtf_scale), the
+per-(query-term, block) upper bound is
 
     block_ub = max_score[model_idx] * qtf_scale(qtf)
 
-— no UDF, no kernel evaluation, and valid for the non-monotone models
+— one multiply, no kernel evaluation, and valid for the non-monotone models
 (PL2, DPH, DLH, BB2, DFRee, ...) that the (max_tf, min_dl) bound cannot
 cover.  Blocks without the metadata (segments appended after the last
 compaction) get a +inf bound, i.e. are never pruned.

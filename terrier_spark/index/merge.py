@@ -38,9 +38,9 @@ def _rebase_blocks(blocks: pd.DataFrame, offset: int, span: int,
                    block_size: int, with_pos: bool, nf: int) -> pd.DataFrame:
     """Shift every block's docids by `offset`.  offset is rarely a
     multiple of span, so a rebased block can STRADDLE a bucket boundary.
-    Buckets must partition docids identically across terms (block-max
-    pruning sums per-term bounds per bucket and drops whole buckets —
-    query/search.py::_prune_buckets), so each block goes back through the
+    Buckets must partition docids identically across terms (the search
+    kernel sums per-term bounds per bucket and skips whole buckets —
+    query/search.py::_search_kernel), so each block goes back through the
     block encoder, which cuts it at every new boundary."""
     rows = []
     for row in blocks.itertuples():

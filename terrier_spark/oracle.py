@@ -17,6 +17,17 @@ from typing import Dict, List, Sequence, Tuple
 from terrier_spark.config import PipelineConfig, QueryConfig
 from terrier_spark.text.pipeline import make_pipeline
 
+# Terrier's BM25 parameters (matching/models/BM25.java:43-74), the
+# defaults of the engine's models.bm25 kernel
+_K1, _K3, _B = 1.2, 8.0, 0.75
+
+
+def _bm25(tf: int, dl: int, avgdl: float, qtf: float, idf: float) -> float:
+    """score = tf*(k3+1)*qtf / ((k3+qtf)*K) * idf with
+    K = k1*((1-b) + b*dl/avgdl) + tf: no (k1+1) factor, log2 idf."""
+    K = _K1 * ((1 - _B) + _B * dl / avgdl) + tf
+    return (tf * (_K3 + 1.0) * qtf / ((_K3 + qtf) * K)) * idf
+
 
 class OracleFieldIndex:
     """Field-aware oracle: per-doc per-field token streams; BM25F scoring
@@ -206,7 +217,6 @@ class OracleIndex:
         their formulas are pinned separately by value goldens in
         tests/test_models.py."""
         qcfg = qcfg or QueryConfig()
-        bm25 = qcfg.bm25
         pipe = make_pipeline(self.pipeline)
         qcounts = Counter(pipe.query_terms(query))
         acc: Dict[int, float] = {}
@@ -220,8 +230,7 @@ class OracleIndex:
             if qcfg.model == "BM25":
                 idf = math.log2((self.num_docs - nt + 0.5) / (nt + 0.5))
                 for docid, tf in plist.items():
-                    K = bm25.k1 * ((1 - bm25.b) + bm25.b * self.doclen[docid] / self.avgdl) + tf
-                    s = (tf * (bm25.k3 + 1.0) * qtf / ((bm25.k3 + qtf) * K)) * idf
+                    s = _bm25(tf, self.doclen[docid], self.avgdl, qtf, idf)
                     acc[docid] = acc.get(docid, 0.0) + s
             else:
                 from terrier_spark.query.models import score_scalar
@@ -244,7 +253,6 @@ class OracleIndex:
     def _score_terms(self, weighted: Dict[str, float],
                      qcfg: QueryConfig) -> List[Tuple[int, float]]:
         acc: Dict[int, float] = {}
-        bm25 = qcfg.bm25
         for term, qtf in weighted.items():
             plist = self.postings.get(term)
             if not plist:
@@ -254,8 +262,7 @@ class OracleIndex:
             nt = len(plist)
             idf = math.log2((self.num_docs - nt + 0.5) / (nt + 0.5))
             for docid, tf in plist.items():
-                K = bm25.k1 * ((1 - bm25.b) + bm25.b * self.doclen[docid] / self.avgdl) + tf
-                s = (tf * (bm25.k3 + 1.0) * qtf / ((bm25.k3 + qtf) * K)) * idf
+                s = _bm25(tf, self.doclen[docid], self.avgdl, qtf, idf)
                 acc[docid] = acc.get(docid, 0.0) + s
         return sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[: qcfg.k]
 

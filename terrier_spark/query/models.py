@@ -627,8 +627,8 @@ _SINGLE_FIELD_NAME = re.compile(
 #     score(posting, qtf) = qtf_scale(qtf) * unit_score(posting)
 #                        <= qtf_scale(qtf) * stored_max.
 # The lambdas below use only overloaded arithmetic so the SAME callable
-# works on numpy arrays and on Spark Columns (the exact-maxscore pruning
-# path evaluates it as a pure Column expression — no UDF).
+# works on numpy arrays (the search kernel's block bounds) and on Spark
+# Columns.
 
 def _qtf_linear(q):
     return q

@@ -210,22 +210,32 @@ def test_single_field_entry_stats_restricted(spark, engine):
         assert g == pytest.approx(s, abs=1e-6)
 
 
-@pytest.mark.parametrize("eager_min", [0, 1_000_000],
+# The ids name the survivor modes of an earlier two-pass prune plan; they
+# are kept so the test's history stays continuous.  The axis is now the
+# Arrow batch size, as in test_search.test_pruned_equals_unpruned.
+@pytest.mark.parametrize("batch_rows", [None, 2],
                          ids=["eager_survivors", "lazy_survivors"])
-def test_bm25f_pruned_equals_unpruned(spark, engine, eager_min):
+def test_bm25f_pruned_equals_unpruned(spark, engine, batch_rows):
     """Field-aware block-max pruning (per-block per-field max_ftf/min_fln
     bounds) must be invisible in results — the BM25F clone of
-    test_search.test_pruned_equals_unpruned."""
+    test_search.test_pruned_equals_unpruned.  Two-row Arrow batches make
+    (qid, bucket) groups straddle the kernel's input batches."""
     store, oracle, _ = engine
     queries = [("q1", "sym1 py sym7"), ("q2", "src sym0 class"),
                ("q3", "sym12 sym3 java")]
     base = dict(model="BM25F", ignore_low_idf=False, k=15,
                 field_weights=(2.0, 1.0), field_c=(0.5, 0.9))
-    pruned = search(
-        spark, store, queries,
-        QueryConfig(prune=True, prune_min_postings=0, prune_min_buckets=0,
-                    prune_eager_min_queries=eager_min, **base),
-    ).orderBy("qid", "rank").toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        pruned = search(
+            spark, store, queries,
+            QueryConfig(prune=True, **base),
+        ).orderBy("qid", "rank").toPandas()
+    finally:
+        spark.conf.set(key, saved)
     unpruned = search(
         spark, store, queries, QueryConfig(prune=False, **base),
     ).orderBy("qid", "rank").toPandas()

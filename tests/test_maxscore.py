@@ -135,24 +135,30 @@ def test_registration(compacted):
 
 @pytest.mark.parametrize("model", NONMONOTONE)
 def test_pruned_equals_unpruned_nonmonotone(spark, compacted, model):
+    """At k=1 the running threshold is the best score so far, so the
+    kernel's block skip fires on this fixture (and an unsafe group bound
+    would change results)."""
     store, oracle = compacted
     assert store.maxscore_index(model) is not None
     queries = make_queries(oracle)
-    a = (
-        search(spark, store, queries,
-               QueryConfig(model=model, k=20, prune=True,
-                           prune_min_postings=0, prune_min_buckets=0, prune_eager_min_queries=1))
-        .orderBy("qid", "rank").toPandas()
-    )
-    b = (
-        search(spark, store, queries,
-               QueryConfig(model=model, k=20, prune=False))
-        .orderBy("qid", "rank").toPandas()
-    )
-    assert list(a["qid"]) == list(b["qid"])
-    assert list(a["docid"]) == list(b["docid"])
-    for x, y in zip(a["score"], b["score"]):
-        assert x == pytest.approx(y, abs=1e-9)
+    for k in (20, 1):
+        stats: dict = {}
+        a = (
+            search(spark, store, queries,
+                   QueryConfig(model=model, k=k, prune=True),
+                   stats_out=stats)
+            .orderBy("qid", "rank").toPandas()
+        )
+        b = (
+            search(spark, store, queries,
+                   QueryConfig(model=model, k=k, prune=False))
+            .orderBy("qid", "rank").toPandas()
+        )
+        assert list(a["qid"]) == list(b["qid"]), k
+        assert list(a["docid"]) == list(b["docid"]), k
+        for x, y in zip(a["score"], b["score"]):
+            assert x == pytest.approx(y, abs=1e-9)
+    assert stats["pruned_fraction"] > 0, stats
 
 
 def test_nan_contributions_dropped(spark, compacted):
@@ -201,8 +207,7 @@ def test_pruned_equals_unpruned_fractional_qtf(spark, compacted):
     for model in ("PL2", "DPH", "BM25"):
         a = search_terms(
             spark, store, qterms,
-            QueryConfig(model=model, k=15, prune=True, prune_min_postings=0, prune_min_buckets=0,
-                        prune_eager_min_queries=1),
+            QueryConfig(model=model, k=15, prune=True),
         ).orderBy("qid", "rank").toPandas()
         b = search_terms(
             spark, store, qterms, QueryConfig(model=model, k=15, prune=False)
@@ -215,7 +220,7 @@ def test_pruned_equals_unpruned_fractional_qtf(spark, compacted):
 def test_pl2_pruned_rank_identity_vs_oracle(spark, compacted):
     store, oracle = compacted
     queries = make_queries(oracle, seed=7, n=9)
-    qcfg = QueryConfig(model="PL2", k=25, prune=True, prune_min_postings=0, prune_min_buckets=0)
+    qcfg = QueryConfig(model="PL2", k=25, prune=True)
     got = (
         search(spark, store, queries, qcfg).orderBy("qid", "rank").toPandas()
     )
@@ -248,8 +253,8 @@ def test_staleness_guard(compacted):
 
 def test_prune_actually_prunes(spark, compacted):
     """The bound must do work, not just be valid: on a skewed corpus a
-    1-term PL2 query's survivor set should be a strict subset of the
-    term's buckets (otherwise this feature is a no-op)."""
+    1-term PL2 query at k=1 must skip some of the term's buckets
+    (otherwise this feature is a no-op), and skip none unpruned."""
     from pyspark.sql import functions as F
 
     store, oracle = compacted
@@ -267,12 +272,18 @@ def test_prune_actually_prunes(spark, compacted):
     if n_buckets < 4:
         pytest.skip("corpus too small to observe pruning")
     # k=1 makes theta the max score -> most buckets should fall
-    qcfg = QueryConfig(model="PL2", k=1, prune=True, prune_min_postings=0, prune_min_buckets=0,
-                       prune_eager_min_queries=1)
-    res = search(spark, store, [("q", term)], qcfg).collect()
+    stats: dict = {}
+    res = search(spark, store, [("q", term)],
+                 QueryConfig(model="PL2", k=1, prune=True),
+                 stats_out=stats).collect()
     assert len(res) == 1
+    assert stats["candidate_buckets"] == n_buckets
+    assert stats["pruned_fraction"] > 0, stats
+    off: dict = {}
     unpruned = search(spark, store, [("q", term)],
-                      QueryConfig(model="PL2", k=1, prune=False)).collect()
+                      QueryConfig(model="PL2", k=1, prune=False),
+                      stats_out=off).collect()
+    assert off["pruned_fraction"] == 0, off
     assert res[0]["docid"] == unpruned[0]["docid"]
     assert res[0]["score"] == pytest.approx(unpruned[0]["score"], abs=1e-9)
 
@@ -301,8 +312,7 @@ def test_field_models_pruned_equals_unpruned(spark, compacted_fields, model):
                ("2", terms[0] + " " + terms[0])]
     a = (
         search(spark, store, queries,
-               QueryConfig(model=model, k=20, prune=True,
-                           prune_min_postings=0, prune_min_buckets=0, prune_eager_min_queries=1))
+               QueryConfig(model=model, k=20, prune=True))
         .orderBy("qid", "rank").toPandas()
     )
     b = (
@@ -322,7 +332,7 @@ def test_field_models_nondefault_params_fall_back(spark, compacted_fields):
     not consume them (and must still be correct, pruned or not)."""
     store, pdf = compacted_fields
     queries = [("0", "sym1 if return")]
-    qcfg = QueryConfig(model="PL2F", k=10, prune=True, prune_min_postings=0, prune_min_buckets=0,
+    qcfg = QueryConfig(model="PL2F", k=10, prune=True,
                        field_weights=(2.0, 1.0), field_c=(1.0, 0.5))
     a = search(spark, store, queries, qcfg).orderBy("rank").toPandas()
     b = search(

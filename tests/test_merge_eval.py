@@ -67,7 +67,7 @@ def test_merge_bucket_invariant_and_pruning(spark, tmp_path):
                         bucket_span=span)
 
     # 1. bucket invariant: every docid of every block is in the labeled
-    # bucket (this is what _prune_buckets assumes)
+    # bucket (the search kernel's block skip and score combine assume it)
     blocks = merged.postings(spark).collect()
     whole_pos = {}
     straddle_buckets = set()
@@ -99,7 +99,7 @@ def test_merge_bucket_invariant_and_pruning(spark, tmp_path):
     q = [("q", " ".join(usable[:4]))]
     pruned = search(
         spark, merged, q,
-        QueryConfig(k=15, prune=True, prune_min_postings=1, prune_min_buckets=0),
+        QueryConfig(k=15, prune=True),
     ).orderBy("rank").collect()
     full = search(
         spark, merged, q, QueryConfig(k=15, prune=False)

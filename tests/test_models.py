@@ -134,7 +134,7 @@ def test_rank_identity_per_model(spark, engine, model):
         ("q2", "sym0 sym2 sym3 return"),
         ("q3", "sym12 sym40 while def"),
     ]
-    qcfg = QueryConfig(k=25, model=model, prune_min_postings=0)
+    qcfg = QueryConfig(k=25, model=model)
     got = search(spark, store, queries, qcfg).orderBy("qid", "rank").toPandas()
     by_qid = {qid: grp for qid, grp in got.groupby("qid")}
     nonempty = 0
