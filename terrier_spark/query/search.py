@@ -7,16 +7,16 @@ becomes one declarative plan Catalyst owns around one vectorized kernel:
     scan postings (term-pruned parquet scan)
       -> broadcast-join per-(qid,term) stats          [lexicon lookup,
          PostingListManager.java:213; low-idf drop :217-219]
-      -> repartition(qid, bucket), sorted by (qid, bucket)
-                                                       [co-locate a doc's
-         postings of every query term]
+      -> repartition(qid), sorted by (qid, bucket)    [one query's blocks
+         in one partition, as one DAAT walk holds one query]
       -> Python kernel over Arrow batches, per (qid, bucket) group:
            skip it when its block-max bound < the qid's running k-th
            best score                                  [WAND.java:190-289,
            Full.java:137-148 heap threshold, at block granularity]
            else VByte decode + numpy model kernel + per-doc score
-           combine, merged into the qid's running top-k
-      -> per-qid top-k, ties: score desc, docid asc    [pinned — reference
+           combine, merged into the qid's running top-k; that top-k is
+           the query's result, ranked score desc, docid asc
+                                                       [pinned — reference
          ties are unstable, daat/CandidateResult.java:52-62]
 
 All queries of a batch run as ONE Spark job (the fork's 900-query
@@ -198,11 +198,11 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
 
 
 class _TopK:
-    """One qid's running top-k in a kernel partition (score desc, docid
-    asc).  Candidates collect until there are 2k, then are cut back to
-    the k best, so each costs O(1) amortized.  `theta` is the k-th best
-    score seen so far, -inf until k docs have been seen; a doc below it
-    can never make this partition's top k."""
+    """One qid's running top-k (score desc, docid asc).  Candidates
+    collect until there are 2k, then are cut back to the k best, so each
+    costs O(1) amortized.  `theta` is the k-th best score seen so far,
+    -inf until k docs have been seen; a doc below it can never make the
+    query's top k."""
 
     def __init__(self, k: int):
         self.k = k
@@ -248,24 +248,26 @@ def _group_starts(pdf: pd.DataFrame) -> np.ndarray:
 
 
 def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
-                   k: int, bounds, counters):
+                   k: int, bounds, counters, qid_labels):
     """Partition kernel: a partition's block rows, sorted by (qid,
-    bucket) -> at most k (qid, docid, score) rows per qid, the qid's best
-    in this partition.  field_params = (weights, cs, avg_flens) for field
-    models; `bounds` is the _block_bounds function (None: never skip);
-    `counters` = (groups seen, groups decoded) accumulators or None.
+    bucket) -> each of its qids' final top k as (qid, rank, docid,
+    score) rows, rank 0-based by score desc, docid asc.  field_params =
+    (weights, cs, avg_flens) for field models; `bounds` is the
+    _block_bounds function (None: never skip); `counters` = (groups
+    seen, groups decoded) accumulators or None; `qid_labels[code]` is
+    the label of int qid code `code`.
 
-    The input is hash-partitioned by (qid, bucket), and the bucket
-    invariant (bucket labels partition docids identically across every
-    term) puts all of a doc's postings for one query in one (qid,
-    bucket) group, so a group's per-doc sums are FINAL document scores.
-    Before decoding a group the kernel compares its upper bound — per
-    term the largest block bound in the group, summed over the terms —
-    with the qid's running k-th best score, and skips the group when the
-    bound is below it, as the reference's WAND/Maxscore skip postings
-    under the heap threshold.  A skipped doc scores below k docs of this
-    partition, so the per-partition top-k cut would have dropped it
-    anyway: results equal the exhaustive plan's."""
+    The input is hash-partitioned by qid, so a partition holds every
+    block of each of its queries.  The bucket invariant (bucket labels
+    partition docids identically across every term) puts all of a doc's
+    postings for one query in one (qid, bucket) group, so a group's
+    per-doc sums are FINAL document scores.  Before decoding a group the
+    kernel compares its upper bound — per term the largest block bound
+    in the group, summed over the terms — with the qid's running k-th
+    best score, and skips the group when the bound is below it, as the
+    reference's WAND/Maxscore skip postings under the heap threshold.  A
+    skipped doc scores below k docs of its query, so the top-k cut would
+    have dropped it anyway: results equal the exhaustive plan's."""
     kernel = spec.kernel
     needs_fields = spec.needs_fields
 
@@ -357,38 +359,33 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
             counters[0].add(seen)
             counters[1].add(decoded)
         if pools:
-            best = [(q, *pool.best()) for q, pool in pools.items()]
+            best = []
+            for pool in pools.values():
+                ids, scores = pool.best()
+                order = np.lexsort((ids, -scores))
+                best.append((ids[order], scores[order]))
+            sizes = [ids.size for ids, _ in best]
             yield pd.DataFrame({
-                "qid": np.concatenate([
-                    np.full(ids.size, q, dtype=np.int32)
-                    for q, ids, _ in best
-                ]),
-                "docid": np.concatenate([ids for _, ids, _ in best]),
-                "score": np.concatenate([s for _, _, s in best]),
+                "qid": np.repeat(
+                    np.array([qid_labels[q] for q in pools], dtype=object),
+                    sizes),
+                "rank": np.concatenate(
+                    [np.arange(n, dtype=np.int32) for n in sizes]),
+                "docid": np.concatenate([ids for ids, _ in best]),
+                "score": np.concatenate([s for _, s in best]),
             })
 
     return run
 
 
-_TOPK_WINDOW = None
-_TOPK_WINDOW_APP = None
-
-
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    # the spec is constant; building it costs ~5 py4j round trips, which
-    # shows up at interactive single-query latency.  Keyed on the
-    # applicationId (not just cached forever): a WindowSpec holds JVM
-    # object references, and after spark.stop() a new session must not
-    # receive a spec bound to the dead one.
-    global _TOPK_WINDOW, _TOPK_WINDOW_APP
-    app = scored.sparkSession.sparkContext.applicationId
-    if _TOPK_WINDOW is None or _TOPK_WINDOW_APP != app:
-        _TOPK_WINDOW = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("docid").asc()
-        )
-        _TOPK_WINDOW_APP = app
+def _topk(df: DataFrame, k: int) -> DataFrame:
+    """The k best rows per qid of a re-ranked (qid, docid, score) frame,
+    with a 0-based rank: score desc, docid asc."""
+    window = Window.partitionBy("qid").orderBy(
+        F.col("score").desc(), F.col("docid").asc()
+    )
     return (
-        scored.withColumn("rank", F.row_number().over(_TOPK_WINDOW) - F.lit(1))
+        df.withColumn("rank", F.row_number().over(window) - F.lit(1))
         .filter(F.col("rank") < k)
     )
 
@@ -463,10 +460,9 @@ def search_terms(
     # Integer qid codes through the whole decode exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
     # profile, BASELINE.md), and a string qid there costs object-dtype
-    # columns in every Arrow batch plus string hashing in the exchange
-    # and top-k window.  Map each label to a dense int32 at
-    # plan-build time, run everything on the code, and join the labels
-    # back AFTER the top-k cut (<= k rows per query, broadcast join).
+    # columns in every Arrow batch plus string hashing in the exchange.
+    # Map each label to a dense int32 at plan-build time; the kernel
+    # writes the label back onto its <= k result rows per query.
     qid_labels = sorted(set(qstats["qid"]))
     qid_code_of = {q: i for i, q in enumerate(qid_labels)}
     qstats = qstats.assign(
@@ -510,54 +506,29 @@ def search_terms(
     if stats_out is not None:
         sc = spark.sparkContext
         counters = (sc.accumulator(0), sc.accumulator(0))
-    # Co-locate every term's blocks for the same (qid, bucket) and sort
-    # each partition by (qid, bucket): the kernel then sees every group
-    # as one contiguous run, scores it to FINAL document scores or skips
-    # it on its bound, and leaves <= k rows per (partition, qid) for the
-    # global top-k window.  The repartition exchanges compressed BLOCK
-    # rows (orders of magnitude smaller than posting rows) and fixes the
-    # few-scan-partitions serialization a small postings dataset would
-    # impose.
-    #
-    # Width the exchange to the work, not the box: a single interactive
-    # query over a few dozen compressed blocks gains nothing from 32
-    # near-empty decode tasks but pays their launch + Python-worker
-    # round-trips.  sum(nt)/block_size lower-bounds the block count; ~8
-    # blocks per decode task keeps the kernel's numpy batches fat while
-    # capping task-count overhead.
-    est_blocks = per_qid.sum() / max(store.block_size, 1) + len(terms)
-    width = int(min(spark.sparkContext.defaultParallelism,
-                    max(4, est_blocks // 8 + 1)))
-    scored = (
+    # Hash every block of a query to one partition, sorted by (qid,
+    # bucket): the kernel then sees every group as one contiguous run,
+    # scores it to FINAL document scores or skips it against the
+    # query's one running k-th best score, and its top k is the query's
+    # result — no second exchange merges per-partition heaps.  The
+    # exchange moves compressed BLOCK rows (orders of magnitude smaller
+    # than posting rows).  A query's decode runs in one task, as the
+    # reference's DAAT runs one query on one thread; a batch spreads its
+    # queries over the cores.
+    width = min(spark.sparkContext.defaultParallelism, len(qid_labels))
+    out = (
         joined.select(*sel_cols, "bucket", *bound_cols)
-        .repartition(width, "qid", "bucket")
+        .repartition(width, "qid")
         .sortWithinPartitions("qid", "bucket")
         .mapInPandas(
             _search_kernel(spec, N, avgdl, T_eff, field_params, qcfg.k,
-                           bounds, counters),
-            schema="qid int, docid long, score double",
+                           bounds, counters, qid_labels),
+            schema="qid string, rank int, docid long, score double",
         )
     )
     if stats_out is not None:
-        scored.count()
+        out.count()
         _record_skips(stats_out, counters[0].value, counters[1].value)
-    # label join AFTER the top-k cut: <= k rows per query reach it, so the
-    # string qids never touch the decode exchange or the top-k sort —
-    # only this broadcast join against the tiny label map
-    label_df = spark.createDataFrame(
-        pd.DataFrame({
-            "qid": np.arange(len(qid_labels), dtype=np.int32),
-            "qid_label": qid_labels,
-        }),
-        schema="qid int, qid_label string",
-    )
-    out = (
-        _topk(scored, qcfg.k)
-        .join(F.broadcast(label_df), "qid")
-        .select(
-            F.col("qid_label").alias("qid"), "rank", "docid", "score"
-        )
-    )
     if with_meta:
         meta = store.meta(spark).select("docid", "docno", "sha256")
         out = out.join(meta, "docid").select(

@@ -288,6 +288,35 @@ def test_prune_actually_prunes(spark, compacted):
     assert res[0]["score"] == pytest.approx(unpruned[0]["score"], abs=1e-9)
 
 
+def test_one_threshold_per_query(spark, compacted):
+    """A query's block skip must not depend on which other queries share
+    its batch: each query prunes against its own one running k-th best
+    score, so a batch decodes exactly the groups its queries decode when
+    each runs alone.  (A plan that splits one query's blocks across
+    partitions prunes each part against a weaker heap and decodes
+    more.)"""
+    from pyspark.sql import functions as F
+
+    store, _ = compacted
+    # 1-term queries on mid-frequency terms at k=1: several buckets each,
+    # and a high threshold, so the skip has work to do
+    lex = (
+        store.lexicon(spark).filter(F.col("nt") > 30)
+        .orderBy("nt", "term").limit(4).collect()
+    )
+    queries = [(str(i), r["term"]) for i, r in enumerate(lex)]
+    qcfg = QueryConfig(model="PL2", k=1)
+    batch: dict = {}
+    search(spark, store, queries, qcfg, stats_out=batch)
+    assert batch["pruned_fraction"] > 0, batch
+    alone = 0
+    for q in queries:
+        one: dict = {}
+        search(spark, store, [q], qcfg, stats_out=one)
+        alone += one["surviving_buckets"]
+    assert batch["surviving_buckets"] == alone, (batch, alone)
+
+
 # ---------------------------------------------------------------------------
 # field models
 

@@ -213,6 +213,38 @@ def test_scan_pushdown_plan_shape(spark, engine):
                     "max_score", "n", "ftf", "fln", "max_ftf_f",
                     "min_fln_f"}, f"over-wide postings scan: {cols}"
 
+    # one query, one heap: a single shuffle puts each query's blocks in
+    # one partition and the kernel's top k is final — no second exchange
+    # or window merges per-partition heaps
+    def final_plan(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    sc = spark.sparkContext
+    group = "test-scan-pushdown-plan-shape"
+    sc.setJobGroup(group, "single query", False)
+    try:
+        res = search(spark, store, [("q", f"{vocab[0]} {vocab[1]}")],
+                     QueryConfig(k=5, ignore_low_idf=False))
+        res.toPandas()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, f"{len(jobs)} Spark jobs for one query"
+    # one query -> one partition; two -> hashed on qid alone
+    assert re.findall(r"\bExchange (\w+)", final_plan(res)) == [
+        "SinglePartition"], final_plan(res)
+    res = search(spark, store, [("q", vocab[0]), ("r", vocab[1])],
+                 QueryConfig(k=5, ignore_low_idf=False))
+    res.toPandas()
+    plan = final_plan(res)
+    shuffles = re.findall(r"\bExchange (\w+)\(([^)]*)\)", plan)
+    assert len(shuffles) == 1, plan
+    assert shuffles[0][0] == "hashpartitioning", plan
+    assert re.fullmatch(r"qid#\d+, 2", shuffles[0][1]), plan
+    assert "Window" not in plan, plan
+
 
 def test_session_tuning_check(spark, caplog):
     """The once-per-app session-tuning probe: a tuned session (the test
