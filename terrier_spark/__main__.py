@@ -78,7 +78,7 @@ def cmd_index(args) -> None:
         field_cols=field_cols,
     )
     store = build_index(spark, corpus, args.out, cfg)
-    print(json.dumps(store.manifest["metrics"]))
+    print(json.dumps(store.build_metrics))
 
 
 def cmd_search(args) -> None:

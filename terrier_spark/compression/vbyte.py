@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_MASKS = None
-
 
 def vbyte_encode(values: np.ndarray) -> bytes:
     """Encode a uint64 array to VByte bytes (vectorized)."""
@@ -55,28 +53,75 @@ def vbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def vbyte_decode(data: bytes, count: int | None = None) -> np.ndarray:
-    """Decode VByte bytes back to a uint64 array (vectorized)."""
-    if not data:
-        return np.empty(0, dtype=np.uint64)
-    raw = np.frombuffer(data, dtype=np.uint8)
-    is_cont = (raw & 0x80) != 0
-    # terminal bytes mark value boundaries
-    term_idx = np.flatnonzero(~is_cont)
-    n = term_idx.size
-    payload = (raw & 0x7F).astype(np.uint64)
-    # group id for each byte = searchsorted into terminal positions
-    group = np.searchsorted(term_idx, np.arange(raw.size), side="left")
-    # position of byte within its group (7-bit shift amount)
-    starts = np.empty(n, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = term_idx[:-1] + 1
-    shift = (np.arange(raw.size) - starts[group]).astype(np.uint64) * np.uint64(7)
-    vals = np.zeros(n, dtype=np.uint64)
-    np.add.at(vals, group, payload << shift)
-    if count is not None and n != count:
-        raise ValueError(f"decoded {n} values, expected {count}")
+def _decode_sections(raw: np.ndarray, lengths, counts) -> np.ndarray:
+    """The one VByte decoder.  `raw` (uint8) is back-to-back sections,
+    section i `lengths[i]` bytes long and holding exactly `counts[i]`
+    values -> every section's values, concatenated (uint64), in one
+    vectorized pass.  ValueError when a section holds another count of
+    values or ends inside a value."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    last = raw < 0x80  # the final byte of each value
+    # done[i] = whole values in raw[:i]
+    done = np.zeros(raw.size + 1,
+                    dtype=np.int64 if raw.size >> 31 else np.int32)
+    np.cumsum(last, out=done[1:])
+    ends = np.cumsum(lengths)
+    got = done[ends] - done[ends - lengths]
+    ok = got == counts
+    if raw.size:
+        ok &= (lengths == 0) | last[ends - 1]  # no value cut at the end
+    if np.count_nonzero(ok) < ok.size:
+        i = int(np.argmin(ok))
+        raise ValueError(
+            f"VByte section {i}: {int(lengths[i])} bytes hold "
+            f"{int(got[i])} whole values, expected {int(counts[i])}"
+        )
+    # a value's final byte is its highest 7-bit group; the bytes before
+    # it (high bit set) are rare, so only those take extra passes
+    vals = raw[last].astype(np.uint64)
+    if vals.size < raw.size:
+        more = (~last).nonzero()[0]
+        value = more - np.arange(more.size)  # values that end before it
+        new = np.empty(more.size, dtype=bool)
+        new[0] = True
+        new[1:] = value[1:] != value[:-1]
+        head = new.nonzero()[0]
+        width = np.empty_like(head)  # low groups of each long value
+        width[:-1] = head[1:] - head[:-1]
+        width[-1] = more.size - head[-1]
+        if np.count_nonzero(width > 9):
+            raise ValueError("VByte value longer than 10 bytes")
+        shift = (more - np.repeat(more[head], width)) * 7
+        low = np.bitwise_or.reduceat(
+            (raw[more] & 0x7F).astype(np.uint64) << shift.astype(np.uint64),
+            head)
+        at = value[head]
+        vals[at] = (vals[at] << (width * 7).astype(np.uint64)) | low
     return vals
+
+
+def _concat(parts) -> tuple[np.ndarray, np.ndarray]:
+    """-> (the parts' bytes joined as uint8, each part's byte length)."""
+    sizes = np.fromiter(map(len, parts), dtype=np.int64, count=len(parts))
+    return np.frombuffer(b"".join(parts), dtype=np.uint8), sizes
+
+
+def vbyte_decode(data: bytes, count: int | None = None) -> np.ndarray:
+    """Decode VByte bytes back to a uint64 array (vectorized); with
+    `count`, ValueError unless the bytes hold exactly that many values."""
+    raw = np.frombuffer(data or b"", dtype=np.uint8)
+    if count is None:
+        count = np.count_nonzero(raw < 0x80)
+    return _decode_sections(raw, [raw.size], [count])
+
+
+def vbyte_decode_parts(parts, counts) -> np.ndarray:
+    """Decode a sequence of VByte byte strings, part i holding exactly
+    `counts[i]` values, in one pass -> their values concatenated; a part
+    holding another count raises ValueError."""
+    raw, sizes = _concat(parts)
+    return _decode_sections(raw, sizes, counts)
 
 
 def encode_posting_block(docids: np.ndarray, tfs: np.ndarray) -> bytes:
@@ -118,19 +163,52 @@ def encode_scoring_block(docids: np.ndarray, tfs: np.ndarray,
     return header + id_bytes + tf_bytes + dl_bytes
 
 
+_HEADER = 12  # uint32 (n, gap bytes, tf bytes) of a scoring block
+
+
+def decode_scoring_blocks(blocks) -> tuple[np.ndarray, np.ndarray,
+                                          np.ndarray, np.ndarray]:
+    """Decode a sequence of scoring blocks in one vectorized pass ->
+    (docids int64, tfs int64, doclens int64, postings per block int64),
+    the postings of all blocks concatenated in block order.  An empty
+    block holds no postings.  ValueError when a block is cut short or a
+    gap, tf or doclen section does not hold exactly the header's n
+    values."""
+    raw, sizes = _concat(blocks)
+    full = sizes > 0
+    if np.count_nonzero(sizes[full] < _HEADER):
+        raise ValueError("scoring block shorter than its header")
+    hdr_at = ((np.cumsum(sizes) - sizes)[full, None]
+              + np.arange(_HEADER)).ravel()
+    hdr = np.zeros((sizes.size, 3), dtype=np.int64)
+    hdr[full] = raw[hdr_at].view(np.uint32).reshape(-1, 3)
+    n = hdr[:, 0]
+    # each block's gap, tf and doclen sections, back to back
+    lengths = np.empty_like(hdr)
+    lengths[:, :2] = hdr[:, 1:]
+    lengths[:, 2] = sizes - _HEADER * full - hdr[:, 1] - hdr[:, 2]
+    if np.count_nonzero(lengths < 0):
+        raise ValueError("scoring block shorter than its section lengths")
+    payload = np.ones(raw.size, dtype=bool)
+    payload[hdr_at] = False
+    counts = np.repeat(n, 3)
+    vals = _decode_sections(raw[payload], lengths.ravel(), counts)
+    kind = np.empty((sizes.size, 3), dtype=np.int8)
+    kind[:] = (0, 1, 2)
+    kind = np.repeat(kind.ravel(), counts)
+    # docids: per-block prefix sums of the gaps (first gap = first docid
+    # + 1); uint64 wraps, so the difference is exact for docids < 2^63
+    run = np.cumsum(vals[kind == 0])
+    base = np.concatenate((np.zeros(1, np.uint64), run))[np.cumsum(n) - n]
+    ids = (run - np.repeat(base, n)).astype(np.int64) - 1
+    return (ids, vals[kind == 1].astype(np.int64),
+            vals[kind == 2].astype(np.int64), n)
+
+
 def decode_scoring_block(block: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """-> (docids int64 ascending, tfs int64, doclens int64)."""
-    empty = np.empty(0, dtype=np.int64)
-    if not block:
-        return empty, empty, empty
-    header = np.frombuffer(block[:12], dtype=np.uint32)
-    n, id_len, tf_len = int(header[0]), int(header[1]), int(header[2])
-    o = 12
-    gaps = vbyte_decode(block[o : o + id_len], n)
-    tfs = vbyte_decode(block[o + id_len : o + id_len + tf_len], n)
-    dls = vbyte_decode(block[o + id_len + tf_len :], n)
-    ids = np.cumsum(gaps.astype(np.int64)) - 1
-    return ids, tfs.astype(np.int64), dls.astype(np.int64)
+    ids, tfs, dls, _ = decode_scoring_blocks([block])
+    return ids, tfs, dls
 
 
 def encode_positions(positions_concat: np.ndarray) -> bytes:

@@ -274,7 +274,7 @@ def q_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from terrier_spark.compression.vbyte import decode_scoring_block
 
     store = gate_index(spark, sf_dir)
-    blocks = store.postings(spark).filter(F.col("term").isin(POSTING_TERMS))
+    blocks = store.postings_for(spark, POSTING_TERMS)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -308,7 +308,7 @@ def q_postings_bitcodec(spark: SparkSession, sf_dir: str) -> DataFrame:
     from terrier_spark.compression.vbyte import decode_scoring_block
 
     store = gate_index(spark, sf_dir)
-    blocks = store.postings(spark).filter(F.col("term").isin(POSTING_TERMS))
+    blocks = store.postings_for(spark, POSTING_TERMS)
 
     def recode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -619,7 +619,7 @@ def q_boolean_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docid intersection of posting lists (ANDIterablePosting.java:40-152
     as a group-having plan)."""
     store = gate_index(spark, sf_dir)
-    blocks = store.postings(spark).filter(F.col("term").isin(BOOLEAN_TERMS))
+    blocks = store.postings_for(spark, BOOLEAN_TERMS)
     hits = _decode_docids(blocks)
     matched = (
         hits.groupBy("docid")
@@ -633,7 +633,7 @@ def q_boolean_and(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_boolean_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docid union with match count (ORIterablePosting.java:42-167)."""
     store = gate_index(spark, sf_dir)
-    blocks = store.postings(spark).filter(F.col("term").isin(BOOLEAN_TERMS))
+    blocks = store.postings_for(spark, BOOLEAN_TERMS)
     hits = _decode_docids(blocks)
     matched = hits.groupBy("docid").agg(
         F.count_distinct("term").cast("long").alias("n_matched")

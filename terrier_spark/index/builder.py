@@ -454,8 +454,10 @@ def build_index(
     finally:
         if pinned:
             corpus.unpersist()
-    _finalize(spark, out_dir, cfg, bucket_span, t0, ckpt_rows)
-    return IndexStore(out_dir)
+    metrics = _finalize(spark, out_dir, cfg, bucket_span, t0, ckpt_rows)
+    store = IndexStore(out_dir)
+    store.build_metrics = metrics
+    return store
 
 
 def _build_segments(corpus: DataFrame, out_dir: str, plan: dict,
@@ -546,9 +548,11 @@ def _build_segments(corpus: DataFrame, out_dir: str, plan: dict,
 
 
 def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
-              bucket_span: int, t0: float, ckpt_rows: list) -> None:
+              bucket_span: int, t0: float, ckpt_rows: list) -> dict:
     """Lexicon, collection statistics and manifest over every committed
-    segment under out_dir/segments."""
+    segment under out_dir/segments -> this run's build metrics (logged,
+    not persisted: the manifest is a function of corpus and config
+    alone)."""
     seg_glob = os.path.join(out_dir, "segments", "seg_*")
     postings = spark.read.parquet(f"{seg_glob}/postings.parquet")
     # lexicon: merge per-segment partials (the RunsMerger pass) straight
@@ -622,13 +626,6 @@ def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
             "stopwords": sorted(cfg.pipeline.stopwords or ())
         },
         "stats": stats,
-        "metrics": {
-            "build_seconds": round(elapsed, 3),
-            "docs_per_sec": round(num_docs / elapsed, 2) if elapsed else None,
-            "num_docs": num_docs,
-            "partitions_built": built,
-            "partitions_cached": len(ckpt_rows) - built,
-        },
     }
     if layout == "segmented_compacted":
         manifest["compacted_segments"] = prior_manifest["compacted_segments"]
@@ -642,3 +639,13 @@ def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
                 manifest[k] = prior_manifest[k]
     with open(f"{out_dir}/manifest.json", "w") as fh:
         json.dump(manifest, fh, indent=2)
+    metrics = {
+        "build_seconds": round(elapsed, 3),
+        "docs_per_sec": round(num_docs / elapsed, 2) if elapsed else None,
+        "num_docs": num_docs,
+        "partitions_built": built,
+        "partitions_cached": len(ckpt_rows) - built,
+    }
+    logging.getLogger("terrier_spark.builder").info(
+        "built %s: %s", out_dir, metrics)
+    return metrics

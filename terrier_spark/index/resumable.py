@@ -41,14 +41,13 @@ def _compact_group(block_size: int, bucket_span: int, with_pos: bool,
     decode every block, concatenate in docid order and re-cut with the
     one block encoder."""
     from terrier_spark.compression.vbyte import (
-        decode_scoring_block,
-        vbyte_decode,
+        decode_scoring_blocks,
+        vbyte_decode_parts,
     )
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("first_docid")
-        dec = [decode_scoring_block(b) for b in pdf["block"]]
-        ids, tfs, dls = (np.concatenate(col) for col in zip(*dec))
+        ids, tfs, dls, n = decode_scoring_blocks(pdf["block"].to_numpy())
         if ids.size > 1 and not (np.diff(ids) > 0).all():
             raise ValueError(
                 f"term {pdf['term'].iloc[0]!r} bucket "
@@ -56,16 +55,14 @@ def _compact_group(block_size: int, bucket_span: int, with_pos: bool,
             )
         pos = ftf = fln = None
         if with_pos:
-            pos = np.concatenate([
-                vbyte_decode(p, int(t.sum()))
-                for p, (_, t, _) in zip(pdf["pos"], dec)
-            ])
+            # a block's positions count is the sum of its tfs
+            tf_run = np.concatenate(([0], np.cumsum(tfs)))
+            ends = np.cumsum(n)
+            pos = vbyte_decode_parts(pdf["pos"].to_numpy(),
+                                     tf_run[ends] - tf_run[ends - n])
         if nf:
             ftf, fln = (
-                np.concatenate([
-                    vbyte_decode(v, i.size * nf).reshape(-1, nf)
-                    for v, (i, _, _) in zip(pdf[col], dec)
-                ])
+                vbyte_decode_parts(pdf[col].to_numpy(), n * nf).reshape(-1, nf)
                 for col in ("ftf", "fln")
             )
         rows = encode_blocks(pdf["term"].iloc[0], ids, tfs, dls, block_size,

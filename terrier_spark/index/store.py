@@ -30,10 +30,32 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 LAYOUTS = ("segmented", "segmented_compacted")
+
+
+def where_term_in(df: DataFrame, terms) -> DataFrame:
+    """`df` filtered to `term IN (terms)`: the same In predicate as
+    `F.col("term").isin(terms)`, which Spark pushes into a parquet scan,
+    built with a fixed number of py4j calls.  isin pays a few round
+    trips PER literal (seconds of plan construction for a few thousand
+    terms); here the terms cross as one string, joined on a character
+    none of them contains, and are split back into a java.util.List for
+    Column.isInCollection."""
+    # sorted, so an empty term comes first: the split keeps a leading
+    # empty string but drops trailing ones
+    terms = sorted({str(t) for t in terms})
+    if not terms:
+        return df.filter(F.col("term").isin([]))
+    used = set().union(*terms)
+    sep = next(c for c in map(chr, range(1, 0x110000)) if c not in used)
+    split = df.sparkSession.sparkContext._jvm.java.util.regex.Pattern.compile(
+        f"\\Q{sep}\\E")
+    values = split.splitAsStream(sep.join(terms)).toList()
+    return df.filter(Column(df._jdf.col("term").isInCollection(values)))
 
 
 class IndexStore:
@@ -58,6 +80,9 @@ class IndexStore:
         self._lexicon_pdf = None
         self._postings_df = None
         self._postings_key = None
+        # the build_index run that returned this handle: its timing and
+        # partitions built/cached (None when opened from disk)
+        self.build_metrics = None
 
     @property
     def stats(self) -> dict:
@@ -121,9 +146,6 @@ class IndexStore:
         """Lexicon rows for `terms` as a pandas frame.  Small lexicons are
         fetched once and served driver-side afterwards (no Spark job);
         large ones fall back to a term-pruned parquet scan."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
         cols = ["term", "nt", "tf", "max_tf", "min_dl"]
         if self.stats.get("fields"):
             # field indexes carry per-term per-field collection stats
@@ -142,8 +164,7 @@ class IndexStore:
             hit = self._lexicon_pdf[self._lexicon_pdf.index.isin(terms)]
             return hit.reset_index(drop=True)
         return (
-            self.lexicon(spark)
-            .filter(F.col("term").isin(list(terms)))
+            where_term_in(self.lexicon(spark), terms)
             .select(*cols)
             .toPandas()
         )
@@ -165,6 +186,11 @@ class IndexStore:
         df = self._postings_uncached(spark)
         self._postings_df, self._postings_key = df, key
         return df
+
+    def postings_for(self, spark: SparkSession, terms) -> DataFrame:
+        """The posting blocks of `terms` only: the postings scan with the
+        term filter pushed into parquet (where_term_in)."""
+        return where_term_in(self.postings(spark), terms)
 
     def _segment_fingerprint(self) -> tuple:
         try:  # catches in-place rebuilds/compactions on a reused object

@@ -48,7 +48,7 @@ def posting_positions(spark: SparkSession, store: IndexStore,
         )
     tset = sorted(set(terms))
     n = len(tset)
-    blocks = store.postings(spark).filter(F.col("term").isin(tset))
+    blocks = store.postings_for(spark, tset)
     if require_all_terms and n > 1:
         ok_buckets = (
             blocks.groupBy("bucket")
@@ -178,7 +178,7 @@ def batch_hits(spark: SparkSession, store: IndexStore,
         pd.DataFrame(meta_rows, columns=["job_id", "n_terms", "window"])
     ))
     all_terms = sorted({t for _, t, _ in assign_rows})
-    blocks = store.postings(spark).filter(F.col("term").isin(all_terms))
+    blocks = store.postings_for(spark, all_terms)
     # metadata-only prune: keep a bucket iff it contains every term of at
     # least one job (bucket labels partition docids identically across
     # terms, so a doc matching job j lives in a bucket holding all of

@@ -4,19 +4,21 @@ weighting models (default BM25).
 The reference's DAAT heap walk (org/terrier/matching/daat/Full.java:78-186)
 becomes one declarative plan Catalyst owns around one vectorized kernel:
 
-    scan postings (term-pruned parquet scan)
+    scan postings (term-pruned parquet scan, IndexStore.postings_for)
       -> broadcast-join per-(qid,term) stats          [lexicon lookup,
          PostingListManager.java:213; low-idf drop :217-219]
       -> repartition(qid), sorted by (qid, bucket)    [one query's blocks
          in one partition, as one DAAT walk holds one query]
-      -> Python kernel over Arrow batches, per (qid, bucket) group:
-           skip it when its block-max bound < the qid's running k-th
-           best score                                  [WAND.java:190-289,
+      -> Python kernel over Arrow batches, in runs of consecutive
+         (qid, bucket) groups (~2^16 postings each):
+           drop the groups already below their qid's threshold, then
+           ONE VByte decode + ONE numpy model-kernel call for the run;
+           then per group: skip it when its block-max bound < the
+           qid's running k-th best score             [WAND.java:190-289,
            Full.java:137-148 heap threshold, at block granularity]
-           else VByte decode + numpy model kernel + per-doc score
-           combine, merged into the qid's running top-k; that top-k is
-           the query's result, ranked score desc, docid asc
-                                                       [pinned — reference
+           else per-doc score combine, merged into the qid's running
+           top-k; that top-k is the query's result, ranked score desc,
+           docid asc                                   [pinned — reference
          ties are unstable, daat/CandidateResult.java:52-62]
 
 All queries of a batch run as ONE Spark job (the fork's 900-query
@@ -35,7 +37,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from terrier_spark.compression.vbyte import decode_scoring_block, vbyte_decode
+from terrier_spark.compression.vbyte import (
+    decode_scoring_blocks,
+    vbyte_decode_parts,
+)
 from terrier_spark.config import QueryConfig
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.models import get_model
@@ -50,6 +55,13 @@ log = logging.getLogger("terrier_spark.search")
 # above the computed bound.  Skipping only below theta - eps keeps the
 # skip safe (decoding more is always safe — the top-k cut is exact).
 _THETA_EPS = 1e-9
+
+# Postings the kernel decodes and scores per call (one "run" of
+# (qid, bucket) groups).  It bounds the run's temporaries: on compacted
+# 1,024-posting blocks a whole-batch concatenated fill ran 2.4x slower
+# (index/maxscore.py).  On the perfbench batch, budgets of 2^14, 2^16
+# and 2^30 postings timed the same.
+_RUN_POSTINGS = 1 << 16
 
 # session settings the query path assumes (session.get_spark sets them);
 # a bare SparkSession.builder session measures ~2-3x slower per query
@@ -261,19 +273,37 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
     block of each of its queries.  The bucket invariant (bucket labels
     partition docids identically across every term) puts all of a doc's
     postings for one query in one (qid, bucket) group, so a group's
-    per-doc sums are FINAL document scores.  Before decoding a group the
-    kernel compares its upper bound — per term the largest block bound
-    in the group, summed over the terms — with the qid's running k-th
-    best score, and skips the group when the bound is below it, as the
-    reference's WAND/Maxscore skip postings under the heap threshold.  A
-    skipped doc scores below k docs of its query, so the top-k cut would
-    have dropped it anyway: results equal the exhaustive plan's."""
+    per-doc sums are FINAL document scores.  A group's upper bound is,
+    per term, the largest block bound in the group, summed over the
+    terms; the kernel skips a group whose bound is below its qid's
+    running k-th best score, as the reference's WAND/Maxscore skip
+    postings under the heap threshold.  A skipped doc scores below k
+    docs of its query, so the top-k cut would have dropped it anyway:
+    results equal the exhaustive plan's.
+
+    The work is batched in RUNS of consecutive groups of about
+    `_RUN_POSTINGS` postings: a run's groups already skippable against
+    the thresholds at its start are dropped (a threshold only rises),
+    the rest are decoded in one decode_scoring_blocks call and scored
+    in one model-kernel call.  Then the groups are walked in order, each
+    re-checked against its qid's live threshold — a group skipped there
+    is not merged — and merged into the qid's running top k."""
     kernel = spec.kernel
     needs_fields = spec.needs_fields
+    budget = _RUN_POSTINGS
+    if needs_fields:
+        weights, cs, avg_flens = field_params
+        nf = len(avg_flens)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pools: dict = {}
         seen = decoded = 0
+
+        def pool_of(q: int) -> _TopK:
+            pool = pools.get(q)
+            if pool is None:
+                pool = pools[q] = _TopK(k)
+            return pool
 
         def score(frame: pd.DataFrame, starts: np.ndarray) -> None:
             nonlocal seen, decoded
@@ -291,56 +321,82 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                 )
             qids = frame["qid"].to_numpy()
             blocks = frame["block"].to_numpy()
-            qtf, nt, tfc = (frame[c].tolist() for c in ("qtf", "nt", "tfc"))
+            qtf, nt, tfc = (frame[c].to_numpy() for c in ("qtf", "nt", "tfc"))
             if needs_fields:
-                weights, cs, avg_flens = field_params
-                nf = len(avg_flens)
-                ftf, fln = frame["ftf"].to_numpy(), frame["fln"].to_numpy()
-            for g, (s, e) in enumerate(zip(starts, ends)):
-                q = int(qids[s])
-                pool = pools.get(q)
-                if pool is None:
-                    pool = pools[q] = _TopK(k)
-                seen += 1
-                theta = pool.theta - _THETA_EPS
-                if group_ub is not None and group_ub[g] < theta:
-                    continue
-                decoded += 1
-                id_parts, score_parts = [], []
-                for r in range(s, e):
-                    ids, tfs, dls = decode_scoring_block(blocks[r])
-                    if needs_fields:
-                        size, shape = ids.size * nf, (ids.size, nf)
-                        scores = kernel(
-                            vbyte_decode(ftf[r], size).reshape(shape),
-                            vbyte_decode(fln[r], size).reshape(shape),
-                            qtf[r], nt[r], tfc[r], N, weights, cs,
-                            avg_flens, T,
-                        )
-                    else:
-                        scores = kernel(tfs, dls, qtf[r], nt[r], tfc[r],
-                                        N, avgdl, T)
-                    # Undefined (NaN) contributions are DROPPED here, at
-                    # the per-posting source.  BB2-family formulas are NaN
-                    # outside their domain (stirlingPower(F, F - TF) with
-                    # normalised TF > F on short docs — reference
-                    # BB2.java:90 behaves the same); the reference then
-                    # ranks NaN docs FIRST (Double.compare treats NaN as
-                    # greatest).  We diverge deliberately: propagating NaN
-                    # would rank numerically degenerate docs at the top,
-                    # and the OracleIndex applies the same drop, so engine
-                    # and oracle agree on every model.  Block-max bounds
-                    # stay valid: dropping a contribution only lowers a
-                    # doc's score, and a NaN block bound never skips.
-                    keep = ~np.isnan(scores)
-                    id_parts.append(ids[keep])
-                    score_parts.append(scores[keep])
-                ids = np.concatenate(id_parts)
-                scores = np.concatenate(score_parts)
-                if len(id_parts) > 1:
-                    ids, inv = np.unique(ids, return_inverse=True)
-                    scores = np.bincount(inv, weights=scores)
-                pool.add(ids, scores)
+                ftf_col = frame["ftf"].to_numpy()
+                fln_col = frame["fln"].to_numpy()
+
+            def decode_and_score(rows: np.ndarray):
+                """One decode and one model-kernel pass over block rows
+                -> (docids, scores, postings per row)."""
+                ids, tfs, dls, n = decode_scoring_blocks(blocks[rows])
+                if not needs_fields:
+                    return ids, kernel(
+                        tfs, dls, np.repeat(qtf[rows], n),
+                        np.repeat(nt[rows], n), np.repeat(tfc[rows], n),
+                        N, avgdl, T,
+                    ), n
+                ftf = vbyte_decode_parts(ftf_col[rows], n * nf).reshape(-1, nf)
+                fln = vbyte_decode_parts(fln_col[rows], n * nf).reshape(-1, nf)
+                # field kernels take one term's nt and F: one call per row
+                # over its slice of the run's decoded payloads
+                at = np.cumsum(n) - n
+                return ids, np.concatenate([np.empty(0), *(
+                    kernel(ftf[a:a + m], fln[a:a + m], qtf[r], nt[r], tfc[r],
+                           N, weights, cs, avg_flens, T)
+                    for r, a, m in zip(rows, at, n)
+                )]), n
+
+            # a run starts at the first group that begins past the next
+            # multiple of the budget; a group is never split
+            sizes = np.add.reduceat(frame["n"].to_numpy(np.int64), starts)
+            window = (np.cumsum(sizes) - sizes) // budget
+            run_starts = np.flatnonzero(np.diff(window, prepend=-1))
+            run_ends = np.append(run_starts[1:], starts.size)
+            for g0, g1 in zip(run_starts, run_ends):
+                row0 = starts[g0]
+                live = np.ones(g1 - g0, dtype=bool)
+                if group_ub is not None:
+                    run_q, inv = np.unique(qids[starts[g0:g1]],
+                                           return_inverse=True)
+                    theta = np.array([pool_of(int(q)).theta for q in run_q])
+                    live = ~(group_ub[g0:g1] < theta[inv] - _THETA_EPS)
+                row_live = np.repeat(live, ends[g0:g1] - starts[g0:g1])
+                ids, scores, n = decode_and_score(
+                    row0 + np.flatnonzero(row_live))
+                # Undefined (NaN) contributions are DROPPED here, at the
+                # per-posting source.  BB2-family formulas are NaN outside
+                # their domain (stirlingPower(F, F - TF) with normalised
+                # TF > F on short docs — reference BB2.java:90 behaves the
+                # same); the reference then ranks NaN docs FIRST
+                # (Double.compare treats NaN as greatest).  We diverge
+                # deliberately: propagating NaN would rank numerically
+                # degenerate docs at the top, and the OracleIndex applies
+                # the same drop, so engine and oracle agree on every
+                # model.  Block-max bounds stay valid: dropping a
+                # contribution only lowers a doc's score, and a NaN block
+                # bound never skips.
+                keep = ~np.isnan(scores)
+                ids, scores = ids[keep], scores[keep]
+                # postings of the decoded rows before each row, after the drop
+                row_at = np.concatenate(([0], np.cumsum(keep)))[
+                    np.concatenate(([0], np.cumsum(n)))]
+                rows_before = np.concatenate(([0], np.cumsum(row_live)))
+                for g in range(g0, g1):
+                    s, e = starts[g], ends[g]
+                    pool = pool_of(int(qids[s]))
+                    seen += 1
+                    theta = pool.theta - _THETA_EPS
+                    if group_ub is not None and group_ub[g] < theta:
+                        continue
+                    decoded += 1
+                    a = row_at[rows_before[s - row0]]
+                    b = row_at[rows_before[e - row0]]
+                    g_ids, g_scores = ids[a:b], scores[a:b]
+                    if e - s > 1:
+                        g_ids, inv = np.unique(g_ids, return_inverse=True)
+                        g_scores = np.bincount(inv, weights=g_scores)
+                    pool.add(g_ids, g_scores)
 
         # a group can straddle Arrow batches: hold each batch's last
         # group back until the next batch shows whether it continues
@@ -455,8 +511,7 @@ def search_terms(
         return _search_chunks(spark, store, qterms, qcfg, with_meta,
                               stats_out, per_qid)
 
-    terms = sorted(set(qstats["term"]))
-    blocks = store.postings(spark).filter(F.col("term").isin(terms))
+    blocks = store.postings_for(spark, qstats["term"])
     # Integer qid codes through the whole decode exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
     # profile, BASELINE.md), and a string qid there costs object-dtype
@@ -475,7 +530,7 @@ def search_terms(
     spec = get_model(qcfg.model)
     field_params = None
     T_eff = T
-    sel_cols = ["qid", "qtf", "nt", "tfc", "block"]
+    sel_cols = ["qid", "qtf", "nt", "tfc", "block", "n"]
     if spec.needs_fields:
         fields = store.stats.get("fields")
         if not fields:

@@ -30,8 +30,7 @@ from terrier_spark.text.pipeline import make_pipeline
 def _docids_with_terms(spark: SparkSession, store: IndexStore,
                        pairs: pd.DataFrame) -> DataFrame:
     """pairs (qid, term) -> (qid, term, docid) decoded from postings."""
-    terms = sorted(set(pairs["term"]))
-    blocks = store.postings(spark).filter(F.col("term").isin(terms))
+    blocks = store.postings_for(spark, pairs["term"])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -55,8 +54,7 @@ def _docids_with_field_terms(spark: SparkSession, store: IndexStore,
     docs whose per-field tf of `term` in field `field_idx` is > 0."""
     from terrier_spark.compression.vbyte import vbyte_decode
 
-    terms = sorted(set(rows["term"]))
-    blocks = store.postings(spark).filter(F.col("term").isin(terms))
+    blocks = store.postings_for(spark, rows["term"])
     wanted = rows.groupby("term")["field_idx"].apply(set).to_dict()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -125,9 +123,7 @@ def _score_disjunctions(spark: SparkSession, store: IndexStore,
     )
     alt = merged[["qid", "gid", "term"]].merge(gstats, on=["qid", "gid"])
 
-    blocks = store.postings(spark).filter(
-        F.col("term").isin(sorted(set(alt["term"])))
-    )
+    blocks = store.postings_for(spark, alt["term"])
     amap = spark.createDataFrame(
         alt[["term", "qid", "gid", "qtf", "nt", "tfc"]]
     )

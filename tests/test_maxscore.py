@@ -317,6 +317,48 @@ def test_one_threshold_per_query(spark, compacted):
     assert batch["surviving_buckets"] == alone, (batch, alone)
 
 
+def test_small_runs_equal_unpruned(spark, compacted):
+    """The kernel's runs are invisible in results and in the skip
+    counters.  A run budget of a few postings makes every run hold one
+    or two groups, so groups are dropped at run starts that a larger run
+    would decode first, and two-row Arrow batches make groups straddle
+    the kernel's input batches.  BB2 also drops NaN contributions inside
+    the runs (test_nan_contributions_dropped)."""
+    import sys
+
+    store, oracle = compacted
+    queries = make_queries(oracle, n=10)
+    qcfg = QueryConfig(model="BB2", k=1)
+    whole: dict = {}
+    search(spark, store, queries, qcfg, stats_out=whole)
+    module = sys.modules[search.__module__]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved_budget, saved_rows = module._RUN_POSTINGS, spark.conf.get(key)
+    module._RUN_POSTINGS = 3
+    spark.conf.set(key, "2")
+    try:
+        runs: dict = {}
+        a = (
+            search(spark, store, queries, qcfg, stats_out=runs)
+            .orderBy("qid", "rank").toPandas()
+        )
+    finally:
+        module._RUN_POSTINGS = saved_budget
+        spark.conf.set(key, saved_rows)
+    b = (
+        search(spark, store, queries, QueryConfig(model="BB2", k=1,
+                                                  prune=False))
+        .orderBy("qid", "rank").toPandas()
+    )
+    assert len(a) > 0
+    assert list(a["qid"]) == list(b["qid"])
+    assert list(a["docid"]) == list(b["docid"])
+    for x, y in zip(a["score"], b["score"]):
+        assert x == pytest.approx(y, abs=1e-9)
+    assert whole["pruned_fraction"] > 0, whole
+    assert runs == whole
+
+
 # ---------------------------------------------------------------------------
 # field models
 

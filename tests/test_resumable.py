@@ -125,6 +125,29 @@ def test_resume_after_partial_build_identical(spark, corpus, tmp_path):
     )
 
 
+def test_manifest_is_a_function_of_corpus_and_config(spark, corpus,
+                                                     tmp_path):
+    """Two builds of one corpus, and a resume of one of them, write
+    byte-identical manifests: the run's timing and cache counts are on
+    the returned handle (and in the log), not in the index."""
+    def manifest(path):
+        with open(os.path.join(path, "manifest.json"), "rb") as fh:
+            return fh.read()
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    first = build_index_resumable(spark, corpus, a, bucket_span=128)
+    built = manifest(a)
+    build_index_resumable(spark, corpus, b, bucket_span=128)
+    assert manifest(b) == built
+    resumed = build_index_resumable(spark, corpus, a, bucket_span=128)
+    assert manifest(a) == built
+    assert "metrics" not in first.manifest
+    assert first.build_metrics["partitions_built"] == 6
+    assert resumed.build_metrics["partitions_cached"] == 6
+    assert resumed.build_metrics["num_docs"] == first.stats["num_docs"]
+    assert resumed.build_metrics["build_seconds"] > 0
+
+
 def test_crash_path_resumes(spark, corpus, tmp_path):
     """Real exception mid-job: whatever committed before the abort is
     reused; the resume run completes and matches a clean build."""

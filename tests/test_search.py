@@ -246,6 +246,62 @@ def test_scan_pushdown_plan_shape(spark, engine):
     assert "Window" not in plan, plan
 
 
+def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine):
+    """where_term_in (the postings_for scan) keeps exactly the rows isin
+    keeps, whatever the term text, and builds its predicate in a fixed
+    number of py4j round trips: isin pays a few per term."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from terrier_spark.index.store import where_term_in
+
+    store, oracle = engine
+    vocab = sorted(oracle.postings)
+    hostile = ["it's", "back\\slash", "a,b", "naïve", "日本語", "x",
+               "\\Q", "\\E", "tab\tnew\nline", 'q"uote', ""]
+    terms = hostile + vocab[:3]
+    df = spark.createDataFrame(
+        [(t, i) for i, t in enumerate(hostile + vocab[:5] + ["y", "zz"])],
+        "term string, i int",
+    )
+    got = sorted(map(tuple, where_term_in(df, terms).collect()))
+    assert got == sorted(map(tuple, df.filter(F.col("term").isin(terms))
+                             .collect()))
+    assert len(got) == len(terms)
+
+    def blocks(d):
+        return sorted(map(tuple, d.select("term", "bucket", "block_id")
+                          .collect()))
+
+    scan = blocks(store.postings_for(spark, terms))
+    assert scan and scan == blocks(
+        store.postings(spark).filter(F.col("term").isin(terms)))
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def commands(n_terms: int) -> int:
+        many = [f"t{i}" for i in range(n_terms)]
+        where_term_in(df, many)  # warm: the py4j class lookups
+        gc.collect()  # free earlier JVM handles outside the count
+        sent = []
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            sent.append(args[0][:1])
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            where_term_in(df, many)
+        finally:
+            client.send_command = send
+        return len(sent)
+
+    assert commands(20) < 20
+    assert commands(2000) < 20
+
+
 def test_session_tuning_check(spark, caplog):
     """The once-per-app session-tuning probe: a tuned session (the test
     fixture uses get_spark) reports nothing missing; a session missing

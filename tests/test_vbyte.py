@@ -1,13 +1,18 @@
 """VByte codec round-trip + property tests (FIXTURES.md §6)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from terrier_spark.compression.vbyte import (
     decode_posting_block,
+    decode_scoring_block,
+    decode_scoring_blocks,
     encode_posting_block,
+    encode_scoring_block,
     vbyte_decode,
+    vbyte_decode_parts,
     vbyte_encode,
 )
 
@@ -77,3 +82,92 @@ def test_compression_is_compact():
     tfs = np.ones(10000, dtype=np.int64)
     block = encode_posting_block(ids, tfs)
     assert len(block) <= 8 + 2 * 10000 + 2
+
+
+# one scoring block: unique docids below 2^43, tf and doclen up to 2^32;
+# min_size=1 keeps one-posting blocks frequent
+_scoring_block = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2**43),
+        st.integers(min_value=1, max_value=2**32),
+        st.integers(min_value=1, max_value=2**32),
+    ),
+    min_size=1,
+    max_size=40,
+    unique_by=lambda p: p[0],
+).map(lambda ps: tuple(
+    np.array(col, dtype=np.int64) for col in zip(*sorted(ps))
+))
+
+
+@settings(max_examples=150, deadline=None, derandomize=True)
+@given(st.lists(_scoring_block, max_size=30))
+def test_decode_scoring_blocks_equals_per_block(blocks):
+    """The multi-block decode is the per-block decodes concatenated."""
+    enc = [encode_scoring_block(*b) for b in blocks]
+    ids, tfs, dls, n = decode_scoring_blocks(enc)
+    np.testing.assert_array_equal(n, [b[0].size for b in blocks])
+    per_block = [decode_scoring_block(e) for e in enc]
+    for got, col in zip((ids, tfs, dls), range(3)):
+        want = np.concatenate(
+            [np.empty(0, np.int64)] + [b[col] for b in blocks])
+        np.testing.assert_array_equal(got, want)
+        np.testing.assert_array_equal(got, np.concatenate(
+            [np.empty(0, np.int64)] + [d[col] for d in per_block]))
+        assert got.dtype == np.int64
+
+
+def test_decode_scoring_blocks_edges():
+    one = encode_scoring_block(np.array([2**43]), np.array([2**32]),
+                               np.array([1]))
+    ids, tfs, dls, n = decode_scoring_blocks([b"", one, b"", one])
+    assert list(n) == [0, 1, 0, 1]
+    assert list(ids) == [2**43] * 2 and list(tfs) == [2**32] * 2
+    assert list(dls) == [1, 1]
+    ids, tfs, dls, n = decode_scoring_blocks([])
+    assert ids.size == tfs.size == dls.size == n.size == 0
+
+
+def _with_header(block: bytes, **fields) -> bytes:
+    hdr = np.frombuffer(block[:12], dtype=np.uint32).copy()
+    for i, key in enumerate(("n", "gap_bytes", "tf_bytes")):
+        hdr[i] = fields.get(key, hdr[i])
+    return hdr.tobytes() + block[12:]
+
+
+def test_decode_scoring_blocks_rejects_corrupt_blocks():
+    ids = np.array([3, 200, 70000], dtype=np.int64)
+    good = encode_scoring_block(ids, np.array([1, 300, 2]),
+                                np.array([9, 9000, 90000]))
+    hdr = np.frombuffer(good[:12], dtype=np.uint32)
+    bad = [
+        good[:-1],                                   # doclens cut short
+        good[:7],                                    # header cut short
+        _with_header(good, n=2),                     # wrong header n
+        _with_header(good, n=4),
+        _with_header(good, gap_bytes=int(hdr[1]) - 1),  # gap section cut
+        _with_header(good, tf_bytes=int(hdr[2]) + 1),   # tf section long
+        _with_header(good, gap_bytes=len(good)),     # sections overrun
+    ]
+    for block in bad:
+        for blocks in ([block], [good, block, good]):
+            with pytest.raises(ValueError):
+                decode_scoring_blocks(blocks)
+        with pytest.raises(ValueError):
+            decode_scoring_block(block)
+
+
+def test_vbyte_decode_parts_checks_each_count():
+    parts = [vbyte_encode(np.array(v, dtype=np.uint64))
+             for v in ([1, 300], [], [2**40])]
+    np.testing.assert_array_equal(vbyte_decode_parts(parts, [2, 0, 1]),
+                                  [1, 300, 2**40])
+    for counts in ([1, 1, 1], [2, 1, 0], [3, 0, 1]):
+        with pytest.raises(ValueError):
+            vbyte_decode_parts(parts, counts)
+    # each part holds one complete value by count, but 300's bytes
+    # straddle the two parts
+    split = [parts[0][:2], parts[0][2:]]
+    assert np.frombuffer(split[1], np.uint8).tolist() == [0x02]
+    with pytest.raises(ValueError):
+        vbyte_decode_parts(split, [1, 1])
