@@ -88,9 +88,20 @@ def quiet_box(load_before, probe_before: float, probe_after: float,
             and -_MAX_PROBE_SPEEDUP < drift < max_drift)
 
 
+def protocol_compliant(reps: int, cpus: int, k: int, sf_dir: str,
+                       nproc: int) -> bool:
+    """The graded protocol: sf0.1, every core of the host (`nproc`, the
+    CPUs this process may run on), k=1000, >=3 reps.  An ad-hoc run
+    (another sf, core count, k or fewer reps) stamps itself
+    non-compliant so it can't be mistaken for the graded artifact."""
+    return (reps >= 3 and cpus == nproc and k == 1000
+            and sf_dir.rstrip("/").endswith("sf0.1"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    nproc = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", nproc))
     k = int(os.environ.get("BENCH_K", "1000"))
     reps = int(os.environ.get("BENCH_REPS", "3"))
 
@@ -206,16 +217,11 @@ def main() -> None:
             "n_queries": len(queries),
             "k": k,
             "cpus": cpus,
+            "nproc": nproc,
             "builder": "resumable+compact",
             "latency_sample": len(sample),
         }
-        # the graded protocol: sf0.1, 32 cores, k=1000, >=3 reps.  An
-        # ad-hoc run (different sf / cpus / reps) stamps itself
-        # non-compliant so it can't be mistaken for the graded artifact.
-        compliant = (
-            reps >= 3 and cpus == 32 and k == 1000
-            and sf_dir.rstrip("/").endswith("sf0.1")
-        )
+        compliant = protocol_compliant(reps, cpus, k, sf_dir, nproc)
         print(
             json.dumps(
                 {

@@ -1,13 +1,3 @@
-from terrier_spark.compression.vbyte import (
-    vbyte_encode,
-    vbyte_decode,
-    encode_posting_block,
-    decode_posting_block,
-)
+from terrier_spark.compression.vbyte import vbyte_encode, vbyte_decode
 
-__all__ = [
-    "vbyte_encode",
-    "vbyte_decode",
-    "encode_posting_block",
-    "decode_posting_block",
-]
+__all__ = ["vbyte_encode", "vbyte_decode"]

@@ -124,22 +124,6 @@ def vbyte_decode_parts(parts, counts) -> np.ndarray:
     return _decode_sections(raw, sizes, counts)
 
 
-def encode_posting_block(docids: np.ndarray, tfs: np.ndarray) -> bytes:
-    """Encode one posting block: VByte(first docid + 1, then gaps) ++
-    VByte(tfs), length-prefixed (4-byte LE) for self-description."""
-    ids = np.asarray(docids, dtype=np.int64)
-    if ids.size == 0:
-        return b""
-    gaps = np.empty(ids.size, dtype=np.uint64)
-    gaps[0] = np.uint64(ids[0] + 1)
-    if ids.size > 1:
-        gaps[1:] = np.diff(ids).astype(np.uint64)
-    id_bytes = vbyte_encode(gaps)
-    tf_bytes = vbyte_encode(np.asarray(tfs, dtype=np.uint64))
-    header = np.array([ids.size, len(id_bytes)], dtype=np.uint32).tobytes()
-    return header + id_bytes + tf_bytes
-
-
 def encode_scoring_block(docids: np.ndarray, tfs: np.ndarray,
                          doclens: np.ndarray) -> bytes:
     """Self-contained scoring block: VByte(gaps) ++ VByte(tfs) ++
@@ -225,14 +209,3 @@ def decode_positions(data: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     flat = vbyte_decode(data, total).astype(np.int64)
     return np.split(flat, np.cumsum(np.asarray(tfs, dtype=np.int64))[:-1])
 
-
-def decode_posting_block(block: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one posting block -> (docids int64 ascending, tfs int64)."""
-    if not block:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    header = np.frombuffer(block[:8], dtype=np.uint32)
-    n, id_len = int(header[0]), int(header[1])
-    gaps = vbyte_decode(block[8 : 8 + id_len], n)
-    tfs = vbyte_decode(block[8 + id_len :], n)
-    ids = np.cumsum(gaps.astype(np.int64)) - 1
-    return ids, tfs.astype(np.int64)

@@ -19,6 +19,7 @@ import string
 import tempfile
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,7 +30,11 @@ from terrier_spark.config import (
     QueryConfig,
     SQL_SAFE_PIPELINE,
 )
-from terrier_spark.index.builder import build_index
+from terrier_spark.index.builder import (
+    build_index,
+    decode_blocks,
+    explode_blocks,
+)
 from terrier_spark.index.corpus import load_documents_corpus
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.search import search
@@ -271,27 +276,9 @@ def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Posting lists for POSTING_TERMS, decoded from the VByte store —
     exercises the compressed path end-to-end."""
-    from terrier_spark.compression.vbyte import decode_scoring_block
-
     store = gate_index(spark, sf_dir)
-    blocks = store.postings_for(spark, POSTING_TERMS)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, _ = decode_scoring_block(row.block)
-                outs.append(
-                    pd.DataFrame(
-                        {"term": row.term, "docid": ids, "tf": tfs}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    decoded = blocks.select("term", "block").mapInPandas(
-        decode, schema="term string, docid long, tf long"
-    )
+    decoded = explode_blocks(store.postings_for(spark, POSTING_TERMS),
+                             ["term"], ["docid", "tf"])
     return _docno_as_doc_id(decoded, store, spark).select("term", "doc_id", "tf")
 
 
@@ -305,26 +292,24 @@ def q_postings_bitcodec(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_bit_postings,
         encode_bit_postings,
     )
-    from terrier_spark.compression.vbyte import decode_scoring_block
 
     store = gate_index(spark, sf_dir)
     blocks = store.postings_for(spark, POSTING_TERMS)
 
     def recode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, _ = decode_scoring_block(row.block)
-                ids2, tfs2 = decode_bit_postings(
-                    encode_bit_postings(ids, tfs), ids.size
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {"term": row.term, "docid": ids2, "tf": tfs2}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
+            ids, tfs, _, n, _, _, _ = decode_blocks(pdf)
+            # the bit codec re-encodes one block at a time
+            back = [decode_bit_postings(encode_bit_postings(
+                ids[a:a + m], tfs[a:a + m]), m)
+                for a, m in zip(np.cumsum(n) - n, n)]
+            yield pd.DataFrame({
+                "term": np.repeat(pdf["term"].to_numpy(), n),
+                "docid": np.concatenate([np.empty(0, np.int64)]
+                                        + [d for d, _ in back]),
+                "tf": np.concatenate([np.empty(0, np.int64)]
+                                     + [t for _, t in back]),
+            })
 
     decoded = blocks.select("term", "block").mapInPandas(
         recode, schema="term string, docid long, tf long"
@@ -642,20 +627,7 @@ def q_boolean_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_docids(blocks: DataFrame) -> DataFrame:
-    from terrier_spark.compression.vbyte import decode_scoring_block
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, _, _ = decode_scoring_block(row.block)
-                outs.append(pd.DataFrame({"term": row.term, "docid": ids}))
-            if outs:
-                yield pd.concat(outs)
-
-    return blocks.select("term", "block").mapInPandas(
-        decode, schema="term string, docid long"
-    )
+    return explode_blocks(blocks, ["term"], ["docid"])
 
 
 def q_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,15 +43,18 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from terrier_spark.compression.vbyte import (
+    decode_scoring_blocks,
     encode_positions,
     encode_scoring_block,
+    vbyte_decode_parts,
     vbyte_encode,
 )
 from terrier_spark.config import IndexConfig
 from terrier_spark.index.docids import assign_docids
-from terrier_spark.index.store import IndexStore
+from terrier_spark.index.store import IndexStore, read_segments
 from terrier_spark.text.pipeline import make_pipeline
 
 DEFAULT_BUCKET_SPAN = 1 << 16
@@ -60,7 +63,7 @@ DEFAULT_BUCKET_SPAN = 1 << 16
 # files are written with this pyarrow schema, and Spark jobs that emit
 # block rows use BLOCK_SCHEMA, derived from it.  Explicit types also make
 # an empty partition write the same column types as a full one, so the
-# seg_* glob reads as one dataset.
+# segments read as one dataset.
 POSTINGS_ARROW_SCHEMA = pa.schema([
     ("term", pa.string()), ("bucket", pa.int64()),
     ("block_id", pa.int32()), ("n", pa.int32()),
@@ -149,6 +152,67 @@ def encode_blocks(term: str, ids: np.ndarray, tfs: np.ndarray,
                 )
             )
     return rows
+
+
+def decode_blocks(frame, pos: bool = False, nf: int = 0) -> tuple:
+    """The inverse of encode_blocks over many block rows at once: `frame`
+    maps "block" (and, as asked, "pos", "ftf", "fln") to one value per
+    block row -> (docids, tfs, doclens, postings per row, flat positions
+    or None, n x nf field tfs or None, n x nf field lengths or None),
+    the postings of all rows concatenated in row order.  One
+    decode_scoring_blocks call plus one vbyte_decode_parts call per
+    payload; ValueError unless each row's positions number its tf sum
+    and its ftf/fln values n x nf, or when an asked payload is null."""
+    ids, tfs, dls, n = decode_scoring_blocks(frame["block"])
+
+    def payload(col, counts):
+        parts = frame[col]
+        if any(p is None for p in parts):
+            raise ValueError(f"block row without its {col} payload")
+        return vbyte_decode_parts(parts, counts).astype(np.int64)
+
+    flat = ftf = fln = None
+    if pos:
+        tf_run = np.concatenate(([0], np.cumsum(tfs)))
+        ends = np.cumsum(n)
+        flat = payload("pos", tf_run[ends] - tf_run[ends - n])
+    if nf:
+        ftf, fln = (payload(c, n * nf).reshape(-1, nf) for c in ("ftf", "fln"))
+    return ids, tfs, dls, n, flat, ftf, fln
+
+
+_POSTING_TYPES = {"docid": LongType(), "tf": LongType(), "dl": LongType(),
+                  "positions": ArrayType(LongType())}
+
+
+def explode_blocks(blocks_df: DataFrame, carry, want) -> DataFrame:
+    """Block rows -> one row per posting: the `carry` columns of its
+    block row, then the `want` columns (from docid, tf, dl, positions),
+    decoded one Arrow batch at a time.  A row with no postings, or
+    without positions when they are wanted, yields none."""
+    carry, want = list(carry), list(want)
+    with_pos = "positions" in want
+    schema = StructType(
+        [blocks_df.schema[c] for c in carry]
+        + [StructField(c, _POSTING_TYPES[c]) for c in want]
+    )
+
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if with_pos:
+                pdf = pdf[pdf["pos"].notna()]
+            ids, tfs, dls, n, flat, _, _ = decode_blocks(pdf, pos=with_pos)
+            if ids.size == 0:
+                continue
+            posting = {"docid": ids, "tf": tfs, "dl": dls}
+            if with_pos:
+                posting["positions"] = np.split(flat, np.cumsum(tfs)[:-1])
+            yield pd.DataFrame(
+                {c: np.repeat(pdf[c].to_numpy(), n) for c in carry}
+                | {c: posting[c] for c in want})
+
+    cols = carry + ["block"] + (["pos"] if with_pos else [])
+    return blocks_df.select(*cols).mapInPandas(explode, schema=schema)
 
 
 def lexicon_from_blocks(blocks_df: DataFrame, nf: int = 0) -> DataFrame:
@@ -553,8 +617,7 @@ def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
     segment under out_dir/segments -> this run's build metrics (logged,
     not persisted: the manifest is a function of corpus and config
     alone)."""
-    seg_glob = os.path.join(out_dir, "segments", "seg_*")
-    postings = spark.read.parquet(f"{seg_glob}/postings.parquet")
+    postings = read_segments(spark, out_dir, "postings")
     # lexicon: merge per-segment partials (the RunsMerger pass) straight
     # from block METADATA — nt from posting counts, collection tf from
     # per-block tf sums; no block decode needed.  termid = dense rank in
@@ -568,7 +631,7 @@ def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
         "overwrite"
     ).parquet(f"{out_dir}/lexicon")
 
-    docs = spark.read.parquet(f"{seg_glob}/docs.parquet")
+    docs = read_segments(spark, out_dir, "docs")
     drow = docs.agg(
         F.count("*").alias("nd"), F.sum("doclen").alias("ntok")
     ).collect()[0]
@@ -585,7 +648,7 @@ def _finalize(spark: SparkSession, out_dir: str, cfg: IndexConfig,
     }
     if cfg.field_cols:
         nf = len(cfg.field_cols)
-        meta_read = spark.read.parquet(f"{seg_glob}/meta.parquet")
+        meta_read = read_segments(spark, out_dir, "meta")
         frow = meta_read.select(
             *[
                 F.sum(F.element_at("field_lens", i + 1)).alias(f"f{i}")

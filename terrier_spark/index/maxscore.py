@@ -83,7 +83,11 @@ def with_max_scores(blocks: DataFrame, lexicon: DataFrame,
     filled for `models`.  One decode pass (mapInPandas, Arrow-batched);
     the lexicon join rides the same term key the blocks are already
     organised by."""
-    from terrier_spark.index.builder import BLOCK_COLUMNS, BLOCK_SCHEMA
+    from terrier_spark.index.builder import (
+        BLOCK_COLUMNS,
+        BLOCK_SCHEMA,
+        decode_blocks,
+    )
 
     models = list(models)
     if not models:
@@ -100,51 +104,51 @@ def with_max_scores(blocks: DataFrame, lexicon: DataFrame,
 
     out_cols = BLOCK_COLUMNS
 
-    # Shape note (measured): this is deliberately a per-BLOCK loop with
-    # numpy kernels over the ~1024 postings inside, NOT one concatenated
-    # kernel evaluation across the whole Arrow batch.  1024-element
-    # arrays keep every kernel intermediate in L1/L2 cache; the
-    # concatenated variant (np.repeat nt/tfc + maximum.reduceat over
+    # Shape note (measured): each Arrow batch is decoded in one
+    # decode_blocks call, but the model kernels still run per BLOCK, over
+    # the ~1024 postings inside, NOT once over the whole batch.
+    # 1024-element arrays keep every kernel intermediate in L1/L2 cache;
+    # the concatenated variant (np.repeat nt/tfc + maximum.reduceat over
     # ~2M-element arrays) materializes a 16 MB temporary per numpy op
     # per model and measured 2.4x SLOWER (1.03 s vs 2.51 s for 2000
     # blocks x 15 models on this box).  The loop is the cache-optimal
     # shape, paid once at compaction.
-    def score_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from terrier_spark.compression.vbyte import (
-            decode_scoring_block,
-            vbyte_decode,
-        )
+    def block_maxes(tfs, dls, ftf, fln, nt, tfc) -> list:
+        vals = []
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for spec in specs:
+                if spec.needs_fields:
+                    if ftf is None:
+                        vals.append(float("nan"))  # never prunes
+                        continue
+                    s = spec.kernel(ftf, fln, 1.0, nt, tfc, N, ones, ones,
+                                    avg_flens, T)
+                else:
+                    s = spec.kernel(tfs, dls, 1.0, nt, tfc, N, avgdl, T)
+                v = float(np.max(s))
+                # clamp at 0 (negative scores are bounded by 0);
+                # NaN propagates -> the bound never prunes
+                vals.append(v if np.isnan(v) else max(v, 0.0))
+        return vals
 
+    def score_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            maxes = []
-            for row in pdf.itertuples():
-                ids, tfs, dls = decode_scoring_block(row.block)
-                ftf_mat = fln_mat = None
-                if needs_any_fields and row.ftf is not None:
-                    ftf_mat = vbyte_decode(row.ftf, ids.size * nf).reshape(
-                        ids.size, nf
-                    )
-                    fln_mat = vbyte_decode(row.fln, ids.size * nf).reshape(
-                        ids.size, nf
-                    )
-                vals = []
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    for spec in specs:
-                        if spec.needs_fields:
-                            if ftf_mat is None:
-                                vals.append(float("nan"))  # never prunes
-                                continue
-                            s = spec.kernel(ftf_mat, fln_mat, 1.0, row.nt,
-                                            row.tfc, N, ones, ones,
-                                            avg_flens, T)
-                        else:
-                            s = spec.kernel(tfs, dls, 1.0, row.nt, row.tfc,
-                                            N, avgdl, T)
-                        v = float(np.max(s))
-                        # clamp at 0 (negative scores are bounded by 0);
-                        # NaN propagates -> the bound never prunes
-                        vals.append(v if np.isnan(v) else max(v, 0.0))
-                maxes.append(vals)
+            maxes = [None] * len(pdf)
+            # rows with field payloads decode them; rows without score
+            # NaN for the field models
+            has_f = pdf["ftf"].notna().to_numpy() & needs_any_fields
+            for with_f in (True, False):
+                rows = np.flatnonzero(has_f == with_f)
+                part = pdf.iloc[rows]
+                _, tfs, dls, n, _, ftf, fln = decode_blocks(
+                    part, nf=nf if with_f else 0)
+                at = np.cumsum(n) - n
+                for r, a, m, nt, tfc in zip(rows, at, n, part["nt"],
+                                            part["tfc"]):
+                    maxes[r] = block_maxes(
+                        tfs[a:a + m], dls[a:a + m],
+                        ftf[a:a + m] if with_f else None,
+                        fln[a:a + m] if with_f else None, nt, tfc)
             out = pdf[[c for c in out_cols if c != "max_score"]].copy()
             out["max_score"] = maxes
             yield out[out_cols]

@@ -23,12 +23,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from terrier_spark.compression.vbyte import decode_scoring_block, vbyte_decode
 from terrier_spark.config import IndexConfig
 from terrier_spark.index.builder import (
     BLOCK_COLUMNS,
     _finalize,
     _write_segment,
+    decode_blocks,
     encode_blocks,
 )
 from terrier_spark.index.store import IndexStore
@@ -42,18 +42,21 @@ def _rebase_blocks(blocks: pd.DataFrame, offset: int, span: int,
     kernel sums per-term bounds per bucket and skips whole buckets —
     query/search.py::_search_kernel), so each block goes back through the
     block encoder, which cuts it at every new boundary."""
+    ids, tfs, dls, n, pos, ftf, fln = decode_blocks(blocks, with_pos, nf)
+    at = np.cumsum(n) - n
+    pos_at = np.concatenate(([0], np.cumsum(tfs)))
     rows = []
-    for row in blocks.itertuples():
-        ids, tfs, dls = decode_scoring_block(row.block)
-        pos = vbyte_decode(row.pos, int(tfs.sum())) if with_pos else None
-        ftf = fln = None
-        if nf:
-            ftf = vbyte_decode(row.ftf, ids.size * nf).reshape(-1, nf)
-            fln = vbyte_decode(row.fln, ids.size * nf).reshape(-1, nf)
-        # max_score comes back null: the merged collection's stats differ,
-        # so source-index unit maxima are invalid bounds here
-        rows += encode_blocks(row.term, ids + offset, tfs, dls, block_size,
-                              span, pos=pos, ftf=ftf, fln=fln)
+    for term, a, m in zip(blocks["term"], at, n):
+        # one block at a time, so merged segments keep the source
+        # blocks' boundaries; max_score comes back null: the merged
+        # collection's stats differ, so source-index unit maxima are
+        # invalid bounds here
+        rows += encode_blocks(
+            term, ids[a:a + m] + offset, tfs[a:a + m], dls[a:a + m],
+            block_size, span,
+            pos=pos[pos_at[a]:pos_at[a + m]] if with_pos else None,
+            ftf=ftf[a:a + m] if nf else None,
+            fln=fln[a:a + m] if nf else None)
     return pd.DataFrame(rows, columns=BLOCK_COLUMNS)
 
 

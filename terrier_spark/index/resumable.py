@@ -28,6 +28,7 @@ from terrier_spark.index.builder import (
     BLOCK_COLUMNS,
     BLOCK_SCHEMA,
     build_index,
+    decode_blocks,
     encode_blocks,
 )
 from terrier_spark.index.store import IndexStore
@@ -40,30 +41,14 @@ def _compact_group(block_size: int, bucket_span: int, with_pos: bool,
     """applyInPandas body over one (term, bucket) group of block rows:
     decode every block, concatenate in docid order and re-cut with the
     one block encoder."""
-    from terrier_spark.compression.vbyte import (
-        decode_scoring_blocks,
-        vbyte_decode_parts,
-    )
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("first_docid")
-        ids, tfs, dls, n = decode_scoring_blocks(pdf["block"].to_numpy())
+        ids, tfs, dls, _, pos, ftf, fln = decode_blocks(pdf, with_pos, nf)
         if ids.size > 1 and not (np.diff(ids) > 0).all():
             raise ValueError(
                 f"term {pdf['term'].iloc[0]!r} bucket "
                 f"{pdf['bucket'].iloc[0]}: blocks overlap in docid range"
-            )
-        pos = ftf = fln = None
-        if with_pos:
-            # a block's positions count is the sum of its tfs
-            tf_run = np.concatenate(([0], np.cumsum(tfs)))
-            ends = np.cumsum(n)
-            pos = vbyte_decode_parts(pdf["pos"].to_numpy(),
-                                     tf_run[ends] - tf_run[ends - n])
-        if nf:
-            ftf, fln = (
-                vbyte_decode_parts(pdf[col].to_numpy(), n * nf).reshape(-1, nf)
-                for col in ("ftf", "fln")
             )
         rows = encode_blocks(pdf["term"].iloc[0], ids, tfs, dls, block_size,
                              bucket_span, pos=pos, ftf=ftf, fln=fln)

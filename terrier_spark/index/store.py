@@ -58,6 +58,32 @@ def where_term_in(df: DataFrame, terms) -> DataFrame:
     return df.filter(Column(df._jdf.col("term").isInCollection(values)))
 
 
+def committed_segments(path: str) -> list[str]:
+    """The committed segments under path/segments, sorted: those with a
+    _SUCCESS marker, but not a `<name>.tmp-<hex>` directory a segment
+    commit stages in (a task killed mid-commit leaves one behind)."""
+    seg_root = os.path.join(path, "segments")
+    if not os.path.isdir(seg_root):
+        return []
+    return sorted(
+        d for d in os.listdir(seg_root)
+        if ".tmp-" not in d
+        and os.path.exists(os.path.join(seg_root, d, "_SUCCESS"))
+    )
+
+
+def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """One table of every committed segment, read by explicit path (a
+    directory glob would also match staging directories)."""
+    seg_root = os.path.join(path, "segments")
+    paths = [os.path.join(seg_root, d, f"{table}.parquet")
+             for d in committed_segments(path)]
+    # no committed segment: Spark raises PATH_NOT_FOUND on a path that
+    # does not exist, as it did on a glob that matched nothing
+    return spark.read.parquet(
+        *(paths or [os.path.join(seg_root, f"{table}.parquet")]))
+
+
 class IndexStore:
     def __init__(self, path: str):
         self.path = path
@@ -118,24 +144,14 @@ class IndexStore:
     def layout(self) -> str:
         return self.manifest.get("layout")
 
-    def _segment_glob(self, table: str) -> str:
-        return f"{self.path}/segments/seg_*/{table}.parquet"
-
     def segment_names(self) -> list[str]:
-        """Committed segments (those with a _SUCCESS marker), sorted."""
-        seg_root = os.path.join(self.path, "segments")
-        if not os.path.isdir(seg_root):
-            return []
-        return sorted(
-            d for d in os.listdir(seg_root)
-            if os.path.exists(os.path.join(seg_root, d, "_SUCCESS"))
-        )
+        return committed_segments(self.path)
 
     def docs(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._segment_glob("docs"))
+        return read_segments(spark, self.path, "docs")
 
     def meta(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._segment_glob("meta"))
+        return read_segments(spark, self.path, "meta")
 
     def lexicon(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(f"{self.path}/lexicon")
@@ -204,7 +220,7 @@ class IndexStore:
 
     def _postings_uncached(self, spark: SparkSession) -> DataFrame:
         if self.layout == "segmented":
-            return spark.read.parquet(self._segment_glob("postings"))
+            return read_segments(spark, self.path, "postings")
         df = spark.read.parquet(f"{self.path}/postings_compact")
         # segments appended AFTER the recorded compaction are not in the
         # compact file yet — union them so queries between compactions

@@ -26,7 +26,7 @@ Bo1 expansion replicates the reference semantics exactly:
 from __future__ import annotations
 
 import math
-from typing import Iterator, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -116,24 +116,11 @@ def build_direct_index(spark: SparkSession, store: IndexStore) -> None:
     """Transpose the inverted postings into {path}/direct rows
     (docid, term, tf), range-partitioned by docid so feedback-doc
     lookups prune."""
-    from terrier_spark.compression.vbyte import decode_scoring_block
+    from terrier_spark.index.builder import explode_blocks
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, _ = decode_scoring_block(row.block)
-                outs.append(
-                    pd.DataFrame({"docid": ids, "term": row.term, "tf": tfs})
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    rows = store.postings(spark).select("term", "block").mapInPandas(
-        explode, schema="docid long, term string, tf long"
-    )
+    rows = explode_blocks(store.postings(spark), ["term"], ["docid", "tf"])
     (
-        rows.repartitionByRange(16, "docid")
+        rows.select("docid", "term", "tf").repartitionByRange(16, "docid")
         .sortWithinPartitions("docid", "term")
         .write.mode("overwrite")
         .parquet(f"{store.path}/direct")

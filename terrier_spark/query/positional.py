@@ -23,13 +23,13 @@ Positions index the KEPT pipeline term stream (BlockIndexer semantics).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from terrier_spark.compression.vbyte import decode_positions, decode_scoring_block
+from terrier_spark.index.builder import explode_blocks
 from terrier_spark.index.store import IndexStore
 
 
@@ -58,26 +58,7 @@ def posting_positions(spark: SparkSession, store: IndexStore,
         )
         blocks = blocks.join(ok_buckets, "bucket", "left_semi")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, dls = decode_scoring_block(row.block)
-                if ids.size == 0 or row.pos is None:
-                    continue
-                outs.append(pd.DataFrame({
-                    "term": row.term,
-                    "docid": ids,
-                    "dl": dls,
-                    "positions": decode_positions(row.pos, tfs),
-                }))
-            if outs:
-                yield pd.concat(outs)
-
-    rows = blocks.select("term", "block", "pos").mapInPandas(
-        decode,
-        schema="term string, docid long, dl long, positions array<long>",
-    )
+    rows = explode_blocks(blocks, ["term"], ["docid", "dl", "positions"])
     if require_all_terms and n > 1:
         cand = (
             rows.groupBy("docid")
@@ -87,17 +68,6 @@ def posting_positions(spark: SparkSession, store: IndexStore,
         )
         rows = rows.join(cand, "docid", "left_semi")
     return rows
-
-
-def position_rows(spark: SparkSession, store: IndexStore,
-                  terms: Sequence[str],
-                  require_all_terms: bool = False) -> DataFrame:
-    """-> (term, docid, pos) exploded rows (compatibility surface; the
-    phrase/proximity paths below stay on packed arrays)."""
-    rows = posting_positions(spark, store, terms, require_all_terms)
-    return rows.select(
-        "term", "docid", F.explode("positions").alias("pos")
-    )
 
 
 def phrase_docs(spark: SparkSession, store: IndexStore,
@@ -193,24 +163,7 @@ def batch_hits(spark: SparkSession, store: IndexStore,
     )
     blocks = blocks.join(ok_buckets, "bucket", "left_semi")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, _ = decode_scoring_block(row.block)
-                if ids.size == 0 or row.pos is None:
-                    continue
-                outs.append(pd.DataFrame({
-                    "term": row.term,
-                    "docid": ids,
-                    "positions": decode_positions(row.pos, tfs),
-                }))
-            if outs:
-                yield pd.concat(outs)
-
-    rows = blocks.select("term", "block", "pos").mapInPandas(
-        decode, schema="term string, docid long, positions array<long>"
-    )
+    rows = explode_blocks(blocks, ["term"], ["docid", "positions"])
     grouped = (
         rows.join(jm, "term")
         .groupBy("job_id", "docid")

@@ -37,11 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from terrier_spark.compression.vbyte import (
-    decode_scoring_blocks,
-    vbyte_decode_parts,
-)
 from terrier_spark.config import QueryConfig
+from terrier_spark.index.builder import decode_blocks
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.models import get_model
 from terrier_spark.text.pipeline import make_pipeline
@@ -284,13 +281,14 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
     The work is batched in RUNS of consecutive groups of about
     `_RUN_POSTINGS` postings: a run's groups already skippable against
     the thresholds at its start are dropped (a threshold only rises),
-    the rest are decoded in one decode_scoring_blocks call and scored
+    the rest are decoded in one decode_blocks call and scored
     in one model-kernel call.  Then the groups are walked in order, each
     re-checked against its qid's live threshold — a group skipped there
     is not merged — and merged into the qid's running top k."""
     kernel = spec.kernel
     needs_fields = spec.needs_fields
     budget = _RUN_POSTINGS
+    nf = 0
     if needs_fields:
         weights, cs, avg_flens = field_params
         nf = len(avg_flens)
@@ -320,24 +318,21 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                     .max().groupby(level=0).sum().to_numpy()
                 )
             qids = frame["qid"].to_numpy()
-            blocks = frame["block"].to_numpy()
             qtf, nt, tfc = (frame[c].to_numpy() for c in ("qtf", "nt", "tfc"))
-            if needs_fields:
-                ftf_col = frame["ftf"].to_numpy()
-                fln_col = frame["fln"].to_numpy()
+            payloads = {c: frame[c].to_numpy() for c in
+                        (("block", "ftf", "fln") if nf else ("block",))}
 
             def decode_and_score(rows: np.ndarray):
                 """One decode and one model-kernel pass over block rows
                 -> (docids, scores, postings per row)."""
-                ids, tfs, dls, n = decode_scoring_blocks(blocks[rows])
+                ids, tfs, dls, n, _, ftf, fln = decode_blocks(
+                    {c: v[rows] for c, v in payloads.items()}, nf=nf)
                 if not needs_fields:
                     return ids, kernel(
                         tfs, dls, np.repeat(qtf[rows], n),
                         np.repeat(nt[rows], n), np.repeat(tfc[rows], n),
                         N, avgdl, T,
                     ), n
-                ftf = vbyte_decode_parts(ftf_col[rows], n * nf).reshape(-1, nf)
-                fln = vbyte_decode_parts(fln_col[rows], n * nf).reshape(-1, nf)
                 # field kernels take one term's nt and F: one call per row
                 # over its slice of the run's decoded payloads
                 at = np.cumsum(n) - n

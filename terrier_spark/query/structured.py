@@ -19,8 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from terrier_spark.compression.vbyte import decode_scoring_block
 from terrier_spark.config import QueryConfig
+from terrier_spark.index.builder import decode_blocks, explode_blocks
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.parser import parse_query
 from terrier_spark.query.search import _topk, search_terms
@@ -30,20 +30,8 @@ from terrier_spark.text.pipeline import make_pipeline
 def _docids_with_terms(spark: SparkSession, store: IndexStore,
                        pairs: pd.DataFrame) -> DataFrame:
     """pairs (qid, term) -> (qid, term, docid) decoded from postings."""
-    blocks = store.postings_for(spark, pairs["term"])
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, _, _ = decode_scoring_block(row.block)
-                outs.append(pd.DataFrame({"term": row.term, "docid": ids}))
-            if outs:
-                yield pd.concat(outs)
-
-    hits = blocks.select("term", "block").mapInPandas(
-        decode, schema="term string, docid long"
-    )
+    hits = explode_blocks(store.postings_for(spark, pairs["term"]),
+                          ["term"], ["docid"])
     qp = spark.createDataFrame(pairs[["qid", "term"]])
     return hits.join(F.broadcast(qp), "term").select("qid", "term", "docid")
 
@@ -52,33 +40,22 @@ def _docids_with_field_terms(spark: SparkSession, store: IndexStore,
                              rows: pd.DataFrame, nf: int) -> DataFrame:
     """rows (qid, term, field_idx) -> (qid, term, field_idx, docid) for
     docs whose per-field tf of `term` in field `field_idx` is > 0."""
-    from terrier_spark.compression.vbyte import vbyte_decode
-
     blocks = store.postings_for(spark, rows["term"])
     wanted = rows.groupby("term")["field_idx"].apply(set).to_dict()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, _, _ = decode_scoring_block(row.block)
-                if ids.size == 0 or row.ftf is None:
-                    continue
-                ftf = vbyte_decode(row.ftf, ids.size * nf).reshape(
-                    ids.size, nf
-                )
-                for fi in wanted.get(row.term, ()):
-                    mask = ftf[:, fi] > 0
-                    if mask.any():
-                        outs.append(pd.DataFrame({
-                            "term": row.term,
-                            "field_idx": fi,
-                            "docid": ids[mask],
-                        }))
-            if outs:
-                yield pd.concat(outs)
+            pdf = pdf[pdf["ftf"].notna()]
+            ids, _, _, n, _, ftf, _ = decode_blocks(pdf, nf=nf)
+            terms = np.repeat(pdf["term"].to_numpy(), n)
+            for term in pdf["term"].unique():
+                for fi in wanted.get(term, ()):
+                    hit = (terms == term) & (ftf[:, fi] > 0)
+                    if hit.any():
+                        yield pd.DataFrame({"term": term, "field_idx": fi,
+                                            "docid": ids[hit]})
 
-    hits = blocks.select("term", "block", "ftf").mapInPandas(
+    hits = blocks.select("term", "block", "ftf", "fln").mapInPandas(
         decode, schema="term string, field_idx int, docid long"
     )
     qp = spark.createDataFrame(rows[["qid", "term", "field_idx"]])
@@ -127,30 +104,9 @@ def _score_disjunctions(spark: SparkSession, store: IndexStore,
     amap = spark.createDataFrame(
         alt[["term", "qid", "gid", "qtf", "nt", "tfc"]]
     )
-    joined = blocks.join(F.broadcast(amap), "term")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                ids, tfs, dls = decode_scoring_block(row.block)
-                if ids.size == 0:
-                    continue
-                outs.append(pd.DataFrame({
-                    "qid": row.qid, "gid": row.gid, "docid": ids,
-                    "tf": tfs, "dl": dls, "qtf": row.qtf,
-                    "nt": row.nt, "tfc": row.tfc,
-                }))
-            if outs:
-                yield pd.concat(outs)
-
-    rows = joined.select(
-        "qid", "gid", "qtf", "nt", "tfc", "block"
-    ).mapInPandas(
-        decode,
-        schema="qid string, gid int, docid long, tf long, dl long, "
-               "qtf double, nt long, tfc long",
-    )
+    rows = explode_blocks(blocks.join(F.broadcast(amap), "term"),
+                          ["qid", "gid", "qtf", "nt", "tfc"],
+                          ["docid", "tf", "dl"])
     combined = rows.groupBy("qid", "gid", "docid", "qtf", "nt", "tfc").agg(
         F.sum("tf").alias("tf"), F.min("dl").alias("dl")
     )

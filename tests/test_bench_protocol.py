@@ -1,5 +1,9 @@
 """Protocol-stamp helpers in bench.py (shared by scaling_bench.py).
 
+protocol_compliant checks the run's PARAMETERS against the graded
+protocol, relative to the host it ran on: a run on every core of a
+4-vCPU host is as compliant as one on every core of a 32-core host.
+
 quiet_box is the graded-comparison filter: it must flag runs where
 external load could have slowed the measurement, and must NOT flag
 idle-box runs whose start-of-run probe was merely cold (governor ramp)
@@ -7,7 +11,7 @@ idle-box runs whose start-of-run probe was merely cold (governor ramp)
 one of a competitor that left mid-run.
 """
 
-from bench import quiet_box
+from bench import protocol_compliant, quiet_box
 
 
 IDLE = [0.3, 0.2, 0.1]
@@ -37,3 +41,17 @@ def test_not_quiet_when_probe_speeds_up_too_much():
 
 def test_not_quiet_when_loaded_at_start():
     assert quiet_box([4.57, 2.0, 1.0], 0.25, 0.25) is False
+
+
+def test_compliant_on_every_core_of_any_host():
+    for nproc in (4, 32):
+        assert protocol_compliant(3, nproc, 1000, "/data/sf0.1", nproc)
+        assert protocol_compliant(5, nproc, 1000, "/data/sf0.1/", nproc)
+
+
+def test_not_compliant_off_protocol():
+    assert not protocol_compliant(3, 32, 1000, "/data/sf0.1", 4)
+    assert not protocol_compliant(3, 2, 1000, "/data/sf0.1", 4)
+    assert not protocol_compliant(2, 4, 1000, "/data/sf0.1", 4)
+    assert not protocol_compliant(3, 4, 10, "/data/sf0.1", 4)
+    assert not protocol_compliant(3, 4, 1000, "/data/sf0.01", 4)

@@ -148,6 +148,45 @@ def test_manifest_is_a_function_of_corpus_and_config(spark, corpus,
     assert resumed.build_metrics["build_seconds"] > 0
 
 
+@pytest.fixture(scope="module")
+def clean_build(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("clean") / "idx")
+    return build_index_resumable(spark, corpus, out, bucket_span=128)
+
+
+@pytest.mark.parametrize("marker", [True, False])
+def test_resume_ignores_stale_staging_directory(spark, corpus, clean_build,
+                                                 tmp_path, marker):
+    """A task killed mid-commit leaves its `<segment>.tmp-<hex>` staging
+    directory beside the segments, with or without its _SUCCESS marker.
+    A resumed build and the store it returns read the committed segments
+    only: the same stats, docs and BM25 results as a clean build."""
+    import shutil
+
+    out = str(tmp_path / "stale")
+    shutil.copytree(clean_build.path, out)
+    seg = os.path.join(out, "segments", "seg_00000")
+    stale = seg + ".tmp-deadbeef"
+    shutil.copytree(seg, stale)
+    if not marker:
+        os.remove(os.path.join(stale, "_SUCCESS"))
+    resumed = build_index_resumable(spark, corpus, out, bucket_span=128)
+    assert resumed.build_metrics["partitions_cached"] == 6
+    assert os.path.isdir(stale)
+    assert resumed.manifest["stats"] == clean_build.manifest["stats"]
+    assert resumed.docs(spark).count() == clean_build.docs(spark).count()
+    queries = [("a", "sym1 sym2 sym3"), ("b", "sym4 sym5")]
+    qcfg = QueryConfig(k=10, ignore_low_idf=False)
+
+    def ranking(store):
+        return search(spark, store, queries, qcfg).orderBy(
+            "qid", "rank").collect()
+
+    want = ranking(clean_build)
+    assert len(want) == 20
+    assert ranking(resumed) == want
+
+
 def test_crash_path_resumes(spark, corpus, tmp_path):
     """Real exception mid-job: whatever committed before the abort is
     reused; the resume run completes and matches a clean build."""

@@ -1,15 +1,20 @@
 """VByte codec round-trip + property tests (FIXTURES.md §6)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from terrier_spark.index.builder import (
+    BLOCK_COLUMNS,
+    decode_blocks,
+    encode_blocks,
+)
+
 from terrier_spark.compression.vbyte import (
-    decode_posting_block,
     decode_scoring_block,
     decode_scoring_blocks,
-    encode_posting_block,
     encode_scoring_block,
     vbyte_decode,
     vbyte_decode_parts,
@@ -20,8 +25,9 @@ from terrier_spark.compression.vbyte import (
 def test_empty():
     assert vbyte_encode(np.array([], dtype=np.uint64)) == b""
     assert vbyte_decode(b"").size == 0
-    ids, tfs = decode_posting_block(b"")
-    assert ids.size == 0 and tfs.size == 0
+    assert encode_scoring_block(np.array([], dtype=np.int64), [], []) == b""
+    ids, tfs, dls = decode_scoring_block(b"")
+    assert ids.size == 0 and tfs.size == 0 and dls.size == 0
 
 
 def test_small_values_one_byte_each():
@@ -53,6 +59,7 @@ def test_roundtrip_property(values):
         st.tuples(
             st.integers(min_value=0, max_value=2**40),
             st.integers(min_value=1, max_value=100000),
+            st.integers(min_value=1, max_value=100000),
         ),
         min_size=1,
         max_size=500,
@@ -60,28 +67,31 @@ def test_roundtrip_property(values):
 )
 def test_posting_block_roundtrip(postings):
     # unique ascending docids
-    ids = np.array(sorted({d for d, _ in postings}), dtype=np.int64)
-    tfs = np.array([t for _, t in postings[: ids.size]], dtype=np.int64)
-    block = encode_posting_block(ids, tfs)
-    out_ids, out_tfs = decode_posting_block(block)
-    np.testing.assert_array_equal(out_ids, ids)
-    np.testing.assert_array_equal(out_tfs, tfs)
+    ids = np.array(sorted({d for d, _, _ in postings}), dtype=np.int64)
+    tfs = np.array([t for _, t, _ in postings[: ids.size]], dtype=np.int64)
+    dls = np.array([d for _, _, d in postings[: ids.size]], dtype=np.int64)
+    out = decode_scoring_block(encode_scoring_block(ids, tfs, dls))
+    for got, want in zip(out, (ids, tfs, dls)):
+        np.testing.assert_array_equal(got, want)
 
 
 def test_posting_block_docid_zero():
     ids = np.array([0, 5, 6, 100], dtype=np.int64)
     tfs = np.array([3, 1, 2, 9], dtype=np.int64)
-    out_ids, out_tfs = decode_posting_block(encode_posting_block(ids, tfs))
-    np.testing.assert_array_equal(out_ids, ids)
-    np.testing.assert_array_equal(out_tfs, tfs)
+    dls = np.array([7, 1, 4, 300], dtype=np.int64)
+    out = decode_scoring_block(encode_scoring_block(ids, tfs, dls))
+    for got, want in zip(out, (ids, tfs, dls)):
+        np.testing.assert_array_equal(got, want)
 
 
 def test_compression_is_compact():
-    # dense ascending docids -> gaps of 1 -> ~1 byte per id + 1 per tf + header
+    # dense ascending docids -> gaps of 1 -> ~1 byte per gap, tf and
+    # doclen, plus the 12-byte header
     ids = np.arange(10000, dtype=np.int64)
     tfs = np.ones(10000, dtype=np.int64)
-    block = encode_posting_block(ids, tfs)
-    assert len(block) <= 8 + 2 * 10000 + 2
+    dls = np.full(10000, 100, dtype=np.int64)
+    block = encode_scoring_block(ids, tfs, dls)
+    assert len(block) <= 12 + 3 * 10000 + 2
 
 
 # one scoring block: unique docids below 2^43, tf and doclen up to 2^32;
@@ -128,6 +138,54 @@ def test_decode_scoring_blocks_edges():
     assert ids.size == tfs.size == dls.size == n.size == 0
 
 
+# one term's postings: unique docids, tf 1..4 (a position per
+# occurrence), doclen, and two fields' tfs and lengths
+_term_postings = st.lists(
+    st.tuples(st.integers(0, 5000), st.integers(1, 4), st.integers(1, 300),
+              st.integers(0, 9), st.integers(0, 9), st.integers(1, 300),
+              st.integers(1, 300)),
+    min_size=1, max_size=12, unique_by=lambda p: p[0],
+).map(sorted)
+
+
+def _encode_terms(terms, with_pos, nf, block_size, bucket_span, seed=0):
+    """-> (the block rows frame, the concatenated encoder inputs)."""
+    rng = np.random.default_rng(seed)
+    rows, want = [], {k: [] for k in ("ids", "tfs", "dls", "pos", "ftf",
+                                      "fln")}
+    for i, postings in enumerate(terms):
+        ids, tfs, dls, f0, f1, l0, l1 = (
+            np.array(c, dtype=np.int64) for c in zip(*postings))
+        pos = rng.integers(0, 1000, int(tfs.sum())) if with_pos else None
+        ftf = np.stack([f0, f1], axis=1)[:, :nf] if nf else None
+        fln = np.stack([l0, l1], axis=1)[:, :nf] if nf else None
+        rows += encode_blocks(f"t{i}", ids, tfs, dls, block_size,
+                              bucket_span, pos=pos, ftf=ftf, fln=fln)
+        for k, v in zip(want, (ids, tfs, dls, pos, ftf, fln)):
+            want[k].append(v)
+    return pd.DataFrame(rows, columns=BLOCK_COLUMNS), want
+
+
+@settings(max_examples=100, deadline=None, derandomize=True)
+@given(st.lists(_term_postings, min_size=1, max_size=5), st.booleans(),
+       st.sampled_from([0, 2]), st.integers(1, 5),
+       st.sampled_from([64, 1 << 16]))
+def test_decode_blocks_inverts_encode_blocks(terms, with_pos, nf,
+                                             block_size, bucket_span):
+    """decode_blocks returns encode_blocks' inputs, block_size 1 giving
+    1-posting blocks and a small bucket span blocks cut at buckets."""
+    frame, want = _encode_terms(terms, with_pos, nf, block_size,
+                                bucket_span)
+    ids, tfs, dls, n, pos, ftf, fln = decode_blocks(frame, with_pos, nf)
+    np.testing.assert_array_equal(n, frame["n"])
+    for got, key in zip((ids, tfs, dls, pos, ftf, fln), want):
+        if want[key][0] is None:
+            assert got is None
+        else:
+            np.testing.assert_array_equal(got, np.concatenate(want[key]))
+            assert got.dtype == np.int64
+
+
 def _with_header(block: bytes, **fields) -> bytes:
     hdr = np.frombuffer(block[:12], dtype=np.uint32).copy()
     for i, key in enumerate(("n", "gap_bytes", "tf_bytes")):
@@ -155,6 +213,19 @@ def test_decode_scoring_blocks_rejects_corrupt_blocks():
                 decode_scoring_blocks(blocks)
         with pytest.raises(ValueError):
             decode_scoring_block(block)
+    # decode_blocks checks each payload's count: positions the block's
+    # tf sum, field tfs and lengths n x nf; one value short or over, or
+    # a null payload, raises
+    frame, _ = _encode_terms([[(3, 2, 9, 1, 1, 5, 4), (70, 1, 9, 0, 1, 6, 3),
+                               (71, 3, 9, 2, 1, 5, 4)]], True, 2, 2, 64)
+    for col in ("pos", "ftf", "fln"):
+        values = vbyte_decode(frame[col][0]).tolist()
+        for wrong in (values[:-1], values + [1], None):
+            bad = frame.copy()
+            bad.at[0, col] = (None if wrong is None
+                              else vbyte_encode(np.array(wrong, np.uint64)))
+            with pytest.raises(ValueError):
+                decode_blocks(bad, pos=True, nf=2)
 
 
 def test_vbyte_decode_parts_checks_each_count():
