@@ -154,15 +154,18 @@ def encode_blocks(term: str, ids: np.ndarray, tfs: np.ndarray,
     return rows
 
 
-def decode_blocks(frame, pos: bool = False, nf: int = 0) -> tuple:
+def decode_blocks(frame, pos: bool = False, nf: int = 0,
+                  fields=("ftf", "fln")) -> tuple:
     """The inverse of encode_blocks over many block rows at once: `frame`
-    maps "block" (and, as asked, "pos", "ftf", "fln") to one value per
-    block row -> (docids, tfs, doclens, postings per row, flat positions
-    or None, n x nf field tfs or None, n x nf field lengths or None),
-    the postings of all rows concatenated in row order.  One
-    decode_scoring_blocks call plus one vbyte_decode_parts call per
-    payload; ValueError unless each row's positions number its tf sum
-    and its ftf/fln values n x nf, or when an asked payload is null."""
+    maps "block" (and, as asked, "pos" and the `fields` payloads of
+    "ftf", "fln") to one value per block row -> (docids, tfs, doclens,
+    postings per row, flat positions or None, n x nf field tfs or None,
+    n x nf field lengths or None), the postings of all rows concatenated
+    in row order.  Field payloads are decoded when nf > 0, only those
+    named in `fields`.  One decode_scoring_blocks call plus one
+    vbyte_decode_parts call per decoded payload; ValueError unless each
+    row's positions number its tf sum and its ftf/fln values n x nf, or
+    when a decoded payload is null."""
     ids, tfs, dls, n = decode_scoring_blocks(frame["block"])
 
     def payload(col, counts):
@@ -171,13 +174,13 @@ def decode_blocks(frame, pos: bool = False, nf: int = 0) -> tuple:
             raise ValueError(f"block row without its {col} payload")
         return vbyte_decode_parts(parts, counts).astype(np.int64)
 
-    flat = ftf = fln = None
+    flat = None
     if pos:
         tf_run = np.concatenate(([0], np.cumsum(tfs)))
         ends = np.cumsum(n)
         flat = payload("pos", tf_run[ends] - tf_run[ends - n])
-    if nf:
-        ftf, fln = (payload(c, n * nf).reshape(-1, nf) for c in ("ftf", "fln"))
+    ftf, fln = (payload(c, n * nf).reshape(-1, nf) if nf and c in fields
+                else None for c in ("ftf", "fln"))
     return ids, tfs, dls, n, flat, ftf, fln
 
 
@@ -532,6 +535,11 @@ def _build_segments(corpus: DataFrame, out_dir: str, plan: dict,
     checkpoint rows in checkpoints/partitions.json, which it returns."""
     seg_root = os.path.join(out_dir, "segments")
     os.makedirs(seg_root, exist_ok=True)
+    # a task killed mid-commit leaves its `<segment>.tmp-<hex>` staging
+    # directory behind, a full copy of a segment that no reader lists
+    for name in os.listdir(seg_root):
+        if ".tmp-" in name:
+            shutil.rmtree(os.path.join(seg_root, name), ignore_errors=True)
     # prior lineage for cached-segment verification (driver-side read,
     # broadcast via the closure — one small dict)
     prior_lineage: dict[int, str] = {}

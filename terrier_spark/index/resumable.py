@@ -87,20 +87,17 @@ def compact_postings(spark: SparkSession, store: IndexStore,
     fields = manifest.get("fields")
     nf = len(fields) if fields else 0
 
-    seg_root = os.path.join(out_dir, "segments")
     compact_path = os.path.join(out_dir, "postings_compact")
     all_segs = store.segment_names()
     covered = set(manifest.get("compacted_segments") or [])
-    new_segs = [s for s in all_segs if s not in covered]
-    paths = [f"{seg_root}/{s}/postings.parquet" for s in new_segs]
-    if covered and os.path.isdir(compact_path):
-        # nothing appended since the last compaction AND the maxscore
-        # metadata is already registered -> nothing to do (a compacted
-        # index without it falls through and gets upgraded)
-        if not new_segs and manifest.get("maxscore_models") is not None:
-            return store
-        paths.append(compact_path)
-    src = spark.read.parquet(*paths).select(
+    # nothing appended since the last compaction AND the maxscore
+    # metadata is already registered -> nothing to do (a compacted index
+    # without it falls through and gets upgraded)
+    if (covered and covered.issuperset(all_segs)
+            and manifest.get("maxscore_models") is not None):
+        return store
+    # the previous compact file plus the segments appended since
+    src = spark.read.parquet(*store.posting_files()).select(
         "term", "bucket", "first_docid", "block", "pos", "ftf", "fln"
     )
     blocks = src.groupBy("term", "bucket").applyInPandas(

@@ -218,21 +218,32 @@ class IndexStore:
             return (mtime,)
         return (mtime, *sorted(os.listdir(seg_root)))
 
+    def posting_files(self) -> list[str]:
+        """Every parquet file of the live postings, the files both search
+        paths read: each committed segment's postings.parquet or, once
+        compacted, the postings_compact part files plus the postings of
+        the segments appended after the recorded compaction."""
+        segs = self.segment_names()
+        files = []
+        if self.layout == "segmented_compacted":
+            compact = os.path.join(self.path, "postings_compact")
+            # Spark's own listing rule: `_SUCCESS` and `.crc` files are
+            # not data
+            files = [os.path.join(compact, f)
+                     for f in sorted(os.listdir(compact))
+                     if not f.startswith(("_", "."))]
+            covered = set(self.manifest["compacted_segments"])
+            segs = [d for d in segs if d not in covered]
+        seg_root = os.path.join(self.path, "segments")
+        return files + [os.path.join(seg_root, d, "postings.parquet")
+                        for d in segs]
+
     def _postings_uncached(self, spark: SparkSession) -> DataFrame:
-        if self.layout == "segmented":
-            return read_segments(spark, self.path, "postings")
-        df = spark.read.parquet(f"{self.path}/postings_compact")
-        # segments appended AFTER the recorded compaction are not in the
-        # compact file yet — union them so queries between compactions
-        # see a consistent index
-        covered = set(self.manifest["compacted_segments"])
-        extra = [
-            os.path.join(self.path, "segments", d, "postings.parquet")
-            for d in self.segment_names() if d not in covered
-        ]
-        if extra:
-            df = df.unionByName(spark.read.parquet(*extra))
-        return df
+        files = self.posting_files()
+        if not files:
+            # Spark raises PATH_NOT_FOUND on a path that does not exist
+            files = [os.path.join(self.path, "segments", "postings.parquet")]
+        return spark.read.parquet(*files)
 
     def pipeline_config(self):
         from terrier_spark.config import PipelineConfig

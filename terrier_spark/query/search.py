@@ -2,15 +2,13 @@
 weighting models (default BM25).
 
 The reference's DAAT heap walk (org/terrier/matching/daat/Full.java:78-186)
-becomes one declarative plan Catalyst owns around one vectorized kernel:
+becomes one vectorized kernel, `_search_kernel`, over block rows sorted
+by (qid, bucket):
 
-    scan postings (term-pruned parquet scan, IndexStore.postings_for)
-      -> broadcast-join per-(qid,term) stats          [lexicon lookup,
-         PostingListManager.java:213; low-idf drop :217-219]
-      -> repartition(qid), sorted by (qid, bucket)    [one query's blocks
-         in one partition, as one DAAT walk holds one query]
-      -> Python kernel over Arrow batches, in runs of consecutive
-         (qid, bucket) groups (~2^16 postings each):
+    block rows of the query terms ⋈ per-(qid,term) stats   [lexicon
+                                 lookup, PostingListManager.java:213;
+                                 low-idf drop :217-219]
+      -> in runs of consecutive (qid, bucket) groups (~2^16 postings):
            drop the groups already below their qid's threshold, then
            ONE VByte decode + ONE numpy model-kernel call for the run;
            then per group: skip it when its block-max bound < the
@@ -21,9 +19,21 @@ becomes one declarative plan Catalyst owns around one vectorized kernel:
            docid asc                                   [pinned — reference
          ties are unstable, daat/CandidateResult.java:52-62]
 
-All queries of a batch run as ONE Spark job (the fork's 900-query
-benchmark loop becomes a single plan over a qid dimension), as the
-reference sums scores and prunes inside matching for every query.
+Two paths feed that one kernel, chosen by Σ nt over the (qid, term)
+rows, the postings the search decodes at most:
+
+  * driver — the search fits in one kernel run (_RUN_POSTINGS): its block
+    rows are read with pyarrow from IndexStore.posting_files(), joined
+    and sorted in pandas, and the kernel runs in process, as the
+    reference runs one query's DAAT walk on one thread.  The result is a
+    local DataFrame: a single query costs no Spark job besides the
+    caller's own action;
+  * Spark — one declarative plan Catalyst owns: term-pruned parquet scan
+    (IndexStore.postings_for) -> broadcast join of the stats ->
+    repartition(qid), sorted by (qid, bucket), so one query's blocks
+    meet in one partition -> mapInPandas(kernel).  All queries of a
+    batch run as ONE Spark job (the fork's 900-query benchmark loop
+    becomes a single plan over a qid dimension).
 """
 
 from __future__ import annotations
@@ -38,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from terrier_spark.config import QueryConfig
-from terrier_spark.index.builder import decode_blocks
+from terrier_spark.index.builder import POSTINGS_ARROW_SCHEMA, decode_blocks
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.models import get_model
 from terrier_spark.text.pipeline import make_pipeline
@@ -145,8 +155,7 @@ def _qterm_stats(spark: SparkSession, store: IndexStore, qterms: pd.DataFrame,
 
 
 def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
-                  blocks: DataFrame, field_params, N: int, avgdl: float,
-                  T: int):
+                  field_params, N: int, avgdl: float, T: int):
     """The block-max bound source of a search, tightest available first:
 
       * the stored EXACT per-block unit-score maximum (index/maxscore.py)
@@ -158,13 +167,14 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
         at 0 (valid when the idf factor goes negative, where every
         actual score is negative).
 
-    -> (block columns the bound reads, fn(pdf) -> per-block upper
-    bounds), or ([], None) when pruning is off or nothing bounds the
-    model."""
+    -> (the kernel-frame columns the bound reads, the 1-based position
+    in `max_score` that its "ms" column reads or None, fn(pdf) ->
+    per-block upper bounds), or ([], None, None) when pruning is off or
+    nothing bounds the model."""
     if not qcfg.prune:
-        return [], None
+        return [], None, None
     ms_idx = None
-    if qcfg.use_exact_maxscore and "max_score" in blocks.columns:
+    if qcfg.use_exact_maxscore:
         # maxscore_index() already refuses stale snapshots; field-model
         # maxima additionally assume the index-time default field
         # parameters (weights = cs = 1.0), so a reweighted query falls
@@ -179,9 +189,8 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
             qtf = pdf["qtf"].to_numpy(np.float64)
             return pdf["ms"].to_numpy(np.float64) * spec.qtf_scale(qtf)
 
-        ms = F.element_at(F.col("max_score"), F.lit(int(ms_idx)))
-        return [ms.alias("ms")], exact
-    if spec.field_bound is not None and "max_ftf_f" in blocks.columns:
+        return ["ms"], int(ms_idx), exact
+    if spec.field_bound is not None:
         weights, cs, avg_flens = field_params
 
         def field(pdf: pd.DataFrame) -> np.ndarray:
@@ -192,7 +201,7 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
                 pdf["nt"].to_numpy(np.float64), N, weights, cs, avg_flens,
             )
 
-        return ["max_ftf_f", "min_fln_f"], field
+        return ["max_ftf_f", "min_fln_f"], None, field
     if spec.prunable:
         def monotone(pdf: pd.DataFrame) -> np.ndarray:
             ub = spec.kernel(
@@ -202,8 +211,8 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
             )
             return np.maximum(ub, 0.0)
 
-        return ["max_tf", "min_dl"], monotone
-    return [], None
+        return ["max_tf", "min_dl"], None, monotone
+    return [], None, None
 
 
 class _TopK:
@@ -258,16 +267,17 @@ def _group_starts(pdf: pd.DataFrame) -> np.ndarray:
 
 def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                    k: int, bounds, counters, qid_labels):
-    """Partition kernel: a partition's block rows, sorted by (qid,
-    bucket) -> each of its qids' final top k as (qid, rank, docid,
-    score) rows, rank 0-based by score desc, docid asc.  field_params =
-    (weights, cs, avg_flens) for field models; `bounds` is the
-    _block_bounds function (None: never skip); `counters` = (groups
-    seen, groups decoded) accumulators or None; `qid_labels[code]` is
-    the label of int qid code `code`.
+    """The search kernel: frames of block rows sorted by (qid, bucket)
+    -> each of its qids' final top k as (qid, rank, docid, score) rows,
+    rank 0-based by score desc, docid asc.  field_params = (weights, cs,
+    avg_flens) for field models; `bounds` is the third value of
+    _block_bounds (None: never skip); `counters` = (groups seen, groups
+    decoded) accumulators or None; `qid_labels[code]` is the label of
+    int qid code `code`.
 
-    The input is hash-partitioned by qid, so a partition holds every
-    block of each of its queries.  The bucket invariant (bucket labels
+    Its input holds every block of each of its queries: a Spark
+    partition of blocks hash-partitioned by qid, or on the driver path
+    one frame of all the search's blocks.  The bucket invariant (bucket labels
     partition docids identically across every term) puts all of a doc's
     postings for one query in one (qid, bucket) group, so a group's
     per-doc sums are FINAL document scores.  A group's upper bound is,
@@ -287,7 +297,7 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
     is not merged — and merged into the qid's running top k."""
     kernel = spec.kernel
     needs_fields = spec.needs_fields
-    budget = _RUN_POSTINGS
+    budget = max(_RUN_POSTINGS, 1)
     nf = 0
     if needs_fields:
         weights, cs, avg_flens = field_params
@@ -477,7 +487,8 @@ def search_terms(
     `stats_out`, when given, receives the block-max skip counters:
     `candidate_buckets` ((qid, bucket) groups the kernel saw),
     `surviving_buckets` (the groups it decoded) and `pruned_fraction`.
-    Filling it runs the search once more, as a count() job."""
+    On the Spark path, filling it runs the search once more, as a
+    count() job; the driver path reads its own kernel run's counts."""
     qcfg = qcfg or QueryConfig()
     _check_session_tuning(spark)
     stats = store.stats
@@ -506,7 +517,6 @@ def search_terms(
         return _search_chunks(spark, store, qterms, qcfg, with_meta,
                               stats_out, per_qid)
 
-    blocks = store.postings_for(spark, qstats["term"])
     # Integer qid codes through the whole decode exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
     # profile, BASELINE.md), and a string qid there costs object-dtype
@@ -518,9 +528,7 @@ def search_terms(
     qstats = qstats.assign(
         qtf=qstats["qtf"].astype(float),
         qid=qstats["qid"].map(qid_code_of).astype("int32"),
-    )
-    qs_df = spark.createDataFrame(qstats[["qid", "term", "qtf", "nt", "tfc"]])
-    joined = blocks.join(F.broadcast(qs_df), "term")
+    )[["qid", "term", "qtf", "nt", "tfc"]]
 
     spec = get_model(qcfg.model)
     field_params = None
@@ -547,8 +555,8 @@ def search_terms(
             ]
             T_eff = sum(field_tokens[i] for i in spec.active_fields)
 
-    bound_cols, bounds = _block_bounds(spec, qcfg, store, blocks,
-                                       field_params, N, avgdl, T_eff)
+    bound_cols, ms_idx, bounds = _block_bounds(spec, qcfg, store,
+                                               field_params, N, avgdl, T_eff)
     if bounds is not None:
         # the group bound takes each term's largest block bound
         bound_cols = ["term", *bound_cols]
@@ -556,28 +564,46 @@ def search_terms(
     if stats_out is not None:
         sc = spark.sparkContext
         counters = (sc.accumulator(0), sc.accumulator(0))
-    # Hash every block of a query to one partition, sorted by (qid,
-    # bucket): the kernel then sees every group as one contiguous run,
-    # scores it to FINAL document scores or skips it against the
-    # query's one running k-th best score, and its top k is the query's
-    # result — no second exchange merges per-partition heaps.  The
-    # exchange moves compressed BLOCK rows (orders of magnitude smaller
-    # than posting rows).  A query's decode runs in one task, as the
-    # reference's DAAT runs one query on one thread; a batch spreads its
-    # queries over the cores.
-    width = min(spark.sparkContext.defaultParallelism, len(qid_labels))
-    out = (
-        joined.select(*sel_cols, "bucket", *bound_cols)
-        .repartition(width, "qid")
-        .sortWithinPartitions("qid", "bucket")
-        .mapInPandas(
-            _search_kernel(spec, N, avgdl, T_eff, field_params, qcfg.k,
-                           bounds, counters, qid_labels),
-            schema="qid string, rank int, docid long, score double",
+    kernel = _search_kernel(spec, N, avgdl, T_eff, field_params, qcfg.k,
+                            bounds, counters, qid_labels)
+    schema = "qid string, rank int, docid long, score double"
+    # Σ nt over the (qid, term) rows counts every posting the kernel can
+    # decode.  When they fit in one kernel run, a Spark job costs more
+    # than the search: run the same kernel on the driver.
+    on_driver = per_qid.sum() <= _RUN_POSTINGS
+    if on_driver:
+        frame = _driver_blocks(store, qstats, [*sel_cols, "bucket",
+                                               *bound_cols], ms_idx)
+        result = next(kernel([frame]), None)
+        out = spark.createDataFrame([] if result is None else result,
+                                    schema)
+    else:
+        blocks = store.postings_for(spark, qstats["term"])
+        qs_df = spark.createDataFrame(qstats)
+        joined = blocks.join(F.broadcast(qs_df), "term")
+        bound_sel = [
+            F.element_at(F.col("max_score"), F.lit(ms_idx)).alias("ms")
+            if c == "ms" else c for c in bound_cols
+        ]
+        # Hash every block of a query to one partition, sorted by (qid,
+        # bucket): the kernel then sees every group as one contiguous
+        # run, scores it to FINAL document scores or skips it against
+        # the query's one running k-th best score, and its top k is the
+        # query's result — no second exchange merges per-partition
+        # heaps.  The exchange moves compressed BLOCK rows (orders of
+        # magnitude smaller than posting rows).  A query's decode runs in
+        # one task, as the reference's DAAT runs one query on one
+        # thread; a batch spreads its queries over the cores.
+        width = min(spark.sparkContext.defaultParallelism, len(qid_labels))
+        out = (
+            joined.select(*sel_cols, "bucket", *bound_sel)
+            .repartition(width, "qid")
+            .sortWithinPartitions("qid", "bucket")
+            .mapInPandas(kernel, schema=schema)
         )
-    )
     if stats_out is not None:
-        out.count()
+        if not on_driver:
+            out.count()
         _record_skips(stats_out, counters[0].value, counters[1].value)
     if with_meta:
         meta = store.meta(spark).select("docid", "docno", "sha256")
@@ -585,6 +611,31 @@ def search_terms(
             "qid", "rank", "docid", "docno", "sha256", "score"
         )
     return out
+
+
+def _driver_blocks(store: IndexStore, qstats: pd.DataFrame, cols,
+                   ms_idx) -> pd.DataFrame:
+    """The Spark plan's kernel input, read on the driver: the block rows
+    of the query terms in store.posting_files() (the term filter pushed
+    into the Parquet scan) joined with `qstats` and stably sorted by
+    (qid, bucket) -> the `cols` columns plus "term", "ms" being element
+    `ms_idx` (1-based) of max_score: NaN for a null list, i.e. no bound,
+    as Spark's element_at reads it."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    read = ["term", *("max_score" if c == "ms" else c
+                      for c in cols if c not in qstats.columns)]
+    table = ds.dataset(
+        store.posting_files(), schema=POSTINGS_ARROW_SCHEMA, format="parquet"
+    ).to_table(columns=read,
+               filter=ds.field("term").isin(qstats["term"].unique()))
+    if ms_idx is not None:
+        table = table.set_column(
+            read.index("max_score"), "ms",
+            pc.list_element(table["max_score"], ms_idx - 1))
+    return table.to_pandas().merge(qstats, on="term").sort_values(
+        ["qid", "bucket"], kind="stable", ignore_index=True)
 
 
 def _record_skips(stats_out: dict, seen: int, decoded: int) -> None:

@@ -46,7 +46,8 @@ def _docids_with_field_terms(spark: SparkSession, store: IndexStore,
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf[pdf["ftf"].notna()]
-            ids, _, _, n, _, ftf, _ = decode_blocks(pdf, nf=nf)
+            ids, _, _, n, _, ftf, _ = decode_blocks(pdf, nf=nf,
+                                                    fields=("ftf",))
             terms = np.repeat(pdf["term"].to_numpy(), n)
             for term in pdf["term"].unique():
                 for fi in wanted.get(term, ()):
@@ -55,7 +56,7 @@ def _docids_with_field_terms(spark: SparkSession, store: IndexStore,
                         yield pd.DataFrame({"term": term, "field_idx": fi,
                                             "docid": ids[hit]})
 
-    hits = blocks.select("term", "block", "ftf", "fln").mapInPandas(
+    hits = blocks.select("term", "block", "ftf").mapInPandas(
         decode, schema="term string, field_idx int, docid long"
     )
     qp = spark.createDataFrame(rows[["qid", "term", "field_idx"]])

@@ -10,7 +10,9 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "terrier-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # SPARK_GRAFT_CPUS, else every core this process may run on
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     return (

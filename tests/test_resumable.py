@@ -159,9 +159,12 @@ def test_resume_ignores_stale_staging_directory(spark, corpus, clean_build,
                                                  tmp_path, marker):
     """A task killed mid-commit leaves its `<segment>.tmp-<hex>` staging
     directory beside the segments, with or without its _SUCCESS marker.
-    A resumed build and the store it returns read the committed segments
-    only: the same stats, docs and BM25 results as a clean build."""
+    A store opened on it reads the committed segments only; a resumed
+    build deletes it, and returns the same stats, docs and BM25 results
+    as a clean build."""
     import shutil
+
+    from terrier_spark.index.store import IndexStore
 
     out = str(tmp_path / "stale")
     shutil.copytree(clean_build.path, out)
@@ -170,11 +173,6 @@ def test_resume_ignores_stale_staging_directory(spark, corpus, clean_build,
     shutil.copytree(seg, stale)
     if not marker:
         os.remove(os.path.join(stale, "_SUCCESS"))
-    resumed = build_index_resumable(spark, corpus, out, bucket_span=128)
-    assert resumed.build_metrics["partitions_cached"] == 6
-    assert os.path.isdir(stale)
-    assert resumed.manifest["stats"] == clean_build.manifest["stats"]
-    assert resumed.docs(spark).count() == clean_build.docs(spark).count()
     queries = [("a", "sym1 sym2 sym3"), ("b", "sym4 sym5")]
     qcfg = QueryConfig(k=10, ignore_low_idf=False)
 
@@ -184,6 +182,15 @@ def test_resume_ignores_stale_staging_directory(spark, corpus, clean_build,
 
     want = ranking(clean_build)
     assert len(want) == 20
+    before = IndexStore(out)
+    assert stale not in {os.path.dirname(f) for f in before.posting_files()}
+    assert before.docs(spark).count() == clean_build.docs(spark).count()
+    assert ranking(before) == want
+    resumed = build_index_resumable(spark, corpus, out, bucket_span=128)
+    assert resumed.build_metrics["partitions_cached"] == 6
+    assert not os.path.exists(stale)
+    assert resumed.manifest["stats"] == clean_build.manifest["stats"]
+    assert resumed.docs(spark).count() == clean_build.docs(spark).count()
     assert ranking(resumed) == want
 
 

@@ -187,13 +187,17 @@ def test_chunked_batch_equals_unchunked(spark, engine):
     assert whole == chunked and whole
 
 
-def test_scan_pushdown_plan_shape(spark, engine):
+def test_scan_pushdown_plan_shape(spark, engine, monkeypatch):
     """Scale guard: the postings scan must keep the term In-filter
     pushed to parquet and read only the columns the plan needs — a scan
-    that reads all columns for the decode would be wrong at 100 TB."""
+    that reads all columns for the decode would be wrong at 100 TB.
+    These searches are small enough for the driver path, so a zero run
+    bound sends them through the Spark plan."""
     import contextlib
     import io
+    import sys
 
+    monkeypatch.setattr(sys.modules[search.__module__], "_RUN_POSTINGS", 0)
     store, oracle = engine
     vocab = sorted(oracle.postings)
     res = search(spark, store, [("q", f"{vocab[0]} {vocab[1]}")],
@@ -251,6 +255,7 @@ def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine):
     keeps, whatever the term text, and builds its predicate in a fixed
     number of py4j round trips: isin pays a few per term."""
     import gc
+    import threading
 
     from pyspark.sql import functions as F
 
@@ -281,14 +286,18 @@ def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine):
     client = spark.sparkContext._gateway._gateway_client
 
     def commands(n_terms: int) -> int:
+        """Commands where_term_in sends; not those of py4j's own thread,
+        which detaches garbage-collected JVM handles at any time."""
         many = [f"t{i}" for i in range(n_terms)]
         where_term_in(df, many)  # warm: the py4j class lookups
         gc.collect()  # free earlier JVM handles outside the count
         sent = []
         send = client.send_command
+        caller = threading.get_ident()
 
         def counting(*args, **kwargs):
-            sent.append(args[0][:1])
+            if threading.get_ident() == caller:
+                sent.append(args[0][:1])
             return send(*args, **kwargs)
 
         client.send_command = counting

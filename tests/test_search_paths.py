@@ -1,0 +1,215 @@
+"""The two search paths (query/search.py): a search whose postings fit in
+one kernel run runs the kernel on the driver, a larger one in a Spark
+job.  Each test forces a path through the run bound `_RUN_POSTINGS`
+(0: every search is too large for the driver; 2^30: every search fits)
+and checks that both paths return the same ranking as each other and as
+the pure-Python oracle (rank identity, scores within 1e-6)."""
+
+import importlib
+import itertools
+import shutil
+
+import pytest
+
+from terrier_spark.config import IndexConfig, QueryConfig
+from terrier_spark.index.builder import build_index
+from terrier_spark.index.corpus import synth_source_corpus
+from terrier_spark.index.store import IndexStore
+from terrier_spark.oracle import OracleFieldIndex, OracleIndex
+from terrier_spark.query.search import search
+from terrier_spark.streaming.incremental import IncrementalIndexer
+
+search_module = importlib.import_module("terrier_spark.query.search")
+
+SPARK_PATH, DRIVER_PATH = 0, 1 << 30
+
+# the synth corpus's head terms are in nearly every doc, so the tests
+# keep them (ignore_low_idf=False)
+QUERIES = [
+    ("0", "sym2 sym3 sym12"),
+    ("1", "sym4 sym5 sym4"),          # repeated term: qtf 2
+    ("2", "if return sym40 sym7"),
+    ("3", "sym12 zzqqoovvx"),         # one OOV term
+    ("4", "zzqqoovvx"),               # nothing matches: no rows
+]
+
+
+@pytest.fixture(scope="module")
+def pdf(spark):
+    return synth_source_corpus(spark, n_docs=200).toPandas()
+
+
+@pytest.fixture(scope="module")
+def plain(spark, pdf, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("paths") / "plain")
+    cfg = IndexConfig()
+    store = build_index(spark, spark.createDataFrame(pdf), out, cfg,
+                        bucket_span=64)
+    return store, OracleIndex(pdf["content"].tolist(), cfg.pipeline)
+
+
+@pytest.fixture(scope="module")
+def compacted(spark, pdf, tmp_path_factory):
+    """A compacted index with exact max-scores, and a copy of it with a
+    segment appended after the compaction."""
+    root = tmp_path_factory.mktemp("paths")
+    out, appended = str(root / "compacted"), str(root / "appended")
+    IncrementalIndexer(out, bucket_span=64, compact_every=1).index_batch(
+        spark.createDataFrame(pdf.iloc[:150]), 0)
+    shutil.copytree(out, appended)
+    IncrementalIndexer(appended, bucket_span=64).index_batch(
+        spark.createDataFrame(pdf.iloc[150:]), 1)
+    pipeline = IndexConfig().pipeline
+    contents = pdf["content"].tolist()
+    return ((IndexStore(out), OracleIndex(contents[:150], pipeline)),
+            (IndexStore(appended), OracleIndex(contents, pipeline)))
+
+
+def run(spark, store, queries, qcfg, bound, monkeypatch, **kw):
+    monkeypatch.setattr(search_module, "_RUN_POSTINGS", bound)
+    return (search(spark, store, queries, qcfg, **kw)
+            .orderBy("qid", "rank").toPandas())
+
+
+def both_paths(spark, store, queries, qcfg, monkeypatch, **kw):
+    """The Spark path's rows, checked equal to the driver path's."""
+    a = run(spark, store, queries, qcfg, SPARK_PATH, monkeypatch, **kw)
+    b = run(spark, store, queries, qcfg, DRIVER_PATH, monkeypatch, **kw)
+    assert list(a.columns) == list(b.columns)
+    for col in a.columns:
+        if col == "score":
+            assert list(a[col]) == pytest.approx(list(b[col]), abs=1e-6)
+        else:
+            assert list(a[col]) == list(b[col]), col
+    return a
+
+
+def assert_oracle(got, expected_of, queries):
+    by_qid = {qid: grp for qid, grp in got.groupby("qid")}
+    for qid, text in queries:
+        expected = expected_of(text)
+        grp = by_qid.get(qid)
+        actual = ([] if grp is None
+                  else list(zip(grp["docid"], grp["score"])))
+        assert [d for d, _ in actual] == [d for d, _ in expected], qid
+        assert [s for _, s in actual] == pytest.approx(
+            [s for _, s in expected], abs=1e-6), qid
+        if grp is not None:
+            assert list(grp["rank"]) == list(range(len(actual)))
+
+
+@pytest.mark.parametrize("prune", [True, False])
+@pytest.mark.parametrize("model", ["BM25", "DFR(In_exp,B,2)"])
+def test_paths_equal_oracle(spark, plain, monkeypatch, model, prune):
+    store, oracle = plain
+    qcfg = QueryConfig(model=model, k=10, prune=prune,
+                       ignore_low_idf=False)
+    got = both_paths(spark, store, QUERIES, qcfg, monkeypatch)
+    assert got["qid"].nunique() == 4
+    assert_oracle(got, lambda text: oracle.search(text, qcfg), QUERIES)
+
+
+@pytest.mark.parametrize("prune", [True, False])
+@pytest.mark.parametrize("appended", [False, True],
+                         ids=["compacted", "appended"])
+def test_paths_equal_oracle_compacted(spark, compacted, monkeypatch,
+                                      appended, prune):
+    """DPH, a non-monotone model, skips blocks by the exact max-scores
+    compaction stores (stale once a segment is appended: no bound then),
+    and the appended segment's postings are read beside the compact
+    file on both paths."""
+    store, oracle = compacted[appended]
+    assert (store.maxscore_index("DPH") is None) == appended
+    assert any("/segments/" in f for f in store.posting_files()) == appended
+    for k in (1, 10):
+        qcfg = QueryConfig(model="DPH", k=k, prune=prune,
+                           ignore_low_idf=False)
+        got = both_paths(spark, store, QUERIES, qcfg, monkeypatch)
+        assert_oracle(got, lambda text: oracle.search(text, qcfg), QUERIES)
+
+
+@pytest.mark.parametrize("prune", [True, False])
+def test_paths_equal_oracle_bm25f(spark, pdf, tmp_path, monkeypatch, prune):
+    fields = (("path", "path"), ("content", "content"))
+    cfg = IndexConfig(field_cols=fields)
+    store = build_index(spark, spark.createDataFrame(pdf), str(tmp_path),
+                        cfg, bucket_span=64)
+    oracle = OracleFieldIndex(list(zip(pdf["path"], pdf["content"])),
+                              cfg.pipeline)
+    queries = QUERIES + [("5", "src py sym1")]
+    qcfg = QueryConfig(model="BM25F", k=10, prune=prune,
+                       ignore_low_idf=False)
+    got = both_paths(spark, store, queries, qcfg, monkeypatch)
+    assert got["qid"].nunique() == 5
+    assert_oracle(got, lambda text: oracle.search_bm25f(text, k=10),
+                  queries)
+
+
+def test_paths_with_meta(spark, plain, monkeypatch):
+    store, oracle = plain
+    qcfg = QueryConfig(k=5, ignore_low_idf=False)
+    got = both_paths(spark, store, QUERIES, qcfg, monkeypatch,
+                     with_meta=True)
+    assert list(got.columns) == ["qid", "rank", "docid", "docno", "sha256",
+                                 "score"]
+    meta = store.meta(spark).select("docid", "docno").toPandas()
+    docno = dict(zip(meta["docid"], meta["docno"]))
+    assert list(got["docno"]) == [docno[d] for d in got["docid"]]
+    assert_oracle(got, lambda text: oracle.search(text, qcfg), QUERIES)
+
+
+def test_paths_empty_result(spark, plain, monkeypatch):
+    """No query term in the lexicon; or every posting's BB2 score
+    undefined (NaN, dropped), so the kernel runs and ranks nothing."""
+    store, oracle = plain
+    bb2 = QueryConfig(model="BB2", ignore_low_idf=False)
+    assert oracle.nt("sym71") > 0 and oracle.search("sym71", bb2) == []
+    for queries, qcfg in (([("a", "zzqqoovvx the")], QueryConfig()),
+                          ([("b", "sym71")], bb2)):
+        for kw in ({}, {"with_meta": True}):
+            got = both_paths(spark, store, queries, qcfg, monkeypatch, **kw)
+            assert got.empty
+
+
+_groups = itertools.count()
+
+
+def jobs_of(spark, action) -> int:
+    """Spark jobs `action()` runs, read from StatusTracker under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"test-search-paths-{next(_groups)}"
+    sc.setJobGroup(group, "search paths", False)
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
+    """A single query on the driver path costs one Spark job, the
+    caller's toPandas; the Spark path runs at least three (the stats
+    broadcast, the block shuffle's map stage and the kernel stage).
+    stats_out adds a count() job on the Spark path only, and both paths
+    count the same groups seen and decoded."""
+    store, _ = plain
+    query = [("q", "sym1 sym2 if")]
+    qcfg = QueryConfig(k=1, ignore_low_idf=False)
+    search(spark, store, query, qcfg).toPandas()  # warm the lexicon cache
+    counters = {}
+    for bound in (SPARK_PATH, DRIVER_PATH):
+        monkeypatch.setattr(search_module, "_RUN_POSTINGS", bound)
+        plain_jobs = jobs_of(
+            spark, lambda: search(spark, store, query, qcfg).toPandas())
+        stats: dict = {}
+        stats_jobs = jobs_of(
+            spark, lambda: search(spark, store, query, qcfg,
+                                  stats_out=stats).toPandas())
+        counters[bound] = (plain_jobs, stats_jobs, stats)
+    assert counters[DRIVER_PATH][:2] == (1, 1)
+    spark_jobs, spark_stats_jobs, _ = counters[SPARK_PATH]
+    assert 3 <= spark_jobs < spark_stats_jobs
+    assert counters[DRIVER_PATH][2] == counters[SPARK_PATH][2]
+    assert counters[DRIVER_PATH][2]["surviving_buckets"] > 0

@@ -228,6 +228,27 @@ def test_decode_scoring_blocks_rejects_corrupt_blocks():
                 decode_blocks(bad, pos=True, nf=2)
 
 
+def test_decode_blocks_decodes_only_the_asked_fields():
+    """fields=("ftf",) decodes the field tfs alone: the field lengths are
+    neither returned nor read, so a null or corrupt fln passes, while a
+    corrupt ftf still raises."""
+    frame, want = _encode_terms([[(3, 2, 9, 1, 1, 5, 4),
+                                  (70, 1, 9, 0, 1, 6, 3)]], False, 2, 2, 64)
+    ids, _, _, _, _, ftf, fln = decode_blocks(frame, nf=2, fields=("ftf",))
+    np.testing.assert_array_equal(ftf, np.concatenate(want["ftf"]))
+    assert fln is None
+    np.testing.assert_array_equal(ids, np.concatenate(want["ids"]))
+    for col, ok in (("fln", True), ("ftf", False)):
+        for wrong in (None, vbyte_encode(np.array([1], np.uint64))):
+            bad = frame.copy()
+            bad.at[0, col] = wrong
+            if ok:
+                decode_blocks(bad, nf=2, fields=("ftf",))
+            else:
+                with pytest.raises(ValueError):
+                    decode_blocks(bad, nf=2, fields=("ftf",))
+
+
 def test_vbyte_decode_parts_checks_each_count():
     parts = [vbyte_encode(np.array(v, dtype=np.uint64))
              for v in ([1, 300], [], [2**40])]
