@@ -273,25 +273,12 @@ def query_worker(cpus: int) -> None:
             )
         else:
             queries = make_zipf_queries(vocab_size)
-        # the score-cell chunking cap bounds PER-JOB aggregation state,
-        # which lives in the executors: size it to the AGGREGATE
-        # executor heap (n_exec x exec_mb) — hash-partitioned agg state
-        # spreads evenly across executors, and a real 4N-executor
-        # cluster has 4N x the memory, so a per-level cap is exactly
-        # what a real deployment configures.  (The default 1e9 assumes
-        # local[32] with the full machine's memory; a 4-core/20G
-        # executor OOMs there — measured.)  ~40-64 bytes/cell of agg
-        # state -> ~5e3 cells per heap-MB per executor.
-        cells_cap = float(os.environ.get(
-            "SCALING_CELLS_CAP", str(int(exec_mb * 5e3 * n_exec))
-        ))  # 20480 MB x 1 exec -> ~1e8 cells; x4 execs -> ~4e8
         # SCALING_K=10 variant: top-10 retrieval (the common serving
         # case) — block-max pruning kills most decode volume, so this
         # measures the plan's scaling with the single-box
         # memory-bandwidth confound of the k=1000 run largely removed
         k = int(os.environ.get("SCALING_K", "1000"))
-        qcfg = QueryConfig(k=k, prune=True,
-                           batch_max_score_cells=cells_cap)
+        qcfg = QueryConfig(k=k, prune=True)
         times = []
         n_rows = 0
         for r in range(1 + reps):

@@ -119,21 +119,9 @@ class QueryConfig:
     # Block-max pruning on/off: the decode kernel skips a (query, docid
     # bucket) group whose score upper bound is below the query's running
     # k-th best score.  Results are identical either way (bound-safe).
+    # The bound is the exact per-block maximum stored at compaction
+    # (index/maxscore.py) when it is valid, else an analytic one.
     prune: bool = True
-    # Consume the exact per-block max-score metadata stored at compaction
-    # time (index/maxscore.py) when present/valid — extends bound-safe
-    # pruning to non-monotone models (PL2, DPH, DLH, ...) and tightens it
-    # for monotone ones.  Off -> only the analytic (max_tf, min_dl) /
-    # field bounds are used.  Results are identical either way.
-    use_exact_maxscore: bool = True
-    # Bounded-memory batch execution: when the estimated score-cell
-    # count of a batch (sum over queries of their terms' document
-    # frequencies = rows entering the aggregation) exceeds this cap,
-    # the batch splits into query chunks run as sequential jobs with
-    # eagerly-materialized (<= k rows/query) results, so aggregation
-    # state per job stays bounded no matter how degenerate the
-    # query/corpus combination is.  None disables chunking.
-    batch_max_score_cells: Optional[float] = 1e9
     # Per-field weights / NormalisationB c parameters for BM25F, aligned
     # with the index's field order; None -> all 1.0 (the reference's
     # w.<fi> / c.<fi> property defaults,

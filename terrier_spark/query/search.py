@@ -15,9 +15,10 @@ by (qid, bucket):
            qid's running k-th best score             [WAND.java:190-289,
            Full.java:137-148 heap threshold, at block granularity]
            else per-doc score combine, merged into the qid's running
-           top-k; that top-k is the query's result, ranked score desc,
-           docid asc                                   [pinned — reference
-         ties are unstable, daat/CandidateResult.java:52-62]
+           top-k; when the qid's last group has passed, that top-k is
+           emitted as the query's result, ranked score desc, docid asc,
+           and dropped                      [Full.java:137-148; pinned —
+         reference ties are unstable, daat/CandidateResult.java:52-62]
 
 Two paths feed that one kernel, chosen by Σ nt over the (qid, term)
 rows, the postings the search decodes at most:
@@ -173,17 +174,14 @@ def _block_bounds(spec, qcfg: QueryConfig, store: IndexStore,
     nothing bounds the model."""
     if not qcfg.prune:
         return [], None, None
-    ms_idx = None
-    if qcfg.use_exact_maxscore:
-        # maxscore_index() already refuses stale snapshots; field-model
-        # maxima additionally assume the index-time default field
-        # parameters (weights = cs = 1.0), so a reweighted query falls
-        # back
-        ms_idx = store.maxscore_index(qcfg.model)
-        if ms_idx is not None and field_params:
-            weights, cs, _ = field_params
-            if any(w != 1.0 for w in weights) or any(c != 1.0 for c in cs):
-                ms_idx = None
+    # maxscore_index() already refuses stale snapshots; field-model
+    # maxima additionally assume the index-time default field parameters
+    # (weights = cs = 1.0), so a reweighted query falls back
+    ms_idx = store.maxscore_index(qcfg.model)
+    if ms_idx is not None and field_params:
+        weights, cs, _ = field_params
+        if any(w != 1.0 for w in weights) or any(c != 1.0 for c in cs):
+            ms_idx = None
     if ms_idx is not None:
         def exact(pdf: pd.DataFrame) -> np.ndarray:
             qtf = pdf["qtf"].to_numpy(np.float64)
@@ -269,11 +267,14 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                    k: int, bounds, counters, qid_labels):
     """The search kernel: frames of block rows sorted by (qid, bucket)
     -> each of its qids' final top k as (qid, rank, docid, score) rows,
-    rank 0-based by score desc, docid asc.  field_params = (weights, cs,
-    avg_flens) for field models; `bounds` is the third value of
-    _block_bounds (None: never skip); `counters` = (groups seen, groups
-    decoded) accumulators or None; `qid_labels[code]` is the label of
-    int qid code `code`.
+    rank 0-based by score desc, docid asc.  A query's top k is emitted,
+    and its pool dropped, with the first output after its last group
+    has passed, so a task holds at most a frame's worth of pools,
+    whatever its number of queries; ValueError when the qids of the
+    input decrease.  field_params = (weights, cs, avg_flens) for field
+    models; `bounds` is the third value of _block_bounds (None: never
+    skip); `counters` = (groups seen, groups decoded) accumulators or
+    None; `qid_labels[code]` is the label of int qid code `code`.
 
     Its input holds every block of each of its queries: a Spark
     partition of blocks hash-partitioned by qid, or on the driver path
@@ -403,38 +404,55 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                         g_scores = np.bincount(inv, weights=g_scores)
                     pool.add(g_ids, g_scores)
 
-        # a group can straddle Arrow batches: hold each batch's last
-        # group back until the next batch shows whether it continues
-        pending = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            starts = _group_starts(pdf)
-            pending = pdf.iloc[starts[-1]:]
-            score(pdf.iloc[: starts[-1]], starts[:-1])
-        if pending is not None:
-            score(pending, _group_starts(pending))
-        if counters is not None:
-            counters[0].add(seen)
-            counters[1].add(decoded)
-        if pools:
+        def finish(open_q=None) -> Optional[pd.DataFrame]:
+            """Rank and drop every pool but open_q's -> their rows."""
+            done = [q for q in pools if q != open_q]
+            if not done:
+                return None
             best = []
-            for pool in pools.values():
-                ids, scores = pool.best()
+            for q in done:
+                ids, scores = pools.pop(q).best()
                 order = np.lexsort((ids, -scores))
                 best.append((ids[order], scores[order]))
             sizes = [ids.size for ids, _ in best]
-            yield pd.DataFrame({
+            return pd.DataFrame({
                 "qid": np.repeat(
-                    np.array([qid_labels[q] for q in pools], dtype=object),
+                    np.array([qid_labels[q] for q in done], dtype=object),
                     sizes),
                 "rank": np.concatenate(
                     [np.arange(n, dtype=np.int32) for n in sizes]),
                 "docid": np.concatenate([ids for ids, _ in best]),
                 "score": np.concatenate([s for _, s in best]),
             })
+
+        # a group can straddle Arrow batches: hold each batch's last
+        # group back until the next batch shows whether it continues.
+        # qids never decrease, so once a batch is scored every pool but
+        # the held-back group's is final: emit those and drop them
+        pending = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qids = pdf["qid"].to_numpy()
+            if (np.diff(qids) < 0).any() or (
+                    pending is not None and qids[0] < pending["qid"].iat[0]):
+                raise ValueError("kernel input is not sorted by qid")
+            if pending is not None:
+                pdf = pd.concat([pending, pdf], ignore_index=True)
+            starts = _group_starts(pdf)
+            pending = pdf.iloc[starts[-1]:]
+            score(pdf.iloc[: starts[-1]], starts[:-1])
+            out = finish(pending["qid"].iat[0])
+            if out is not None:
+                yield out
+        if pending is not None:
+            score(pending, _group_starts(pending))
+        if counters is not None:
+            counters[0].add(seen)
+            counters[1].add(decoded)
+        out = finish()
+        if out is not None:
+            yield out
 
     return run
 
@@ -504,19 +522,6 @@ def search_terms(
         )
         return spark.createDataFrame([], schema)
 
-    # Bounded-memory batch execution: a degenerate batch (many queries x
-    # hot terms) can push the per-job (qid, docid) aggregation state
-    # past executor memory — measured: 225 queries x 8M docs of a
-    # saturated vocabulary OOMed a 14-GiB executor.  When the estimated
-    # score-cell volume (sum of the query terms' document frequencies)
-    # exceeds `batch_max_score_cells`, split the batch into query chunks
-    # run as SEQUENTIAL jobs.
-    cap = qcfg.batch_max_score_cells
-    per_qid = qstats.groupby("qid")["nt"].sum()
-    if cap is not None and per_qid.sum() > cap and len(per_qid) > 1:
-        return _search_chunks(spark, store, qterms, qcfg, with_meta,
-                              stats_out, per_qid)
-
     # Integer qid codes through the whole decode exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
     # profile, BASELINE.md), and a string qid there costs object-dtype
@@ -570,13 +575,13 @@ def search_terms(
     # Σ nt over the (qid, term) rows counts every posting the kernel can
     # decode.  When they fit in one kernel run, a Spark job costs more
     # than the search: run the same kernel on the driver.
-    on_driver = per_qid.sum() <= _RUN_POSTINGS
+    on_driver = qstats["nt"].sum() <= _RUN_POSTINGS
     if on_driver:
         frame = _driver_blocks(store, qstats, [*sel_cols, "bucket",
                                                *bound_cols], ms_idx)
-        result = next(kernel([frame]), None)
-        out = spark.createDataFrame([] if result is None else result,
-                                    schema)
+        results = list(kernel([frame]))
+        out = spark.createDataFrame(
+            pd.concat(results, ignore_index=True) if results else [], schema)
     else:
         blocks = store.postings_for(spark, qstats["term"])
         qs_df = spark.createDataFrame(qstats)
@@ -642,43 +647,3 @@ def _record_skips(stats_out: dict, seen: int, decoded: int) -> None:
     stats_out["candidate_buckets"] = int(seen)
     stats_out["surviving_buckets"] = int(decoded)
     stats_out["pruned_fraction"] = round(1.0 - decoded / max(seen, 1), 4)
-
-
-def _search_chunks(spark: SparkSession, store: IndexStore,
-                   qterms: pd.DataFrame, qcfg: QueryConfig, with_meta: bool,
-                   stats_out: Optional[dict],
-                   cost_by_qid: pd.Series) -> DataFrame:
-    """Run an over-cap batch as sequential chunks of queries whose
-    estimated cells stay within `batch_max_score_cells` (a single query
-    may exceed it).  Each chunk's result (<= k rows per query) is
-    materialized before the next chunk starts, so its memory is released
-    first.  Results are identical: queries never interact in scoring."""
-    cap = qcfg.batch_max_score_cells
-    chunks: List[List[str]] = [[]]
-    acc = 0.0
-    for qid, cost in cost_by_qid.sort_index().items():
-        if chunks[-1] and acc + float(cost) > cap:
-            chunks.append([])
-            acc = 0.0
-        chunks[-1].append(qid)
-        acc += float(cost)
-    log.info(
-        "search_terms: %d queries / %.0f score cells exceed "
-        "batch_max_score_cells=%s -> %d sequential chunks",
-        len(cost_by_qid), cost_by_qid.sum(), cap, len(chunks),
-    )
-    out = None
-    seen = decoded = 0
-    for chunk in chunks:
-        part = None if stats_out is None else {}
-        out_c = search_terms(
-            spark, store, qterms[qterms["qid"].isin(chunk)], qcfg, with_meta,
-            stats_out=part,
-        ).localCheckpoint(eager=True)
-        out = out_c if out is None else out.unionByName(out_c)
-        if part:
-            seen += part["candidate_buckets"]
-            decoded += part["surviving_buckets"]
-    if stats_out is not None:
-        _record_skips(stats_out, seen, decoded)
-    return out

@@ -3,15 +3,18 @@ pure-Python oracle; pruned == unpruned; low-idf drop; tie-break pinning
 (FIXTURES.md §4-5)."""
 
 import random
-from dataclasses import replace
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from terrier_spark.config import IndexConfig, QueryConfig
-from terrier_spark.index.builder import build_index
+from terrier_spark.index.builder import (BLOCK_COLUMNS, build_index,
+                                         encode_blocks)
 from terrier_spark.index.corpus import load_documents_corpus
 from terrier_spark.oracle import OracleIndex
-from terrier_spark.query.search import search
+from terrier_spark.query.models import get_model
+from terrier_spark.query.search import _search_kernel, search
 
 
 def make_queries(oracle, n_per_bucket=3, seed=42):
@@ -166,25 +169,119 @@ def test_k_limits_results(spark, engine):
     assert list(out.sort_values("rank")["rank"]) == list(range(len(out)))
 
 
-def test_chunked_batch_equals_unchunked(spark, engine):
-    """Bounded-memory chunking (batch_max_score_cells) must be
-    result-invariant: queries never interact in scoring, so splitting a
-    batch into sequential jobs returns exactly the same rows."""
-    store, oracle = engine
-    queries = make_queries(oracle, n_per_bucket=2, seed=7)
+def kernel_rows(n_queries=20, seed=5):
+    """Kernel input of `n_queries` int qids over four terms, sorted by
+    (qid, bucket): 4-posting blocks in 16-doc buckets, so most (qid,
+    bucket) groups hold several block rows."""
+    rng = np.random.default_rng(seed)
+    terms = []
+    for t in range(4):
+        ids = np.sort(rng.choice(64, size=rng.integers(10, 40),
+                                 replace=False)).astype(np.int64)
+        tfs = rng.integers(1, 5, ids.size)
+        blocks = pd.DataFrame(
+            encode_blocks(f"t{t}", ids, tfs, rng.integers(5, 50, ids.size),
+                          4, 16), columns=BLOCK_COLUMNS)
+        terms.append(blocks[["term", "bucket", "n", "block"]].assign(
+            nt=ids.size, tfc=int(tfs.sum())))
+    rows = [
+        terms[t].assign(qid=np.int32(q), qtf=1.0)
+        for q in range(n_queries)
+        for t in rng.choice(4, size=rng.integers(1, 4), replace=False)
+    ]
+    return pd.concat(rows).sort_values(["qid", "bucket"], kind="stable",
+                                       ignore_index=True)
 
-    def rows(qcfg):
-        return {
-            (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-            for r in search(spark, store, queries, qcfg).collect()
-        }
 
-    base = QueryConfig(k=20, ignore_low_idf=False)
-    whole = rows(base)
-    # force several chunks: cap of 1 cell puts every query in its own
-    # chunk (single-query chunks may exceed the cap, recursion stops)
-    chunked = rows(replace(base, batch_max_score_cells=1.0))
-    assert whole == chunked and whole
+def bm25_kernel(labels, k=5):
+    return _search_kernel(get_model("BM25"), 64, 27.0, 1728, None, k, None,
+                          None, labels)
+
+
+def test_kernel_emits_each_query_once_passed():
+    """The kernel emits a query's top k as soon as its last group has
+    passed, not when its input ends: with frames of five rows, a qid's
+    rows come out at the latest once the frame after the one holding
+    its last row has been pulled (that frame shows whether the last
+    group continues).  The rows equal one whole-input call's."""
+    rows = kernel_rows()
+    labels = [f"q{i}" for i in range(rows["qid"].max() + 1)]
+    size = 5
+    frame_of = np.arange(len(rows)) // size + 1  # 1-based frame per row
+    group = rows["qid"].astype(str) + "/" + rows["bucket"].astype(str)
+    straddling = pd.Series(frame_of).groupby(group.to_numpy()).nunique()
+    assert (straddling > 1).any()  # groups straddle frames
+    pulled = 0
+
+    def frames():
+        nonlocal pulled
+        for a in range(0, len(rows), size):
+            pulled += 1
+            yield rows.iloc[a:a + size].reset_index(drop=True)
+
+    emitted, outs = {}, []
+    for out in bm25_kernel(labels)(frames()):
+        outs.append(out)
+        for q in out["qid"].unique():
+            assert q not in emitted, f"{q} emitted twice"
+            emitted[q] = pulled
+    last_frame = pd.Series(frame_of).groupby(rows["qid"].to_numpy()).max()
+    assert set(emitted) == {labels[q] for q in last_frame.index}
+    for q, f in last_frame.items():
+        assert emitted[labels[q]] <= f + 1, (labels[q], f, emitted)
+    whole = pd.concat(list(bm25_kernel(labels)([rows])), ignore_index=True)
+    assert len(whole) > 0
+    pd.testing.assert_frame_equal(pd.concat(outs, ignore_index=True), whole)
+
+
+def test_kernel_memory_does_not_grow_with_queries():
+    """A task holds at most a frame's worth of query pools: the kernel's
+    traced peak over 8x the queries, all on one hot term, stays within
+    2x (it grew about in proportion when every pool lived until the
+    input ended)."""
+    import tracemalloc
+
+    ids = np.arange(1000, dtype=np.int64)
+    tfs = ids % 5 + 1
+    blocks = pd.DataFrame(encode_blocks("hot", ids, tfs, ids % 97 + 5, 1024,
+                                        64), columns=BLOCK_COLUMNS)
+    blocks = blocks[["term", "bucket", "n", "block"]].assign(
+        qtf=1.0, nt=ids.size, tfc=int(tfs.sum()))
+
+    def peak(n_queries: int) -> int:
+        rows = pd.concat([blocks] * n_queries, ignore_index=True).assign(
+            qid=np.repeat(np.arange(n_queries, dtype=np.int32), len(blocks)))
+        frames = [rows.iloc[a:a + 500].reset_index(drop=True)
+                  for a in range(0, len(rows), 500)]
+        kernel = _search_kernel(get_model("BM25"), 4000, 50.0, 200_000, None,
+                                1000, None, None, [str(q) for q in
+                                                   range(n_queries)])
+        tracemalloc.start()
+        try:
+            n = sum(len(out) for out in kernel(iter(frames)))
+            top = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert n == n_queries * ids.size
+        return top
+
+    assert peak(512) < 2 * peak(64)
+
+
+@pytest.mark.parametrize("order", ["within_frame", "across_frames"])
+def test_kernel_rejects_unsorted_qids(order):
+    """A qid that came back after its result was emitted would get a
+    second, partial top k: the kernel refuses qids that decrease."""
+    rows = kernel_rows()
+    labels = [f"q{i}" for i in range(rows["qid"].max() + 1)]
+    late = rows["qid"] >= 2
+    frames = (
+        [rows.iloc[::-1].reset_index(drop=True)] if order == "within_frame"
+        else [rows[late].reset_index(drop=True),
+              rows[~late].reset_index(drop=True)]
+    )
+    with pytest.raises(ValueError, match="not sorted by qid"):
+        list(bm25_kernel(labels)(iter(frames)))
 
 
 def test_scan_pushdown_plan_shape(spark, engine, monkeypatch):
