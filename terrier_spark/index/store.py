@@ -30,6 +30,10 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,6 +76,13 @@ def committed_segments(path: str) -> list[str]:
     )
 
 
+def data_files(directory: str) -> list[str]:
+    """The data files of a directory Spark wrote, sorted: Spark's own
+    listing rule skips `_SUCCESS`, `.crc` and every other `_`/`.` file."""
+    return [os.path.join(directory, f) for f in sorted(os.listdir(directory))
+            if not f.startswith(("_", "."))]
+
+
 def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
     """One table of every committed segment, read by explicit path (a
     directory glob would also match staging directories)."""
@@ -84,9 +95,59 @@ def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
         *(paths or [os.path.join(seg_root, f"{table}.parquet")]))
 
 
+class PostingDirectory:
+    """The live block rows held on the driver: every column but `pos`,
+    stably sorted by term, so each term's rows are one contiguous range
+    in posting_files() order, plus a term -> row-range directory."""
+
+    def __init__(self, files: list[str]):
+        # builder imports this module
+        from terrier_spark.index.builder import POSTINGS_ARROW_SCHEMA
+
+        schema = POSTINGS_ARROW_SCHEMA
+        table = ds.dataset(files, schema=schema, format="parquet").to_table(
+            columns=[c for c in schema.names if c != "pos"])
+        self.table = table.sort_by("term").combine_chunks()
+        terms = self.table["term"].to_numpy(zero_copy_only=False)
+        new = np.ones(len(terms), dtype=bool)
+        new[1:] = terms[1:] != terms[:-1]
+        starts = np.flatnonzero(new)
+        self.terms = pd.Index(terms[starts])
+        self.bounds = np.append(starts, len(terms))
+
+    def take(self, terms, columns) -> pa.Table:
+        """The `columns` of the block rows of `terms`, term by term in
+        term order."""
+        at = self.terms.get_indexer(pd.unique(pd.Series(terms, dtype=object)))
+        at = np.sort(at[at >= 0])
+        starts = self.bounds[at]
+        sizes = self.bounds[at + 1] - starts
+        out_starts = np.cumsum(sizes) - sizes
+        rows = np.arange(sizes.sum()) + np.repeat(starts - out_starts, sizes)
+        return self.table.select(columns).take(rows)
+
+
 class IndexStore:
+    # Lexicons up to this many terms are read once, with pyarrow, and
+    # looked up on the driver; larger ones are scanned per lookup.
+    LEXICON_CACHE_MAX_TERMS = 200_000
+    # Posting files up to this many bytes on disk are held on the driver
+    # (PostingDirectory) to answer small searches.  Resident they take
+    # about 3x their size on disk (15.0 MB for the 4.82 MB of the
+    # perfbench fixture), so about 200 MB at this budget.
+    DRIVER_POSTINGS_MAX_BYTES = 64 << 20
+
     def __init__(self, path: str):
         self.path = path
+        self._load()
+        # the build_index run that returned this handle: its timing and
+        # partitions built/cached (None when opened from disk)
+        self.build_metrics = None
+
+    def _load(self) -> None:
+        """Read the manifest and empty the driver-side caches."""
+        path = self.path
+        self._fingerprint = self._segment_fingerprint()
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
         if self.layout not in LAYOUTS:
@@ -100,15 +161,22 @@ class IndexStore:
                 f"{path}: a segmented_compacted manifest must list its "
                 "compacted_segments; rebuild it with build_index"
             )
-        # driver-side lexicon cache: repeated searches against the same
-        # store skip the lexicon-scan job (the reference keeps its lexicon
-        # memory-mapped for the same reason); only populated when small
+        # driver-side caches, valid while the fingerprint holds: repeated
+        # searches against the same store skip the lexicon read and the
+        # posting reads (the reference keeps its lexicon memory-mapped
+        # and its posting files in memory for the same reason)
+        self._lexicon_cols = None
         self._lexicon_pdf = None
+        self._directory = None  # a PostingDirectory, or False: too large
         self._postings_df = None
-        self._postings_key = None
-        # the build_index run that returned this handle: its timing and
-        # partitions built/cached (None when opened from disk)
-        self.build_metrics = None
+        self._postings_app = None
+
+    def refresh(self) -> None:
+        """Re-read the manifest and empty the caches when the index on
+        disk changed since they were filled: a segment appended, or the
+        manifest rewritten by a compaction or an in-place rebuild."""
+        if self._segment_fingerprint() != self._fingerprint:
+            self._load()
 
     @property
     def stats(self) -> dict:
@@ -156,52 +224,78 @@ class IndexStore:
     def lexicon(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(f"{self.path}/lexicon")
 
-    LEXICON_CACHE_MAX_TERMS = 200_000
+    def _lexicon_columns(self) -> list[str]:
+        """The lexicon columns a lookup returns, read from the lexicon
+        files' schema once per load."""
+        if self._lexicon_cols is None:
+            cols = ["term", "nt", "tf", "max_tf", "min_dl"]
+            if self.stats.get("fields"):
+                # field indexes carry per-term per-field collection stats
+                # (FieldEntryStatistics analog) when built by this version
+                names = ds.dataset(data_files(f"{self.path}/lexicon"),
+                                   format="parquet").schema.names
+                cols += [c for c in ("field_tf", "max_ftf_f", "min_fln_f")
+                         if c in names]
+            self._lexicon_cols = cols
+        return self._lexicon_cols
 
     def lexicon_lookup(self, spark: SparkSession, terms):
         """Lexicon rows for `terms` as a pandas frame.  Small lexicons are
-        fetched once and served driver-side afterwards (no Spark job);
-        large ones fall back to a term-pruned parquet scan."""
-        cols = ["term", "nt", "tf", "max_tf", "min_dl"]
-        if self.stats.get("fields"):
-            # field indexes carry per-term per-field collection stats
-            # (FieldEntryStatistics analog) when built by this version
-            lex_cols = set(self.lexicon(spark).columns)
-            cols += [c for c in ("field_tf", "max_ftf_f", "min_fln_f")
-                     if c in lex_cols]
+        read once with pyarrow and served driver-side afterwards (no Spark
+        job); large ones fall back to a term-pruned parquet scan."""
+        self.refresh()
+        cols = self._lexicon_columns()
         if self._lexicon_pdf is None and (
             self.stats.get("num_terms", 1 << 60) <= self.LEXICON_CACHE_MAX_TERMS
         ):
             self._lexicon_pdf = (
-                self.lexicon(spark).select(*cols).toPandas()
+                ds.dataset(data_files(f"{self.path}/lexicon"),
+                           format="parquet")
+                .to_table(columns=cols).to_pandas()
                 .set_index("term", drop=False)
             )
         if self._lexicon_pdf is not None:
-            hit = self._lexicon_pdf[self._lexicon_pdf.index.isin(terms)]
-            return hit.reset_index(drop=True)
+            at = self._lexicon_pdf.index.get_indexer(
+                pd.unique(pd.Series(terms, dtype=object)))
+            return self._lexicon_pdf.iloc[at[at >= 0]].reset_index(drop=True)
         return (
             where_term_in(self.lexicon(spark), terms)
             .select(*cols)
             .toPandas()
         )
 
+    def driver_blocks(self, terms, columns):
+        """The `columns` of the block rows of `terms` as a pyarrow Table,
+        term by term in term order, each term's rows in posting_files()
+        order, from the driver-resident PostingDirectory built on the
+        first call; None when the live posting files hold more than
+        DRIVER_POSTINGS_MAX_BYTES on disk."""
+        self.refresh()
+        if self._directory is None:
+            files = self.posting_files()
+            fits = (sum(map(os.path.getsize, files))
+                    <= self.DRIVER_POSTINGS_MAX_BYTES)
+            self._directory = fits and PostingDirectory(files)
+        if not self._directory:
+            return None
+        return self._directory.take(terms, columns)
+
     def postings(self, spark: SparkSession) -> DataFrame:
-        # Memoized per (session, visible segment set): building the reader
-        # costs ~90ms of py4j/file-listing round trips per call, which
-        # dominates interactive single-query latency.  The key re-lists
-        # the segment directory (cheap, driver-local) so an incremental
-        # index that appended segments since the last call gets a fresh
-        # plan instead of a stale one.  Keyed on applicationId, not
-        # id(spark): a stopped session's object id can be recycled by a
-        # new SparkSession, which would hand out a DataFrame bound to a
-        # dead JVM session.
-        key = (spark.sparkContext.applicationId,
-               self._segment_fingerprint())
-        if self._postings_df is not None and self._postings_key == key:
-            return self._postings_df
-        df = self._postings_uncached(spark)
-        self._postings_df, self._postings_key = df, key
-        return df
+        # Memoized per session and load: building the reader costs ~90ms
+        # of py4j/file-listing round trips per call, which dominates
+        # interactive single-query latency.  refresh() re-lists the
+        # segment directory (cheap, driver-local), so an incremental index
+        # that appended segments since the last call gets a fresh plan
+        # instead of a stale one.  Keyed on applicationId, not id(spark):
+        # a stopped session's object id can be recycled by a new
+        # SparkSession, which would hand out a DataFrame bound to a dead
+        # JVM session.
+        self.refresh()
+        app = spark.sparkContext.applicationId
+        if self._postings_df is None or self._postings_app != app:
+            self._postings_df = self._postings_uncached(spark)
+            self._postings_app = app
+        return self._postings_df
 
     def postings_for(self, spark: SparkSession, terms) -> DataFrame:
         """The posting blocks of `terms` only: the postings scan with the
@@ -226,12 +320,7 @@ class IndexStore:
         segs = self.segment_names()
         files = []
         if self.layout == "segmented_compacted":
-            compact = os.path.join(self.path, "postings_compact")
-            # Spark's own listing rule: `_SUCCESS` and `.crc` files are
-            # not data
-            files = [os.path.join(compact, f)
-                     for f in sorted(os.listdir(compact))
-                     if not f.startswith(("_", "."))]
+            files = data_files(os.path.join(self.path, "postings_compact"))
             covered = set(self.manifest["compacted_segments"])
             segs = [d for d in segs if d not in covered]
         seg_root = os.path.join(self.path, "segments")

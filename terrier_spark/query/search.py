@@ -20,15 +20,19 @@ by (qid, bucket):
            and dropped                      [Full.java:137-148; pinned —
          reference ties are unstable, daat/CandidateResult.java:52-62]
 
-Two paths feed that one kernel, chosen by Σ nt over the (qid, term)
-rows, the postings the search decodes at most:
+Two paths feed that one kernel.  A search runs on the driver when Σ nt
+over its (qid, term) rows, the postings it decodes at most, fits in one
+kernel run (_RUN_POSTINGS) and the store's posting files fit the driver
+budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark:
 
-  * driver — the search fits in one kernel run (_RUN_POSTINGS): its block
-    rows are read with pyarrow from IndexStore.posting_files(), joined
-    and sorted in pandas, and the kernel runs in process, as the
-    reference runs one query's DAAT walk on one thread.  The result is a
-    local DataFrame: a single query costs no Spark job besides the
-    caller's own action;
+  * driver — its block rows are taken from the store's driver-resident
+    posting directory (IndexStore.driver_blocks: the live block rows,
+    read once with pyarrow and sorted by term, with a term -> row-range
+    directory, rebuilt when the index on disk changes), joined and
+    sorted in pandas, and the kernel runs in process, as the reference
+    runs one query's DAAT walk on one thread.  The result rows go back
+    as a one-partition local DataFrame: a single query costs one Spark
+    job of one task, the caller's own action;
   * Spark — one declarative plan Catalyst owns: term-pruned parquet scan
     (IndexStore.postings_for) -> broadcast join of the stats ->
     repartition(qid), sorted by (qid, bucket), so one query's blocks
@@ -45,11 +49,13 @@ from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from terrier_spark.config import QueryConfig
-from terrier_spark.index.builder import POSTINGS_ARROW_SCHEMA, decode_blocks
+from terrier_spark.index.builder import decode_blocks
 from terrier_spark.index.store import IndexStore
 from terrier_spark.query.models import get_model
 from terrier_spark.text.pipeline import make_pipeline
@@ -70,6 +76,10 @@ _THETA_EPS = 1e-9
 # (index/maxscore.py).  On the perfbench batch, budgets of 2^14, 2^16
 # and 2^30 postings timed the same.
 _RUN_POSTINGS = 1 << 16
+
+# the kernel's output rows, as the driver path hands them to Spark
+_RESULT_SCHEMA = pa.schema([("qid", pa.string()), ("rank", pa.int32()),
+                            ("docid", pa.int64()), ("score", pa.float64())])
 
 # session settings the query path assumes (session.get_spark sets them);
 # a bare SparkSession.builder session measures ~2-3x slower per query
@@ -502,13 +512,15 @@ def search_terms(
     point query expansion re-enters with Bo1 weights
     (Manager.runMatching keyFrequency semantics).
 
-    `stats_out`, when given, receives the block-max skip counters:
+    `stats_out`, when given, receives the path the search ran on
+    (`path`: "driver" or "spark") and the block-max skip counters:
     `candidate_buckets` ((qid, bucket) groups the kernel saw),
     `surviving_buckets` (the groups it decoded) and `pruned_fraction`.
     On the Spark path, filling it runs the search once more, as a
     count() job; the driver path reads its own kernel run's counts."""
     qcfg = qcfg or QueryConfig()
     _check_session_tuning(spark)
+    store.refresh()
     stats = store.stats
     N, avgdl, T = stats["num_docs"], stats["avg_doclen"], stats["num_tokens"]
 
@@ -574,14 +586,21 @@ def search_terms(
     schema = "qid string, rank int, docid long, score double"
     # Σ nt over the (qid, term) rows counts every posting the kernel can
     # decode.  When they fit in one kernel run, a Spark job costs more
-    # than the search: run the same kernel on the driver.
-    on_driver = qstats["nt"].sum() <= _RUN_POSTINGS
-    if on_driver:
+    # than the search: run the same kernel on the driver, unless the
+    # store's postings are too large to hold there (frame None).
+    frame = None
+    if qstats["nt"].sum() <= _RUN_POSTINGS:
         frame = _driver_blocks(store, qstats, [*sel_cols, "bucket",
                                                *bound_cols], ms_idx)
+    on_driver = frame is not None
+    if on_driver:
         results = list(kernel([frame]))
-        out = spark.createDataFrame(
-            pd.concat(results, ignore_index=True) if results else [], schema)
+        rows = (pa.Table.from_pandas(pd.concat(results), _RESULT_SCHEMA,
+                                     preserve_index=False)
+                if results else _RESULT_SCHEMA.empty_table())
+        # one partition: the caller's action runs one task, not one per
+        # core over a handful of rows
+        out = spark.createDataFrame(rows, schema).coalesce(1)
     else:
         blocks = store.postings_for(spark, qstats["term"])
         qs_df = spark.createDataFrame(qstats)
@@ -609,6 +628,7 @@ def search_terms(
     if stats_out is not None:
         if not on_driver:
             out.count()
+        stats_out["path"] = "driver" if on_driver else "spark"
         _record_skips(stats_out, counters[0].value, counters[1].value)
     if with_meta:
         meta = store.meta(spark).select("docid", "docno", "sha256")
@@ -619,22 +639,19 @@ def search_terms(
 
 
 def _driver_blocks(store: IndexStore, qstats: pd.DataFrame, cols,
-                   ms_idx) -> pd.DataFrame:
+                   ms_idx) -> Optional[pd.DataFrame]:
     """The Spark plan's kernel input, read on the driver: the block rows
-    of the query terms in store.posting_files() (the term filter pushed
-    into the Parquet scan) joined with `qstats` and stably sorted by
-    (qid, bucket) -> the `cols` columns plus "term", "ms" being element
-    `ms_idx` (1-based) of max_score: NaN for a null list, i.e. no bound,
-    as Spark's element_at reads it."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
+    of the query terms from the store's driver-resident posting
+    directory (IndexStore.driver_blocks) joined with `qstats` and stably
+    sorted by (qid, bucket) -> the `cols` columns plus "term", "ms" being
+    element `ms_idx` (1-based) of max_score: NaN for a null list, i.e. no
+    bound, as Spark's element_at reads it.  None when the store's
+    postings are too large to hold on the driver."""
     read = ["term", *("max_score" if c == "ms" else c
                       for c in cols if c not in qstats.columns)]
-    table = ds.dataset(
-        store.posting_files(), schema=POSTINGS_ARROW_SCHEMA, format="parquet"
-    ).to_table(columns=read,
-               filter=ds.field("term").isin(qstats["term"].unique()))
+    table = store.driver_blocks(qstats["term"], read)
+    if table is None:
+        return None
     if ms_idx is not None:
         table = table.set_column(
             read.index("max_score"), "ms",

@@ -356,6 +356,8 @@ def test_small_runs_equal_unpruned(spark, compacted):
     for x, y in zip(a["score"], b["score"]):
         assert x == pytest.approx(y, abs=1e-9)
     assert whole["pruned_fraction"] > 0, whole
+    # a 3-posting run budget also sends the search to the Spark path
+    assert (whole.pop("path"), runs.pop("path")) == ("driver", "spark")
     assert runs == whole
 
 

@@ -1,9 +1,10 @@
 """The two search paths (query/search.py): a search whose postings fit in
-one kernel run runs the kernel on the driver, a larger one in a Spark
-job.  Each test forces a path through the run bound `_RUN_POSTINGS`
-(0: every search is too large for the driver; 2^30: every search fits)
-and checks that both paths return the same ranking as each other and as
-the pure-Python oracle (rank identity, scores within 1e-6)."""
+one kernel run, on a store whose postings fit the driver budget, runs the
+kernel on the driver, any other in a Spark job.  Each test forces a path
+through the run bound `_RUN_POSTINGS` (0: every search is too large for
+the driver; 2^30: every search fits) or the store's driver budget, and
+checks that both paths return the same ranking as each other and as the
+pure-Python oracle (rank identity, scores within 1e-6)."""
 
 import importlib
 import itertools
@@ -14,6 +15,7 @@ import pytest
 from terrier_spark.config import IndexConfig, QueryConfig
 from terrier_spark.index.builder import build_index
 from terrier_spark.index.corpus import synth_source_corpus
+from terrier_spark.index.resumable import compact_postings
 from terrier_spark.index.store import IndexStore
 from terrier_spark.oracle import OracleFieldIndex, OracleIndex
 from terrier_spark.query.search import search
@@ -65,22 +67,37 @@ def compacted(spark, pdf, tmp_path_factory):
             (IndexStore(appended), OracleIndex(contents, pipeline)))
 
 
+@pytest.fixture(scope="module")
+def fielded(spark, pdf, tmp_path_factory):
+    """A field index over (path, content) and its oracle."""
+    out = str(tmp_path_factory.mktemp("paths") / "fielded")
+    cfg = IndexConfig(field_cols=(("path", "path"), ("content", "content")))
+    store = build_index(spark, spark.createDataFrame(pdf), out, cfg,
+                        bucket_span=64)
+    return store, OracleFieldIndex(list(zip(pdf["path"], pdf["content"])),
+                                   cfg.pipeline)
+
+
 def run(spark, store, queries, qcfg, bound, monkeypatch, **kw):
     monkeypatch.setattr(search_module, "_RUN_POSTINGS", bound)
     return (search(spark, store, queries, qcfg, **kw)
             .orderBy("qid", "rank").toPandas())
 
 
-def both_paths(spark, store, queries, qcfg, monkeypatch, **kw):
-    """The Spark path's rows, checked equal to the driver path's."""
-    a = run(spark, store, queries, qcfg, SPARK_PATH, monkeypatch, **kw)
-    b = run(spark, store, queries, qcfg, DRIVER_PATH, monkeypatch, **kw)
+def assert_same_rows(a, b):
     assert list(a.columns) == list(b.columns)
     for col in a.columns:
         if col == "score":
             assert list(a[col]) == pytest.approx(list(b[col]), abs=1e-6)
         else:
             assert list(a[col]) == list(b[col]), col
+
+
+def both_paths(spark, store, queries, qcfg, monkeypatch, **kw):
+    """The Spark path's rows, checked equal to the driver path's."""
+    a = run(spark, store, queries, qcfg, SPARK_PATH, monkeypatch, **kw)
+    b = run(spark, store, queries, qcfg, DRIVER_PATH, monkeypatch, **kw)
+    assert_same_rows(a, b)
     return a
 
 
@@ -129,13 +146,8 @@ def test_paths_equal_oracle_compacted(spark, compacted, monkeypatch,
 
 
 @pytest.mark.parametrize("prune", [True, False])
-def test_paths_equal_oracle_bm25f(spark, pdf, tmp_path, monkeypatch, prune):
-    fields = (("path", "path"), ("content", "content"))
-    cfg = IndexConfig(field_cols=fields)
-    store = build_index(spark, spark.createDataFrame(pdf), str(tmp_path),
-                        cfg, bucket_span=64)
-    oracle = OracleFieldIndex(list(zip(pdf["path"], pdf["content"])),
-                              cfg.pipeline)
+def test_paths_equal_oracle_bm25f(spark, fielded, monkeypatch, prune):
+    store, oracle = fielded
     queries = QUERIES + [("5", "src py sym1")]
     qcfg = QueryConfig(model="BM25F", k=10, prune=prune,
                        ignore_low_idf=False)
@@ -174,8 +186,8 @@ def test_paths_empty_result(spark, plain, monkeypatch):
 _groups = itertools.count()
 
 
-def jobs_of(spark, action) -> int:
-    """Spark jobs `action()` runs, read from StatusTracker under a job
+def jobs_of(spark, action) -> tuple[int, int]:
+    """(jobs, tasks) `action()` runs, read from StatusTracker under a job
     group of its own."""
     sc = spark.sparkContext
     group = f"test-search-paths-{next(_groups)}"
@@ -185,15 +197,19 @@ def jobs_of(spark, action) -> int:
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+    return len(jobs), tasks
 
 
 def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
-    """A single query on the driver path costs one Spark job, the
-    caller's toPandas; the Spark path runs at least three (the stats
+    """A single query on the driver path costs one Spark job of one task,
+    the caller's toPandas; the Spark path runs at least three (the stats
     broadcast, the block shuffle's map stage and the kernel stage).
-    stats_out adds a count() job on the Spark path only, and both paths
-    count the same groups seen and decoded."""
+    stats_out adds a count() job on the Spark path only, both paths
+    count the same groups seen and decoded, and it names the path."""
     store, _ = plain
     query = [("q", "sym1 sym2 if")]
     qcfg = QueryConfig(k=1, ignore_low_idf=False)
@@ -204,12 +220,96 @@ def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
         plain_jobs = jobs_of(
             spark, lambda: search(spark, store, query, qcfg).toPandas())
         stats: dict = {}
-        stats_jobs = jobs_of(
+        stats_jobs, _ = jobs_of(
             spark, lambda: search(spark, store, query, qcfg,
                                   stats_out=stats).toPandas())
         counters[bound] = (plain_jobs, stats_jobs, stats)
-    assert counters[DRIVER_PATH][:2] == (1, 1)
-    spark_jobs, spark_stats_jobs, _ = counters[SPARK_PATH]
+    assert counters[DRIVER_PATH][:2] == ((1, 1), 1)
+    (spark_jobs, _), spark_stats_jobs, _ = counters[SPARK_PATH]
     assert 3 <= spark_jobs < spark_stats_jobs
-    assert counters[DRIVER_PATH][2] == counters[SPARK_PATH][2]
-    assert counters[DRIVER_PATH][2]["surviving_buckets"] > 0
+    driver_stats, spark_stats = counters[DRIVER_PATH][2], counters[SPARK_PATH][2]
+    assert (driver_stats.pop("path"), spark_stats.pop("path")) == (
+        "driver", "spark")
+    assert driver_stats == spark_stats
+    assert driver_stats["surviving_buckets"] > 0
+
+
+def test_driver_budget_sends_small_search_to_spark(spark, plain,
+                                                   monkeypatch):
+    """A search small enough for one kernel run takes the Spark path when
+    the store's posting files exceed the driver budget, with the same
+    rows."""
+    store, oracle = plain
+    qcfg = QueryConfig(k=10, ignore_low_idf=False)
+    over_budget = IndexStore(store.path)
+    monkeypatch.setattr(over_budget, "DRIVER_POSTINGS_MAX_BYTES", 0)
+    rows = {}
+    for handle in (store, over_budget):
+        stats: dict = {}
+        rows[handle] = (search(spark, handle, QUERIES, qcfg, stats_out=stats)
+                        .orderBy("qid", "rank").toPandas())
+        rows[handle, "path"] = stats["path"]
+    assert (rows[store, "path"], rows[over_budget, "path"]) == (
+        "driver", "spark")
+    assert_same_rows(rows[store], rows[over_budget])
+    assert_oracle(rows[store], lambda text: oracle.search(text, qcfg),
+                  QUERIES)
+
+
+def test_driver_directory_follows_appends_and_compaction(spark, pdf,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """One IndexStore handle searched on the driver path, then again
+    after a segment is appended and after a compaction: each search
+    equals the Spark path and the oracle of the documents indexed so
+    far, so the handle's driver-resident postings, lexicon and manifest
+    follow the index on disk."""
+    out = str(tmp_path / "idx")
+    indexer = IncrementalIndexer(out, bucket_span=64)
+    indexer.index_batch(spark.createDataFrame(pdf.iloc[:120]), 0)
+    store = IndexStore(out)
+    contents = pdf["content"].tolist()
+    pipeline = IndexConfig().pipeline
+    qcfg = QueryConfig(model="DPH", k=10, ignore_low_idf=False)
+    steps = [
+        (120, lambda: None),
+        (200, lambda: indexer.index_batch(
+            spark.createDataFrame(pdf.iloc[120:]), 1)),
+        (200, lambda: compact_postings(spark, IndexStore(out))),
+    ]
+    for n_docs, step in steps:
+        step()
+        stats: dict = {}
+        driver = run(spark, store, QUERIES, qcfg, DRIVER_PATH, monkeypatch,
+                     stats_out=stats)
+        assert stats["path"] == "driver"
+        assert_same_rows(
+            driver, run(spark, store, QUERIES, qcfg, SPARK_PATH, monkeypatch))
+        oracle = OracleIndex(contents[:n_docs], pipeline)
+        assert_oracle(driver, lambda text: oracle.search(text, qcfg),
+                      QUERIES)
+    assert store.layout == "segmented_compacted"
+    assert store.maxscore_index("DPH") is not None
+
+
+@pytest.mark.parametrize("index", ["plain", "fielded"])
+def test_lexicon_cache_equals_spark_scan(spark, request, monkeypatch,
+                                         index):
+    """The driver-side lexicon, read with pyarrow, returns the rows and
+    dtypes of the Spark scan that lexicons above LEXICON_CACHE_MAX_TERMS
+    take; an OOV term returns no row."""
+    path = request.getfixturevalue(index)[0].path
+    terms = ["sym12", "if", "zzqqoovvx", "sym2", "py"]
+    cached = IndexStore(path).lexicon_lookup(spark, terms)
+    monkeypatch.setattr(IndexStore, "LEXICON_CACHE_MAX_TERMS", 0)
+    scanned = IndexStore(path).lexicon_lookup(spark, terms)
+    assert (index == "fielded") == ("field_tf" in cached.columns)
+    assert list(cached.columns) == list(scanned.columns)
+    assert list(cached.dtypes) == list(scanned.dtypes)
+    cached, scanned = (
+        df.sort_values("term", ignore_index=True).map(
+            lambda v: v.tolist() if hasattr(v, "tolist") else v)
+        for df in (cached, scanned))
+    assert "zzqqoovvx" not in set(cached["term"])
+    assert len(cached) >= 3
+    assert cached.to_dict("list") == scanned.to_dict("list")
