@@ -96,17 +96,20 @@ def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
 
 
 class PostingDirectory:
-    """The live block rows held on the driver: every column but `pos`,
-    stably sorted by term, so each term's rows are one contiguous range
-    in posting_files() order, plus a term -> row-range directory."""
+    """The live block rows held on the driver, the COLUMNS a search's
+    kernel input and block bounds read, stably sorted by term, so each
+    term's rows are one contiguous range in posting_files() order, plus
+    a term -> row-range directory."""
+
+    COLUMNS = ["term", "bucket", "n", "block", "ftf", "fln", "max_tf",
+               "min_dl", "max_ftf_f", "min_fln_f", "max_score"]
 
     def __init__(self, files: list[str]):
         # builder imports this module
         from terrier_spark.index.builder import POSTINGS_ARROW_SCHEMA
 
-        schema = POSTINGS_ARROW_SCHEMA
-        table = ds.dataset(files, schema=schema, format="parquet").to_table(
-            columns=[c for c in schema.names if c != "pos"])
+        table = ds.dataset(files, schema=POSTINGS_ARROW_SCHEMA,
+                           format="parquet").to_table(columns=self.COLUMNS)
         self.table = table.sort_by("term").combine_chunks()
         terms = self.table["term"].to_numpy(zero_copy_only=False)
         new = np.ones(len(terms), dtype=bool)
@@ -133,8 +136,8 @@ class IndexStore:
     LEXICON_CACHE_MAX_TERMS = 200_000
     # Posting files up to this many bytes on disk are held on the driver
     # (PostingDirectory) to answer small searches.  Resident they take
-    # about 3x their size on disk (15.0 MB for the 4.82 MB of the
-    # perfbench fixture), so about 200 MB at this budget.
+    # about 2.3x their size on disk (11.77 MB for the 5.05 MB of the
+    # perfbench fixture), so about 150 MB at this budget.
     DRIVER_POSTINGS_MAX_BYTES = 64 << 20
 
     def __init__(self, path: str):

@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from terrier_spark.config import QueryConfig
 from terrier_spark.index.store import IndexStore
-from terrier_spark.query.search import search
-
-RESULT_SCHEMA = "qid string, rank int, docid long, score double"
+from terrier_spark.query.search import LocalResult, search
 
 
 class NullQueryResultCache:
@@ -108,7 +106,7 @@ def cached_search(
 ) -> DataFrame:
     """search() with a result cache: cached queries are served without a
     Spark job; only the misses run (as one batch), and their results are
-    inserted.  -> (qid, rank, docid, score)."""
+    inserted.  -> a LocalResult (qid, rank, docid, score)."""
     qcfg = qcfg or QueryConfig()
     sv = _store_version(store)
     hit_frames, misses = [], []
@@ -125,9 +123,4 @@ def cached_search(
             grp = miss_pdf[miss_pdf["qid"] == str(qid)]
             cache.put(_key(text, qcfg, sv), grp.drop(columns=["qid"]))
     frames = hit_frames + ([miss_pdf] if miss_pdf is not None else [])
-    if not frames:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    out = pd.concat(frames, ignore_index=True)
-    return spark.createDataFrame(
-        out[["qid", "rank", "docid", "score"]], RESULT_SCHEMA
-    )
+    return LocalResult.from_frames(spark, frames)

@@ -30,9 +30,10 @@ budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark:
     read once with pyarrow and sorted by term, with a term -> row-range
     directory, rebuilt when the index on disk changes), joined and
     sorted in pandas, and the kernel runs in process, as the reference
-    runs one query's DAAT walk on one thread.  The result rows go back
-    as a one-partition local DataFrame: a single query costs one Spark
-    job of one task, the caller's own action;
+    runs one query's DAAT walk on one thread.  The result is a
+    LocalResult: a DataFrame that holds the rows as a pyarrow Table, so
+    the caller's toPandas()/toArrow()/collect() run no Spark job and
+    send no py4j command;
   * Spark — one declarative plan Catalyst owns: term-pruned parquet scan
     (IndexStore.postings_for) -> broadcast join of the stats ->
     repartition(qid), sorted by (qid, bucket), so one query's blocks
@@ -44,15 +45,19 @@ budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark:
 from __future__ import annotations
 
 import logging
-
+import weakref
+from functools import cached_property
 from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from terrier_spark.config import QueryConfig
 from terrier_spark.index.builder import decode_blocks
@@ -77,27 +82,34 @@ _THETA_EPS = 1e-9
 # and 2^30 postings timed the same.
 _RUN_POSTINGS = 1 << 16
 
-# the kernel's output rows, as the driver path hands them to Spark
+# the rows of a search result, without and with its documents' metadata
 _RESULT_SCHEMA = pa.schema([("qid", pa.string()), ("rank", pa.int32()),
                             ("docid", pa.int64()), ("score", pa.float64())])
+_META_RESULT_SCHEMA = pa.schema([
+    ("qid", pa.string()), ("rank", pa.int32()), ("docid", pa.int64()),
+    ("docno", pa.string()), ("sha256", pa.string()), ("score", pa.float64())])
 
 # session settings the query path assumes (session.get_spark sets them);
 # a bare SparkSession.builder session measures ~2-3x slower per query
-# purely from these, so flag the mismatch once per application
+# purely from these, so flag the mismatch once per SparkContext
 _TUNING_CONFS = (
     ("spark.sql.execution.arrow.pyspark.enabled", "true"),
     ("spark.sql.adaptive.enabled", "true"),
 )
-_tuning_checked: set = set()
+# the SparkContext objects already checked, held weakly: a stopped
+# context's entry goes with it, so a new context is checked afresh even
+# if it reuses the old one's id().  (Reading the applicationId instead
+# costs two py4j calls per search.)
+_tuning_checked: weakref.WeakSet = weakref.WeakSet()
 
 
 def _check_session_tuning(spark: SparkSession) -> List[str]:
     """Return the tuning confs this session is missing, warning once per
-    applicationId.  Read-only: never mutates the user's session."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _tuning_checked:
+    SparkContext.  Read-only: never mutates the user's session."""
+    sc = spark.sparkContext
+    if sc in _tuning_checked:
         return []
-    _tuning_checked.add(app_id)
+    _tuning_checked.add(sc)
     def effective(key: str) -> str:
         # no-default get resolves Spark's BUILT-IN default (AQE is on by
         # default since 3.2); a fallback arg would mask it
@@ -115,6 +127,60 @@ def _check_session_tuning(spark: SparkSession) -> List[str]:
             "builder", missing,
         )
     return missing
+
+
+class LocalResult(ClassicDataFrame):
+    """A result computed on the driver: a DataFrame that already holds its
+    rows as a pyarrow Table.  toPandas(), toArrow(), collect(), count()
+    and schema answer from the table in process, with no Spark job and
+    no py4j call.  Every other method runs on a one-partition Spark frame
+    loaded from the table on first use (`_jdf`), so a caller sees the
+    rows and types of any other DataFrame."""
+
+    def __new__(cls, spark: SparkSession, table: pa.Table):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        # the attributes ClassicDataFrame.__init__ sets, but `_jdf`
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+
+    @classmethod
+    def from_frames(cls, spark: SparkSession, frames: List[pd.DataFrame],
+                    schema: pa.Schema = _RESULT_SCHEMA) -> "LocalResult":
+        """The rows of pandas `frames`, concatenated, as `schema`."""
+        table = (pa.Table.from_pandas(pd.concat(frames)[schema.names], schema,
+                                      preserve_index=False)
+                 if frames else schema.empty_table())
+        return cls(spark, table)
+
+    @cached_property
+    def _jdf(self):
+        # one partition: an action over these few rows runs one task, not
+        # one per core
+        return (self._session.createDataFrame(self._table, self.schema)
+                .coalesce(1)._jdf)
+
+    @cached_property
+    def schema(self) -> StructType:
+        return from_arrow_schema(self._table.schema)
+
+    def toArrow(self) -> pa.Table:
+        return self._table
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._table.to_pandas()
+
+    def collect(self) -> List[Row]:
+        row = Row(*self._table.column_names)
+        return [row(*values) for values in
+                zip(*(c.to_pylist() for c in self._table.columns))]
+
+    def count(self) -> int:
+        return self._table.num_rows
 
 
 def process_queries(queries: Sequence[Tuple[str, str]],
@@ -526,13 +592,8 @@ def search_terms(
 
     qstats = _qterm_stats(spark, store, qterms, qcfg)
     if qstats.empty:
-        schema = (
-            "qid string, rank int, docid long, docno string, sha256 string, "
-            "score double"
-            if with_meta
-            else "qid string, rank int, docid long, score double"
-        )
-        return spark.createDataFrame([], schema)
+        return LocalResult.from_frames(
+            spark, [], _META_RESULT_SCHEMA if with_meta else _RESULT_SCHEMA)
 
     # Integer qid codes through the whole decode exchange: the warm
     # 900-query batch is DRAM-bandwidth-bound in decode+agg (event-log
@@ -594,13 +655,7 @@ def search_terms(
                                                *bound_cols], ms_idx)
     on_driver = frame is not None
     if on_driver:
-        results = list(kernel([frame]))
-        rows = (pa.Table.from_pandas(pd.concat(results), _RESULT_SCHEMA,
-                                     preserve_index=False)
-                if results else _RESULT_SCHEMA.empty_table())
-        # one partition: the caller's action runs one task, not one per
-        # core over a handful of rows
-        out = spark.createDataFrame(rows, schema).coalesce(1)
+        out = LocalResult.from_frames(spark, list(kernel([frame])))
     else:
         blocks = store.postings_for(spark, qstats["term"])
         qs_df = spark.createDataFrame(qstats)

@@ -88,6 +88,26 @@ def test_cache_invalidated_by_store_change(spark, tmp_path):
     assert cache.misses == 3
 
 
+def test_all_hits_run_no_spark_job(spark, store, jobs_of):
+    """A cached_search whose queries all hit the cache runs no Spark job,
+    its caller's toPandas() included, and returns the rows the misses'
+    search returned; with no query it returns the empty result."""
+    qcfg = QueryConfig(k=10, ignore_low_idf=False)
+    cache = QueryResultCache()
+    queries = [("a", "sym1 sym3"), ("b", "sym2 class")]
+    first = cached_search(spark, store, queries, cache, qcfg).toPandas()
+    got = []
+    assert jobs_of(lambda: got.append(
+        cached_search(spark, store, queries, cache, qcfg).toPandas())) == (0, 0)
+    assert cache.hits == 2
+    pd.testing.assert_frame_equal(
+        got[0].sort_values(["qid", "rank"], ignore_index=True),
+        first.sort_values(["qid", "rank"], ignore_index=True))
+    empty = cached_search(spark, store, [], cache, qcfg)
+    assert empty.columns == ["qid", "rank", "docid", "score"]
+    assert empty.count() == 0
+
+
 def test_null_cache_is_default_off(spark, store):
     qcfg = QueryConfig(k=5, ignore_low_idf=False)
     cache = NullQueryResultCache()

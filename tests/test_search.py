@@ -347,13 +347,11 @@ def test_scan_pushdown_plan_shape(spark, engine, monkeypatch):
     assert "Window" not in plan, plan
 
 
-def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine):
+def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine,
+                                                   py4j_commands):
     """where_term_in (the postings_for scan) keeps exactly the rows isin
     keeps, whatever the term text, and builds its predicate in a fixed
     number of py4j round trips: isin pays a few per term."""
-    import gc
-    import threading
-
     from pyspark.sql import functions as F
 
     from terrier_spark.index.store import where_term_in
@@ -380,38 +378,20 @@ def test_term_filter_matches_isin_in_few_py4j_calls(spark, engine):
     assert scan and scan == blocks(
         store.postings(spark).filter(F.col("term").isin(terms)))
 
-    client = spark.sparkContext._gateway._gateway_client
-
     def commands(n_terms: int) -> int:
-        """Commands where_term_in sends; not those of py4j's own thread,
-        which detaches garbage-collected JVM handles at any time."""
         many = [f"t{i}" for i in range(n_terms)]
         where_term_in(df, many)  # warm: the py4j class lookups
-        gc.collect()  # free earlier JVM handles outside the count
-        sent = []
-        send = client.send_command
-        caller = threading.get_ident()
-
-        def counting(*args, **kwargs):
-            if threading.get_ident() == caller:
-                sent.append(args[0][:1])
-            return send(*args, **kwargs)
-
-        client.send_command = counting
-        try:
-            where_term_in(df, many)
-        finally:
-            client.send_command = send
-        return len(sent)
+        return py4j_commands(lambda: where_term_in(df, many))
 
     assert commands(20) < 20
     assert commands(2000) < 20
 
 
 def test_session_tuning_check(spark, caplog):
-    """The once-per-app session-tuning probe: a tuned session (the test
-    fixture uses get_spark) reports nothing missing; a session missing
-    the Arrow/AQE confs is flagged exactly once per applicationId."""
+    """The once-per-context session-tuning probe: a tuned session (the
+    test fixture uses get_spark) reports nothing missing; a session
+    missing the Arrow/AQE confs is flagged exactly once per
+    SparkContext."""
     import logging
 
     import importlib
@@ -421,7 +401,7 @@ def test_session_tuning_check(spark, caplog):
     # MODULE from the import system instead
     search_mod = importlib.import_module("terrier_spark.query.search")
 
-    search_mod._tuning_checked.discard(spark.sparkContext.applicationId)
+    search_mod._tuning_checked.discard(spark.sparkContext)
     assert search_mod._check_session_tuning(spark) == []
 
     class FakeConf:
@@ -429,13 +409,13 @@ def test_session_tuning_check(spark, caplog):
             return "false"
 
     class FakeSC:
-        applicationId = "fake-app-1"
+        pass
 
     class FakeSpark:
         conf = FakeConf()
         sparkContext = FakeSC()
 
-    search_mod._tuning_checked.discard("fake-app-1")
+    search_mod._tuning_checked.discard(FakeSpark.sparkContext)
     with caplog.at_level(logging.WARNING, logger="terrier_spark.search"):
         missing = search_mod._check_session_tuning(FakeSpark())
     assert missing == [
@@ -443,5 +423,8 @@ def test_session_tuning_check(spark, caplog):
         "spark.sql.adaptive.enabled",
     ]
     assert any("tuned settings" in r.message for r in caplog.records)
-    # second call on the same app: memoized, silent, no list
+    # second call on the same context: memoized, silent, no list
     assert search_mod._check_session_tuning(FakeSpark()) == []
+    # a new context is checked afresh, whatever id() it reuses
+    FakeSpark.sparkContext = FakeSC()
+    assert len(search_mod._check_session_tuning(FakeSpark())) == 2

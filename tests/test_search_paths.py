@@ -7,9 +7,9 @@ checks that both paths return the same ranking as each other and as the
 pure-Python oracle (rank identity, scores within 1e-6)."""
 
 import importlib
-import itertools
 import shutil
 
+import pandas as pd
 import pytest
 
 from terrier_spark.config import IndexConfig, QueryConfig
@@ -18,7 +18,7 @@ from terrier_spark.index.corpus import synth_source_corpus
 from terrier_spark.index.resumable import compact_postings
 from terrier_spark.index.store import IndexStore
 from terrier_spark.oracle import OracleFieldIndex, OracleIndex
-from terrier_spark.query.search import search
+from terrier_spark.query.search import LocalResult, search
 from terrier_spark.streaming.incremental import IncrementalIndexer
 
 search_module = importlib.import_module("terrier_spark.query.search")
@@ -183,33 +183,14 @@ def test_paths_empty_result(spark, plain, monkeypatch):
             assert got.empty
 
 
-_groups = itertools.count()
-
-
-def jobs_of(spark, action) -> tuple[int, int]:
-    """(jobs, tasks) `action()` runs, read from StatusTracker under a job
-    group of its own."""
-    sc = spark.sparkContext
-    group = f"test-search-paths-{next(_groups)}"
-    sc.setJobGroup(group, "search paths", False)
-    try:
-        action()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
-    return len(jobs), tasks
-
-
-def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
-    """A single query on the driver path costs one Spark job of one task,
-    the caller's toPandas; the Spark path runs at least three (the stats
-    broadcast, the block shuffle's map stage and the kernel stage).
-    stats_out adds a count() job on the Spark path only, both paths
-    count the same groups seen and decoded, and it names the path."""
+def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch,
+                                             jobs_of, py4j_commands):
+    """A warm single query on the driver path runs no Spark job and sends
+    no py4j command, its caller's toPandas included; the Spark path runs
+    at least three jobs (the stats broadcast, the block shuffle's map
+    stage and the kernel stage).  stats_out adds a count() job on the
+    Spark path only, both paths count the same groups seen and decoded,
+    and it names the path."""
     store, _ = plain
     query = [("q", "sym1 sym2 if")]
     qcfg = QueryConfig(k=1, ignore_low_idf=False)
@@ -218,13 +199,15 @@ def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
     for bound in (SPARK_PATH, DRIVER_PATH):
         monkeypatch.setattr(search_module, "_RUN_POSTINGS", bound)
         plain_jobs = jobs_of(
-            spark, lambda: search(spark, store, query, qcfg).toPandas())
+            lambda: search(spark, store, query, qcfg).toPandas())
         stats: dict = {}
         stats_jobs, _ = jobs_of(
-            spark, lambda: search(spark, store, query, qcfg,
-                                  stats_out=stats).toPandas())
+            lambda: search(spark, store, query, qcfg,
+                           stats_out=stats).toPandas())
         counters[bound] = (plain_jobs, stats_jobs, stats)
-    assert counters[DRIVER_PATH][:2] == ((1, 1), 1)
+    assert counters[DRIVER_PATH][:2] == ((0, 0), 0)
+    assert py4j_commands(
+        lambda: search(spark, store, query, qcfg).toPandas()) == 0
     (spark_jobs, _), spark_stats_jobs, _ = counters[SPARK_PATH]
     assert 3 <= spark_jobs < spark_stats_jobs
     driver_stats, spark_stats = counters[DRIVER_PATH][2], counters[SPARK_PATH][2]
@@ -232,6 +215,59 @@ def test_single_query_jobs_and_skip_counters(spark, plain, monkeypatch):
         "driver", "spark")
     assert driver_stats == spark_stats
     assert driver_stats["surviving_buckets"] > 0
+
+
+def test_driver_result_equals_spark_frame(spark, plain, monkeypatch):
+    """The driver path's LocalResult answers toPandas(), toArrow(),
+    collect(), count() and schema from its pyarrow Table, and each
+    equals the same table loaded through Spark, dtypes included; so do
+    the methods it hands to that Spark frame (orderBy, filter, join) and
+    with_meta.  Empty results, with and without meta, are LocalResults
+    too.  The pyspark-internal attributes the subclass sets must be
+    every attribute a classic DataFrame carries."""
+    store, _ = plain
+    monkeypatch.setattr(search_module, "_RUN_POSTINGS", DRIVER_PATH)
+    qcfg = QueryConfig(k=5, ignore_low_idf=False)
+    local = search(spark, store, QUERIES, qcfg)
+    assert isinstance(local, LocalResult)
+    loaded = spark.createDataFrame(local.toArrow(), local.schema)
+    assert local.schema == loaded.schema
+    assert local.columns == loaded.columns
+    pd.testing.assert_frame_equal(local.toPandas(), loaded.toPandas(),
+                                  check_dtype=True)
+    assert local.toArrow().equals(loaded.toArrow())
+    assert local.collect() == loaded.collect()
+    assert ([r.asDict() for r in local.collect()]
+            == [r.asDict() for r in loaded.collect()])
+    assert local.count() == loaded.count() == 20
+
+    def ordered(df):
+        return df.orderBy("qid", "rank").toPandas()
+
+    pd.testing.assert_frame_equal(ordered(local), ordered(loaded))
+    assert local.filter("rank < 2").count() == 8
+    meta = store.meta(spark).select("docid", "docno")
+    pd.testing.assert_frame_equal(ordered(local.join(meta, "docid")),
+                                  ordered(loaded.join(meta, "docid")))
+    cols = ["qid", "rank", "docid", "docno", "sha256", "score"]
+    pd.testing.assert_frame_equal(
+        ordered(search(spark, store, QUERIES, qcfg, with_meta=True)),
+        ordered(loaded.join(store.meta(spark), "docid").select(*cols)))
+
+    classic = spark.range(1)
+    assert {"_jdf", "_session", "_sc"} <= set(vars(classic))
+    assert set(vars(classic)) <= set(vars(local))
+    assert local._session is spark and local._sc is spark.sparkContext
+
+    for with_meta in (False, True):
+        empty = search(spark, store, [("e", "zzqqoovvx")], qcfg,
+                       with_meta=with_meta)
+        assert isinstance(empty, LocalResult)
+        assert empty.columns == (cols if with_meta else
+                                 ["qid", "rank", "docid", "score"])
+        loaded = spark.createDataFrame(empty.toArrow(), empty.schema)
+        pd.testing.assert_frame_equal(empty.toPandas(), loaded.toPandas())
+        assert empty.collect() == [] and empty.count() == 0
 
 
 def test_driver_budget_sends_small_search_to_spark(spark, plain,
