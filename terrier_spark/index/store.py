@@ -83,16 +83,20 @@ def data_files(directory: str) -> list[str]:
             if not f.startswith(("_", "."))]
 
 
-def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
-    """One table of every committed segment, read by explicit path (a
-    directory glob would also match staging directories)."""
+def segment_files(path: str, table: str) -> list[str]:
+    """The file of one table in every committed segment, by explicit path
+    (a directory glob would also match staging directories)."""
     seg_root = os.path.join(path, "segments")
-    paths = [os.path.join(seg_root, d, f"{table}.parquet")
-             for d in committed_segments(path)]
+    return [os.path.join(seg_root, d, f"{table}.parquet")
+            for d in committed_segments(path)]
+
+
+def read_segments(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """One table of every committed segment (segment_files)."""
     # no committed segment: Spark raises PATH_NOT_FOUND on a path that
     # does not exist, as it did on a glob that matched nothing
-    return spark.read.parquet(
-        *(paths or [os.path.join(seg_root, f"{table}.parquet")]))
+    return spark.read.parquet(*(segment_files(path, table) or [
+        os.path.join(path, "segments", f"{table}.parquet")]))
 
 
 class PostingDirectory:
@@ -134,10 +138,11 @@ class IndexStore:
     # Lexicons up to this many terms are read once, with pyarrow, and
     # looked up on the driver; larger ones are scanned per lookup.
     LEXICON_CACHE_MAX_TERMS = 200_000
-    # Posting files up to this many bytes on disk are held on the driver
-    # (PostingDirectory) to answer small searches.  Resident they take
-    # about 2.3x their size on disk (11.77 MB for the 5.05 MB of the
-    # perfbench fixture), so about 150 MB at this budget.
+    # Posting and meta files up to this many bytes on disk in total are
+    # held on the driver (PostingDirectory, driver_meta) to answer small
+    # searches.  Resident the postings take about 2.3x their size on
+    # disk (11.77 MB for the 5.05 MB of the perfbench fixture), so about
+    # 150 MB at this budget.
     DRIVER_POSTINGS_MAX_BYTES = 64 << 20
 
     def __init__(self, path: str):
@@ -170,7 +175,9 @@ class IndexStore:
         # and its posting files in memory for the same reason)
         self._lexicon_cols = None
         self._lexicon_pdf = None
-        self._directory = None  # a PostingDirectory, or False: too large
+        self._driver_ok = None  # whether the files fit the driver budget
+        self._directory = None
+        self._driver_meta = None
         self._postings_df = None
         self._postings_app = None
 
@@ -271,17 +278,35 @@ class IndexStore:
         """The `columns` of the block rows of `terms` as a pyarrow Table,
         term by term in term order, each term's rows in posting_files()
         order, from the driver-resident PostingDirectory built on the
-        first call; None when the live posting files hold more than
-        DRIVER_POSTINGS_MAX_BYTES on disk."""
-        self.refresh()
-        if self._directory is None:
-            files = self.posting_files()
-            fits = (sum(map(os.path.getsize, files))
-                    <= self.DRIVER_POSTINGS_MAX_BYTES)
-            self._directory = fits and PostingDirectory(files)
-        if not self._directory:
+        first call; None when the live posting files and the meta files
+        hold more than DRIVER_POSTINGS_MAX_BYTES on disk."""
+        if not self._driver_fits():
             return None
+        if self._directory is None:
+            self._directory = PostingDirectory(self.posting_files())
         return self._directory.take(terms, columns)
+
+    def driver_meta(self):
+        """(docid, docno, sha256) of every document as a pyarrow Table,
+        read on the first call and held beside the posting directory,
+        under the same budget; None when the files are over it."""
+        if not self._driver_fits():
+            return None
+        if self._driver_meta is None:
+            self._driver_meta = ds.dataset(
+                segment_files(self.path, "meta"), format="parquet",
+            ).to_table(columns=["docid", "docno", "sha256"])
+        return self._driver_meta
+
+    def _driver_fits(self) -> bool:
+        """Whether the live posting files and the meta files hold at most
+        DRIVER_POSTINGS_MAX_BYTES on disk; checked once per load."""
+        self.refresh()
+        if self._driver_ok is None:
+            files = self.posting_files() + segment_files(self.path, "meta")
+            self._driver_ok = (sum(map(os.path.getsize, files))
+                               <= self.DRIVER_POSTINGS_MAX_BYTES)
+        return self._driver_ok
 
     def postings(self, spark: SparkSession) -> DataFrame:
         # Memoized per session and load: building the reader costs ~90ms

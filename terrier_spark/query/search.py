@@ -20,26 +20,34 @@ by (qid, bucket):
            and dropped                      [Full.java:137-148; pinned —
          reference ties are unstable, daat/CandidateResult.java:52-62]
 
-Two paths feed that one kernel.  A search runs on the driver when Σ nt
-over its (qid, term) rows, the postings it decodes at most, fits in one
-kernel run (_RUN_POSTINGS) and the store's posting files fit the driver
-budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark:
+Two paths feed that one kernel, chosen per search by two sizes it can
+observe before any block is read.  A search runs on the driver when Σ nt
+over its (qid, term) rows, the postings it decodes at most, is at most
+_DRIVER_POSTINGS and the store's posting and meta files fit the driver
+budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark.  The
+gate comes from a sweep of both paths (SCALE.md): below it a Spark job's
+fixed cost and Arrow shipping outweigh the cores it adds, so the fork's
+900-query batch, 2.2 M postings on the perfbench fixture, runs on the
+driver as a single query does.  stats_out records the path and the
+Σ nt the gate compared.
 
   * driver — its block rows are taken from the store's driver-resident
     posting directory (IndexStore.driver_blocks: the live block rows,
     read once with pyarrow and sorted by term, with a term -> row-range
     directory, rebuilt when the index on disk changes), joined and
     sorted in pandas, and the kernel runs in process, as the reference
-    runs one query's DAAT walk on one thread.  The result is a
-    LocalResult: a DataFrame that holds the rows as a pyarrow Table, so
-    the caller's toPandas()/toArrow()/collect() run no Spark job and
-    send no py4j command;
+    runs one query's DAAT walk on one thread, fed slices of
+    _DRIVER_SLICE_ROWS block rows as a Spark task is fed Arrow batches.
+    The result is a LocalResult: a DataFrame that holds the rows as a
+    pyarrow Table, so the caller's toPandas()/toArrow()/collect() run no
+    Spark job and send no py4j command; with_meta joins the documents'
+    docno and sha256 from the store's driver-resident meta
+    (IndexStore.driver_meta), also without a job;
   * Spark — one declarative plan Catalyst owns: term-pruned parquet scan
     (IndexStore.postings_for) -> broadcast join of the stats ->
     repartition(qid), sorted by (qid, bucket), so one query's blocks
     meet in one partition -> mapInPandas(kernel).  All queries of a
-    batch run as ONE Spark job (the fork's 900-query benchmark loop
-    becomes a single plan over a qid dimension).
+    search run as ONE Spark job, their decode spread over the cores.
 """
 
 from __future__ import annotations
@@ -81,6 +89,16 @@ _THETA_EPS = 1e-9
 # (index/maxscore.py).  On the perfbench batch, budgets of 2^14, 2^16
 # and 2^30 postings timed the same.
 _RUN_POSTINGS = 1 << 16
+
+# A search whose Σ nt is at most this many postings runs on the driver
+# (see the module docstring).  Set from a sweep of both paths on the
+# perfbench fixture (SCALE.md, "Driver/Spark crossover").
+_DRIVER_POSTINGS = 1 << 23
+
+# Block rows per kernel input frame on the driver path: the Spark path's
+# Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch's
+# default), so the kernel holds as few pools on either path
+_DRIVER_SLICE_ROWS = 10_000
 
 # the rows of a search result, without and with its documents' metadata
 _RESULT_SCHEMA = pa.schema([("qid", pa.string()), ("rank", pa.int32()),
@@ -339,6 +357,35 @@ def _group_starts(pdf: pd.DataFrame) -> np.ndarray:
     return np.flatnonzero(new)
 
 
+def _doc_sums(ids: np.ndarray, scores: np.ndarray, at: np.ndarray):
+    """Per-doc score sums of consecutive groups of postings, group i being
+    ids[at[i]:at[i + 1]] -> (docids, sums, bounds): group i's distinct
+    docids, ascending, and their sums are docids[bounds[i]:bounds[i + 1]]
+    and sums[bounds[i]:bounds[i + 1]].
+
+    One unique over a (group, docid - the group's smallest docid) key
+    and one bincount serve every group.  bincount adds each key's
+    contributions in input order, as one bincount per group does, so
+    the sums are bit-identical to a per-group aggregation."""
+    sizes = np.diff(at)
+    group = np.repeat(np.arange(sizes.size), sizes)
+    lo = np.zeros(sizes.size, dtype=np.int64)
+    full = np.flatnonzero(sizes)
+    if full.size:
+        lo[full] = np.minimum.reduceat(ids, at[full])
+    offset = ids - lo[group]
+    span = int(offset.max()) + 1 if offset.size else 1
+    # a group's docids share one bucket, so span <= bucket_span in an
+    # index; keys stay below groups x span
+    if sizes.size * span > np.iinfo(np.int64).max:
+        raise OverflowError(f"{sizes.size} groups of docid span {span}")
+    keys, inv = np.unique(group * span + offset, return_inverse=True)
+    sums = np.bincount(inv, weights=scores, minlength=keys.size)
+    key_group = keys // span
+    docids = keys - key_group * span + lo[key_group]
+    return docids, sums, np.searchsorted(key_group, np.arange(sizes.size + 1))
+
+
 def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                    k: int, bounds, counters, qid_labels):
     """The search kernel: frames of block rows sorted by (qid, bucket)
@@ -354,7 +401,7 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
 
     Its input holds every block of each of its queries: a Spark
     partition of blocks hash-partitioned by qid, or on the driver path
-    one frame of all the search's blocks.  The bucket invariant (bucket labels
+    all the search's blocks in slices.  The bucket invariant (bucket labels
     partition docids identically across every term) puts all of a doc's
     postings for one query in one (qid, bucket) group, so a group's
     per-doc sums are FINAL document scores.  A group's upper bound is,
@@ -369,9 +416,10 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
     `_RUN_POSTINGS` postings: a run's groups already skippable against
     the thresholds at its start are dropped (a threshold only rises),
     the rest are decoded in one decode_blocks call and scored
-    in one model-kernel call.  Then the groups are walked in order, each
-    re-checked against its qid's live threshold — a group skipped there
-    is not merged — and merged into the qid's running top k."""
+    in one model-kernel call, and their per-doc sums are taken in one
+    pass over the run (_doc_sums).  Then the groups are walked in order,
+    each re-checked against its qid's live threshold — a group skipped
+    there is not merged — and merged into the qid's running top k."""
     kernel = spec.kernel
     needs_fields = spec.needs_fields
     budget = max(_RUN_POSTINGS, 1)
@@ -460,25 +508,27 @@ def _search_kernel(spec, N: int, avgdl: float, T: int, field_params,
                 # bound never skips.
                 keep = ~np.isnan(scores)
                 ids, scores = ids[keep], scores[keep]
-                # postings of the decoded rows before each row, after the drop
+                # postings of the decoded rows before each row, after the
+                # drop; group g's postings are ids[at[g - g0]:at[g - g0 + 1]]
                 row_at = np.concatenate(([0], np.cumsum(keep)))[
                     np.concatenate(([0], np.cumsum(n)))]
                 rows_before = np.concatenate(([0], np.cumsum(row_live)))
+                at = row_at[rows_before[np.append(starts[g0:g1], ends[g1 - 1])
+                                        - row0]]
+                doc_ids, doc_sums, doc_at = _doc_sums(ids, scores, at)
                 for g in range(g0, g1):
-                    s, e = starts[g], ends[g]
-                    pool = pool_of(int(qids[s]))
+                    pool = pool_of(int(qids[starts[g]]))
                     seen += 1
                     theta = pool.theta - _THETA_EPS
                     if group_ub is not None and group_ub[g] < theta:
                         continue
                     decoded += 1
-                    a = row_at[rows_before[s - row0]]
-                    b = row_at[rows_before[e - row0]]
-                    g_ids, g_scores = ids[a:b], scores[a:b]
-                    if e - s > 1:
-                        g_ids, inv = np.unique(g_ids, return_inverse=True)
-                        g_scores = np.bincount(inv, weights=g_scores)
-                    pool.add(g_ids, g_scores)
+                    i = g - g0
+                    if ends[g] - starts[g] > 1:
+                        a, b = doc_at[i], doc_at[i + 1]
+                        pool.add(doc_ids[a:b], doc_sums[a:b])
+                    else:  # one block: its docids are distinct already
+                        pool.add(ids[at[i]:at[i + 1]], scores[at[i]:at[i + 1]])
 
         def finish(open_q=None) -> Optional[pd.DataFrame]:
             """Rank and drop every pool but open_q's -> their rows."""
@@ -579,7 +629,8 @@ def search_terms(
     (Manager.runMatching keyFrequency semantics).
 
     `stats_out`, when given, receives the path the search ran on
-    (`path`: "driver" or "spark") and the block-max skip counters:
+    (`path`: "driver" or "spark"), the Σ nt its gate compared
+    (`postings`) and the block-max skip counters:
     `candidate_buckets` ((qid, bucket) groups the kernel saw),
     `surviving_buckets` (the groups it decoded) and `pruned_fraction`.
     On the Spark path, filling it runs the search once more, as a
@@ -646,16 +697,21 @@ def search_terms(
                             bounds, counters, qid_labels)
     schema = "qid string, rank int, docid long, score double"
     # Σ nt over the (qid, term) rows counts every posting the kernel can
-    # decode.  When they fit in one kernel run, a Spark job costs more
-    # than the search: run the same kernel on the driver, unless the
-    # store's postings are too large to hold there (frame None).
+    # decode.  Up to _DRIVER_POSTINGS a Spark job costs more than the
+    # search: run the same kernel on the driver, unless the store's
+    # postings are too large to hold there (frame None).
+    postings = int(qstats["nt"].sum())
     frame = None
-    if qstats["nt"].sum() <= _RUN_POSTINGS:
+    if postings <= _DRIVER_POSTINGS:
         frame = _driver_blocks(store, qstats, [*sel_cols, "bucket",
                                                *bound_cols], ms_idx)
     on_driver = frame is not None
     if on_driver:
-        out = LocalResult.from_frames(spark, list(kernel([frame])))
+        # in slices, as Spark hands it Arrow batches: the kernel emits
+        # and drops each query's pool once its blocks have passed
+        slices = (frame.iloc[a:a + _DRIVER_SLICE_ROWS].reset_index(drop=True)
+                  for a in range(0, len(frame), _DRIVER_SLICE_ROWS))
+        out = LocalResult.from_frames(spark, list(kernel(slices)))
     else:
         blocks = store.postings_for(spark, qstats["term"])
         qs_df = spark.createDataFrame(qstats)
@@ -684,8 +740,12 @@ def search_terms(
         if not on_driver:
             out.count()
         stats_out["path"] = "driver" if on_driver else "spark"
+        stats_out["postings"] = postings
         _record_skips(stats_out, counters[0].value, counters[1].value)
-    if with_meta:
+    if with_meta and on_driver:
+        out = LocalResult(spark, _join_meta(out.toArrow(),
+                                            store.driver_meta()))
+    elif with_meta:
         meta = store.meta(spark).select("docid", "docno", "sha256")
         out = out.join(meta, "docid").select(
             "qid", "rank", "docid", "docno", "sha256", "score"
@@ -713,6 +773,19 @@ def _driver_blocks(store: IndexStore, qstats: pd.DataFrame, cols,
             pc.list_element(table["max_score"], ms_idx - 1))
     return table.to_pandas().merge(qstats, on="term").sort_values(
         ["qid", "bucket"], kind="stable", ignore_index=True)
+
+
+def _join_meta(table: pa.Table, meta: pa.Table) -> pa.Table:
+    """Result rows joined with their documents' (docid, docno, sha256)
+    `meta` rows, in the result's order; a row whose docid has no meta
+    row drops out, as in an inner join."""
+    at = pc.index_in(table["docid"], value_set=meta["docid"])
+    found = pc.is_valid(at)
+    docs = meta.take(at.filter(found))
+    table = table.filter(found)
+    return pa.Table.from_arrays(
+        [table["qid"], table["rank"], table["docid"], docs["docno"],
+         docs["sha256"], table["score"]], schema=_META_RESULT_SCHEMA)
 
 
 def _record_skips(stats_out: dict, seen: int, decoded: int) -> None:

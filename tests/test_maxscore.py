@@ -334,7 +334,9 @@ def test_small_runs_equal_unpruned(spark, compacted):
     module = sys.modules[search.__module__]
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved_budget, saved_rows = module._RUN_POSTINGS, spark.conf.get(key)
+    saved_gate = module._DRIVER_POSTINGS
     module._RUN_POSTINGS = 3
+    module._DRIVER_POSTINGS = 0
     spark.conf.set(key, "2")
     try:
         runs: dict = {}
@@ -344,6 +346,7 @@ def test_small_runs_equal_unpruned(spark, compacted):
         )
     finally:
         module._RUN_POSTINGS = saved_budget
+        module._DRIVER_POSTINGS = saved_gate
         spark.conf.set(key, saved_rows)
     b = (
         search(spark, store, queries, QueryConfig(model="BB2", k=1,
@@ -356,7 +359,7 @@ def test_small_runs_equal_unpruned(spark, compacted):
     for x, y in zip(a["score"], b["score"]):
         assert x == pytest.approx(y, abs=1e-9)
     assert whole["pruned_fraction"] > 0, whole
-    # a 3-posting run budget also sends the search to the Spark path
+    # the zero driver gate sends the small-run search to the Spark path
     assert (whole.pop("path"), runs.pop("path")) == ("driver", "spark")
     assert runs == whole
 

@@ -4,6 +4,9 @@ pure-Python oracle; pruned == unpruned; low-idf drop; tie-break pinning
 
 import random
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -288,13 +291,14 @@ def test_scan_pushdown_plan_shape(spark, engine, monkeypatch):
     """Scale guard: the postings scan must keep the term In-filter
     pushed to parquet and read only the columns the plan needs — a scan
     that reads all columns for the decode would be wrong at 100 TB.
-    These searches are small enough for the driver path, so a zero run
-    bound sends them through the Spark plan."""
+    These searches are small enough for the driver path, so a zero
+    driver gate sends them through the Spark plan."""
     import contextlib
     import io
     import sys
 
-    monkeypatch.setattr(sys.modules[search.__module__], "_RUN_POSTINGS", 0)
+    monkeypatch.setattr(sys.modules[search.__module__], "_DRIVER_POSTINGS",
+                        0)
     store, oracle = engine
     vocab = sorted(oracle.postings)
     res = search(spark, store, [("q", f"{vocab[0]} {vocab[1]}")],
@@ -428,3 +432,154 @@ def test_session_tuning_check(spark, caplog):
     # a new context is checked afresh, whatever id() it reuses
     FakeSpark.sparkContext = FakeSC()
     assert len(search_mod._check_session_tuning(FakeSpark())) == 2
+
+
+def _per_group_kernel(spec, N, avgdl, T, k, bounds, budget, frames):
+    """Reference for _search_kernel: the same runs, decodes and model
+    calls, with each multi-row group's per-doc sums taken by its own
+    unique + bincount -> (rows sorted by qid code and rank, seen,
+    decoded)."""
+    from terrier_spark.index.builder import decode_blocks
+    from terrier_spark.query.search import _THETA_EPS, _TopK, _group_starts
+
+    pools, counts = {}, [0, 0]
+
+    def score(frame, starts):
+        if starts.size == 0:
+            return
+        ends = np.append(starts[1:], len(frame))
+        group_ub = None
+        if bounds is not None:
+            ub = np.asarray(bounds(frame), dtype=np.float64)
+            ub[np.isnan(ub)] = np.inf
+            gid = np.repeat(np.arange(starts.size), ends - starts)
+            group_ub = (pd.Series(ub).groupby([gid, frame["term"].to_numpy()])
+                        .max().groupby(level=0).sum().to_numpy())
+        qids = frame["qid"].to_numpy()
+        qtf, nt, tfc = (frame[c].to_numpy() for c in ("qtf", "nt", "tfc"))
+        blocks = frame["block"].to_numpy()
+        sizes = np.add.reduceat(frame["n"].to_numpy(np.int64), starts)
+        window = (np.cumsum(sizes) - sizes) // max(budget, 1)
+        run_starts = np.flatnonzero(np.diff(window, prepend=-1))
+        for g0, g1 in zip(run_starts, np.append(run_starts[1:], starts.size)):
+            row0 = starts[g0]
+            live = np.ones(g1 - g0, dtype=bool)
+            if group_ub is not None:
+                theta = np.array([pools.setdefault(int(q), _TopK(k)).theta
+                                  for q in qids[starts[g0:g1]]])
+                live = ~(group_ub[g0:g1] < theta - _THETA_EPS)
+            row_live = np.repeat(live, ends[g0:g1] - starts[g0:g1])
+            rows = row0 + np.flatnonzero(row_live)
+            ids, tfs, dls, n, *_ = decode_blocks({"block": blocks[rows]})
+            scores = spec.kernel(tfs, dls, np.repeat(qtf[rows], n),
+                                 np.repeat(nt[rows], n),
+                                 np.repeat(tfc[rows], n), N, avgdl, T)
+            keep = ~np.isnan(scores)
+            ids, scores = ids[keep], scores[keep]
+            row_at = np.concatenate(([0], np.cumsum(keep)))[
+                np.concatenate(([0], np.cumsum(n)))]
+            rows_before = np.concatenate(([0], np.cumsum(row_live)))
+            for g in range(g0, g1):
+                s, e = starts[g], ends[g]
+                pool = pools.setdefault(int(qids[s]), _TopK(k))
+                counts[0] += 1
+                if group_ub is not None and (group_ub[g]
+                                             < pool.theta - _THETA_EPS):
+                    continue
+                counts[1] += 1
+                a = row_at[rows_before[s - row0]]
+                b = row_at[rows_before[e - row0]]
+                g_ids, g_scores = ids[a:b], scores[a:b]
+                if e - s > 1:
+                    g_ids, inv = np.unique(g_ids, return_inverse=True)
+                    g_scores = np.bincount(inv, weights=g_scores)
+                pool.add(g_ids, g_scores)
+
+    pending = None
+    for pdf in frames:
+        if pending is not None:
+            pdf = pd.concat([pending, pdf], ignore_index=True)
+        starts = _group_starts(pdf)
+        pending = pdf.iloc[starts[-1]:]
+        score(pdf.iloc[: starts[-1]], starts[:-1])
+    score(pending, _group_starts(pending))
+    rows = []
+    for q in sorted(pools):
+        ids, scores = pools[q].best()
+        order = np.lexsort((ids, -scores))
+        rows += [(q, r, d, s) for r, (d, s) in
+                 enumerate(zip(ids[order], scores[order]))]
+    return rows, counts[0], counts[1]
+
+
+@settings(max_examples=60, deadline=None, derandomize=True)
+@given(
+    n_queries=st.integers(1, 6), budget=st.sampled_from([3, 17, 200, 1 << 16]),
+    slice_rows=st.integers(2, 40), top=st.integers(45, 51),
+    model=st.sampled_from(["BM25", "BB2"]), prune=st.booleans(),
+    k=st.integers(1, 20), seed=st.integers(0, 2**32 - 1),
+)
+def test_kernel_equals_per_group_aggregation(n_queries, budget, slice_rows,
+                                              top, model, prune, k, seed):
+    """The kernel's run-wide per-doc sums (one unique + bincount per run)
+    equal a per-group aggregation bit for bit, with the same groups seen
+    and decoded: run budgets from 3 postings, Arrow slices from 2 rows,
+    docids between 2^45 and 2^51, terms sharing docs, BB2's NaN
+    contributions dropped, prune on and off.  (Summing a doc's
+    contributions in another order fails it.)"""
+    import importlib
+
+    module = importlib.import_module("terrier_spark.query.search")
+    rng = np.random.default_rng(seed)
+    spec = get_model(model)
+    terms = []
+    # the terms share docids, so most docs sum several contributions
+    base = (1 << top) - 256
+    span = int(rng.choice([16, 64, 1 << 47]))
+    for t in range(4):
+        ids = base + np.unique(rng.integers(0, 200, rng.integers(1, 120)))
+        tfs = rng.integers(1, 6, ids.size)
+        blocks = pd.DataFrame(
+            encode_blocks(f"t{t}", ids, tfs, rng.integers(2, 90, ids.size),
+                          int(rng.integers(1, 6)), span),
+            columns=BLOCK_COLUMNS)
+        # a small collection frequency makes BB2 NaN on short docs
+        terms.append(blocks[["term", "bucket", "n", "block"]].assign(
+            nt=ids.size, tfc=int(rng.integers(1, 3 * tfs.sum() + 1)),
+            ub=rng.uniform(0, 30, len(blocks))))
+    rows = pd.concat([
+        terms[t].assign(qid=np.int32(q), qtf=float(rng.integers(1, 3)))
+        for q in range(n_queries)
+        for t in rng.choice(4, size=rng.integers(1, 5), replace=False)
+    ]).sort_values(["qid", "bucket"], kind="stable", ignore_index=True)
+    bounds = (lambda pdf: pdf["ub"].to_numpy()) if prune else None
+    N, avgdl, T = 1 << 20, 40.0, 40 << 20
+
+    def frames():
+        return [rows.iloc[a:a + slice_rows].reset_index(drop=True)
+                for a in range(0, len(rows), slice_rows)]
+
+    class Counter:
+        value = 0
+
+        def add(self, v):
+            self.value += v
+
+    counters = (Counter(), Counter())
+    saved = module._RUN_POSTINGS
+    module._RUN_POSTINGS = budget
+    try:
+        kernel = _search_kernel(spec, N, avgdl, T, None, k, bounds,
+                                counters, list(range(n_queries)))
+        got = pd.concat(list(kernel(frames())), ignore_index=True)
+    finally:
+        module._RUN_POSTINGS = saved
+    want, seen, decoded = _per_group_kernel(spec, N, avgdl, T, k, bounds,
+                                            budget, frames())
+    got = got.sort_values(["qid", "rank"], ignore_index=True)
+    assert list(got["qid"]) == [q for q, *_ in want]
+    assert list(got["rank"]) == [r for _, r, *_ in want]
+    assert list(got["docid"]) == [d for _, _, d, _ in want]
+    assert (got["score"].to_numpy().view(np.int64).tolist()
+            == np.array([s for *_, s in want]).view(np.int64).tolist())
+    assert (counters[0].value, counters[1].value) == (seen, decoded)
