@@ -1,6 +1,7 @@
-"""Driver/Spark crossover of the two search paths (query/search.py).
+"""Driver/Spark sweep of the two search paths (query/search.py).
 
     python3 crossover_bench.py [--reps 5] [--k 10 1000]
+    python3 crossover_bench.py --peak driver --k 10 --copies 7
 
 Runs from the root of a checkout, on perfbench's query fixture (the 16k-doc
 topical index and its 1,800-query pool, built or reused under
@@ -9,8 +10,13 @@ queries per length 2..10, then the whole pool two and three times under
 fresh qids) it times a warm `search(...).toPandas()` forced onto each path
 through the gate constant `_DRIVER_POSTINGS`, alternating the paths, and
 prints per set Σ nt (the postings the gate compares) and each path's median
-time.  The rows of both paths are checked equal.  The gate is set where the
-driver path stops being the faster one.
+time.  The rows of both paths are checked equal.
+
+`--peak PATH` instead runs one search, the pool repeated `--copies` times
+at the first `--k`, on that path after a warm-up, and prints how far its
+peak resident memory (VmHWM) rose above the process's resident memory
+when it began.  The peak never falls, so each such measurement needs a
+process of its own.
 """
 
 from __future__ import annotations
@@ -50,6 +56,8 @@ def main(argv=None) -> int:
                    help="also time the whole pool this many times over")
     p.add_argument("--only-copies", action="store_true",
                    help="time the pool copies alone")
+    p.add_argument("--peak", choices=["driver", "spark"],
+                   help="measure one search's peak memory on this path")
     args = p.parse_args(argv)
     perfbench.prepare_environment(False, "crossover")
     sys.path.insert(0, ROOT)
@@ -70,6 +78,13 @@ def main(argv=None) -> int:
     gates = {"spark": 0, "driver": 1 << 62}
     saved = sq._DRIVER_POSTINGS
     rows = []
+    if args.peak:
+        try:
+            row = peak(sq, spark, store, fixture.queries, args, gates)
+        finally:
+            spark.stop()
+        print(json.dumps(row))
+        return 0
     try:
         for k in args.k:
             qcfg = QueryConfig(k=k)
@@ -110,6 +125,41 @@ def main(argv=None) -> int:
               f"{r['spark_s']:.2f} s | {r['driver_s']:.2f} s |")
     print(json.dumps(rows))
     return 0
+
+
+def memory_kb() -> dict:
+    """The process's resident memory now (VmRSS) and at its peak (VmHWM)."""
+    with open("/proc/self/status") as fh:
+        return {key: int(rest.split()[0]) for key, rest in
+                (line.split(":", 1) for line in fh)
+                if key in ("VmRSS", "VmHWM")}
+
+
+def peak(sq, spark, store, pool: list, args, gates) -> dict:
+    """How far one search of the pool repeated args.copies[0] times on
+    path args.peak raised the resident memory at its peak, above what the
+    process held when it began; None when the peak stayed below an
+    earlier one (then rerun: the warm-up set the high-water mark)."""
+    from terrier_spark.config import QueryConfig
+
+    qcfg = QueryConfig(k=args.k[0])
+    sq._DRIVER_POSTINGS = gates[args.peak]
+    for _ in range(2):  # warm the JVM, the lexicon and the directory
+        sq.search(spark, store, pool[:18], qcfg).toPandas()
+    copies = args.copies[0]
+    queries = [(f"{c}-{qid}", text) for c in range(copies)
+               for qid, text in pool]
+    before = memory_kb()
+    stats: dict = {}
+    sq.search(spark, store, queries, qcfg, stats_out=stats).toPandas()
+    after = memory_kb()
+    assert stats["path"] == args.peak, stats
+    raised = after["VmHWM"] > before["VmHWM"]
+    return {"k": qcfg.k, "queries": len(queries),
+            "postings": stats["postings"], "path": args.peak,
+            "rss_mb": round(before["VmRSS"] / 1024, 1),
+            "peak_raise_mb": (round((after["VmHWM"] - before["VmRSS"])
+                                    / 1024, 1) if raised else None)}
 
 
 if __name__ == "__main__":

@@ -138,11 +138,13 @@ class IndexStore:
     # Lexicons up to this many terms are read once, with pyarrow, and
     # looked up on the driver; larger ones are scanned per lookup.
     LEXICON_CACHE_MAX_TERMS = 200_000
-    # Posting and meta files up to this many bytes on disk in total are
-    # held on the driver (PostingDirectory, driver_meta) to answer small
-    # searches.  Resident the postings take about 2.3x their size on
+    # Posting files up to this many bytes on disk are held on the driver
+    # (PostingDirectory) to answer small searches, and the documents'
+    # meta (driver_meta, for with_meta) when posting and meta files
+    # together fit.  Resident the postings take about 2.3x their size on
     # disk (11.77 MB for the 5.05 MB of the perfbench fixture), so about
-    # 150 MB at this budget.
+    # 150 MB at this budget; the meta about its size on disk (1.44 MB,
+    # 88 B per document, for 1.51 MB).
     DRIVER_POSTINGS_MAX_BYTES = 64 << 20
 
     def __init__(self, path: str):
@@ -175,9 +177,8 @@ class IndexStore:
         # and its posting files in memory for the same reason)
         self._lexicon_cols = None
         self._lexicon_pdf = None
-        self._driver_ok = None  # whether the files fit the driver budget
-        self._directory = None
-        self._driver_meta = None
+        self._directory = None  # a PostingDirectory, or False: too large
+        self._driver_meta = None  # a pyarrow Table, or False: too large
         self._postings_df = None
         self._postings_app = None
 
@@ -278,35 +279,32 @@ class IndexStore:
         """The `columns` of the block rows of `terms` as a pyarrow Table,
         term by term in term order, each term's rows in posting_files()
         order, from the driver-resident PostingDirectory built on the
-        first call; None when the live posting files and the meta files
-        hold more than DRIVER_POSTINGS_MAX_BYTES on disk."""
-        if not self._driver_fits():
-            return None
+        first call; None when the live posting files hold more than
+        DRIVER_POSTINGS_MAX_BYTES on disk."""
+        self.refresh()
         if self._directory is None:
-            self._directory = PostingDirectory(self.posting_files())
+            files = self.posting_files()
+            self._directory = (sum(map(os.path.getsize, files))
+                               <= self.DRIVER_POSTINGS_MAX_BYTES
+                               and PostingDirectory(files))
+        if not self._directory:
+            return None
         return self._directory.take(terms, columns)
 
     def driver_meta(self):
         """(docid, docno, sha256) of every document as a pyarrow Table,
-        read on the first call and held beside the posting directory,
-        under the same budget; None when the files are over it."""
-        if not self._driver_fits():
-            return None
-        if self._driver_meta is None:
-            self._driver_meta = ds.dataset(
-                segment_files(self.path, "meta"), format="parquet",
-            ).to_table(columns=["docid", "docno", "sha256"])
-        return self._driver_meta
-
-    def _driver_fits(self) -> bool:
-        """Whether the live posting files and the meta files hold at most
-        DRIVER_POSTINGS_MAX_BYTES on disk; checked once per load."""
+        read on the first call and held beside the posting directory;
+        None when the live posting files and the meta files together
+        hold more than DRIVER_POSTINGS_MAX_BYTES on disk."""
         self.refresh()
-        if self._driver_ok is None:
-            files = self.posting_files() + segment_files(self.path, "meta")
-            self._driver_ok = (sum(map(os.path.getsize, files))
-                               <= self.DRIVER_POSTINGS_MAX_BYTES)
-        return self._driver_ok
+        if self._driver_meta is None:
+            files = segment_files(self.path, "meta")
+            fits = (sum(map(os.path.getsize, self.posting_files() + files))
+                    <= self.DRIVER_POSTINGS_MAX_BYTES)
+            self._driver_meta = fits and ds.dataset(
+                files, format="parquet",
+            ).to_table(columns=["docid", "docno", "sha256"])
+        return None if self._driver_meta is False else self._driver_meta
 
     def postings(self, spark: SparkSession) -> DataFrame:
         # Memoized per session and load: building the reader costs ~90ms

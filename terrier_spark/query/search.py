@@ -21,15 +21,16 @@ by (qid, bucket):
          reference ties are unstable, daat/CandidateResult.java:52-62]
 
 Two paths feed that one kernel, chosen per search by two sizes it can
-observe before any block is read.  A search runs on the driver when Σ nt
-over its (qid, term) rows, the postings it decodes at most, is at most
-_DRIVER_POSTINGS and the store's posting and meta files fit the driver
-budget (IndexStore.DRIVER_POSTINGS_MAX_BYTES); otherwise on Spark.  The
-gate comes from a sweep of both paths (SCALE.md): below it a Spark job's
-fixed cost and Arrow shipping outweigh the cores it adds, so the fork's
-900-query batch, 2.2 M postings on the perfbench fixture, runs on the
-driver as a single query does.  stats_out records the path and the
-Σ nt the gate compared.
+observe before any block is read.  A search runs on the driver when the
+store's posting files fit the driver budget
+(IndexStore.DRIVER_POSTINGS_MAX_BYTES) and Σ nt over its (qid, term)
+rows, the postings it decodes at most, is at most _DRIVER_POSTINGS;
+otherwise on Spark.  In a sweep of both paths (SCALE.md) the driver was
+the faster at every size measured, up to 36.7 M postings, so the fork's
+900-query batch (2.2 M on the perfbench fixture) runs on the driver as a
+single query does.  _DRIVER_POSTINGS bounds the driver's memory, not its
+time: the driver path holds a search's block rows at once.  stats_out
+records the path and the Σ nt the gate compared.
 
   * driver — its block rows are taken from the store's driver-resident
     posting directory (IndexStore.driver_blocks: the live block rows,
@@ -42,7 +43,8 @@ driver as a single query does.  stats_out records the path and the
     pyarrow Table, so the caller's toPandas()/toArrow()/collect() run no
     Spark job and send no py4j command; with_meta joins the documents'
     docno and sha256 from the store's driver-resident meta
-    (IndexStore.driver_meta), also without a job;
+    (IndexStore.driver_meta), also without a job, or in Spark when the
+    meta does not fit the driver budget beside the postings;
   * Spark — one declarative plan Catalyst owns: term-pruned parquet scan
     (IndexStore.postings_for) -> broadcast join of the stats ->
     repartition(qid), sorted by (qid, bucket), so one query's blocks
@@ -91,9 +93,11 @@ _THETA_EPS = 1e-9
 _RUN_POSTINGS = 1 << 16
 
 # A search whose Σ nt is at most this many postings runs on the driver
-# (see the module docstring).  Set from a sweep of both paths on the
-# perfbench fixture (SCALE.md, "Driver/Spark crossover").
-_DRIVER_POSTINGS = 1 << 23
+# (see the module docstring), which then holds its block rows: on the
+# perfbench fixture its peak RSS rose about 3.5 MB per million postings,
+# 124 MB at 32.2 M (SCALE.md, "Driver/Spark sweep"), so at this cap
+# about what the posting directory takes at the driver budget (~150 MB).
+_DRIVER_POSTINGS = 1 << 25
 
 # Block rows per kernel input frame on the driver path: the Spark path's
 # Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch's
@@ -697,8 +701,8 @@ def search_terms(
                             bounds, counters, qid_labels)
     schema = "qid string, rank int, docid long, score double"
     # Σ nt over the (qid, term) rows counts every posting the kernel can
-    # decode.  Up to _DRIVER_POSTINGS a Spark job costs more than the
-    # search: run the same kernel on the driver, unless the store's
+    # decode.  Up to _DRIVER_POSTINGS the driver holds the search's block
+    # rows and runs the same kernel, with no Spark job, unless the store's
     # postings are too large to hold there (frame None).
     postings = int(qstats["nt"].sum())
     frame = None
@@ -742,9 +746,10 @@ def search_terms(
         stats_out["path"] = "driver" if on_driver else "spark"
         stats_out["postings"] = postings
         _record_skips(stats_out, counters[0].value, counters[1].value)
-    if with_meta and on_driver:
-        out = LocalResult(spark, _join_meta(out.toArrow(),
-                                            store.driver_meta()))
+    # None: the meta is over the driver budget, or off the driver path
+    meta = store.driver_meta() if with_meta and on_driver else None
+    if meta is not None:
+        out = LocalResult(spark, _join_meta(out.toArrow(), meta))
     elif with_meta:
         meta = store.meta(spark).select("docid", "docno", "sha256")
         out = out.join(meta, "docid").select(

@@ -7,6 +7,7 @@ checks that both paths return the same ranking as each other and as the
 pure-Python oracle (rank identity, scores within 1e-6)."""
 
 import importlib
+import os
 import shutil
 
 import pandas as pd
@@ -292,6 +293,30 @@ def test_driver_budget_sends_small_search_to_spark(spark, plain,
                   QUERIES)
 
 
+def test_meta_over_budget_joins_on_spark(spark, plain, monkeypatch):
+    """A store whose posting files fit the driver budget but whose posting
+    and meta files together do not answers every search on the driver;
+    with_meta then joins the meta in Spark, with the rows of the
+    driver-resident join."""
+    store, _ = plain
+    qcfg = QueryConfig(k=5, ignore_low_idf=False)
+    postings_only = IndexStore(store.path)
+    monkeypatch.setattr(postings_only, "DRIVER_POSTINGS_MAX_BYTES", sum(
+        map(os.path.getsize, store.posting_files())))
+    assert store.driver_meta() is not None
+    assert postings_only.driver_meta() is None
+    for kw in ({}, {"with_meta": True}):
+        rows = []
+        for handle in (store, postings_only):
+            stats: dict = {}
+            rows.append(run(spark, handle, QUERIES, qcfg, DRIVER_PATH,
+                            monkeypatch, stats_out=stats, **kw))
+            assert stats["path"] == "driver"
+        assert_same_rows(*rows)
+    assert list(rows[0].columns) == ["qid", "rank", "docid", "docno",
+                                     "sha256", "score"]
+
+
 def test_driver_directory_follows_appends_and_compaction(spark, pdf,
                                                          tmp_path,
                                                          monkeypatch):
@@ -317,10 +342,12 @@ def test_driver_directory_follows_appends_and_compaction(spark, pdf,
         step()
         stats: dict = {}
         driver = run(spark, store, QUERIES, qcfg, DRIVER_PATH, monkeypatch,
-                     stats_out=stats)
+                     stats_out=stats, with_meta=True)
         assert stats["path"] == "driver"
         assert_same_rows(
-            driver, run(spark, store, QUERIES, qcfg, SPARK_PATH, monkeypatch))
+            driver, run(spark, store, QUERIES, qcfg, SPARK_PATH, monkeypatch,
+                        with_meta=True))
+        assert set(driver["docno"]) <= set(pdf["docno"].iloc[:n_docs])
         oracle = OracleIndex(contents[:n_docs], pipeline)
         assert_oracle(driver, lambda text: oracle.search(text, qcfg),
                       QUERIES)
