@@ -27,12 +27,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from terrier_spark import gate, gate_datapipe
+    from terrier_spark import gate
 
-    return dict(gate.IR_QUERIES) | dict(gate_datapipe.DATAPIPE_QUERIES)
+    return gate.IR_QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
-    from terrier_spark import gate, gate_datapipe
+    from terrier_spark import gate
 
-    return dict(gate.IR_ORACLE_SQL) | dict(gate_datapipe.DATAPIPE_ORACLE_SQL)
+    return gate.IR_ORACLE_SQL

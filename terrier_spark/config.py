@@ -7,7 +7,7 @@ loading; here the same knobs are plain dataclasses (SURVEY.md §1.4).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 
@@ -129,6 +129,3 @@ class QueryConfig:
     field_weights: Optional[tuple] = None
     field_c: Optional[tuple] = None
 
-
-def with_pipeline(cfg: IndexConfig, pipeline: PipelineConfig) -> IndexConfig:
-    return replace(cfg, pipeline=pipeline)

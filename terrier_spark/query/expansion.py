@@ -161,30 +161,6 @@ def _weight_group(grp: pd.DataFrame, w_fn, norm_fn, N: int, avgdl: float,
     return grp[["qid", "term", "w_norm", "is_original"]]
 
 
-def qe_weights(feedback: pd.DataFrame, lex: pd.DataFrame, N: int,
-               avgdl: float, T: int, model: str = "Bo1") -> pd.DataFrame:
-    """feedback: rows (qid, term, tf_x, n_fb_docs_with_term, n_fb_docs,
-    total_dl); lex: (term, tfc).  -> (qid, term, w_norm) per reference
-    semantics for the chosen QE model.  (Driver-side variant of the
-    distributed per-qid kernel expand_queries runs via applyInPandas.)"""
-    w_fn, norm_fn = QE_MODELS[model]
-    fb = feedback.merge(lex, on="term")
-    out = [
-        _weight_group(grp, w_fn, norm_fn, N, avgdl, T)
-        for _, grp in fb.groupby("qid")
-    ]
-    return (
-        pd.concat(out)
-        if out
-        else pd.DataFrame(columns=["qid", "term", "w_norm", "is_original"])
-    )
-
-
-# backward-compatible alias
-def bo1_weights(feedback, lex, N, avgdl, T):
-    return qe_weights(feedback, lex, N, avgdl, T, "Bo1")
-
-
 def expand_queries(
     spark: SparkSession,
     store: IndexStore,

@@ -34,7 +34,7 @@ def duck(sf_dir):
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
+        "lineitem", "events", "documents",
     ]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "

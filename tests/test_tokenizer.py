@@ -23,6 +23,10 @@ def test_digit_rules():
     assert tokenize("x1234") == ["x1234"]     # exactly 4 -> kept
     assert tokenize("a1b2c3d4") == ["a1b2c3d4"]
     assert tokenize("a1b2c3d4e5") == []
+    two = PipelineConfig(max_digits=2)
+    assert tokenize("x1234 y12 z123", two) == ["y12"]
+    assert check_term("a1b2", two) == "a1b2"
+    assert check_term("a1b2c3", two) == ""
 
 
 def test_consecutive_identical_chars():
@@ -31,6 +35,9 @@ def test_consecutive_identical_chars():
     assert tokenize("xaaaa") == []
     assert tokenize("1111") == []
     assert tokenize("111") == ["111"]
+    five = PipelineConfig(max_conseq=5)
+    assert tokenize("aaaab aaaaab aaaaaab", five) == ["aaaab", "aaaaab"]
+    assert check_term("111111", five) == ""
 
 
 def test_conseq_check_is_case_sensitive_pre_lowercase():
